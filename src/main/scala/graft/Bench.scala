@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Driver-run benchmark: every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout (and mirrored to an
   * artifact file — BENCH_LOCAL.json for a full-suite sf0.1 isolated run,
-  * BENCH_SCALE.json / BENCH_NOISOLATE.json / BENCH_DEV.json otherwise —
+  * BENCH_SCALE.json / BENCH_DEV.json otherwise —
   * so the result survives sbt's log prefixes).
   *
   * Each query is forced with a no-op full-evaluation write (`noop` format):
@@ -25,7 +24,7 @@ object Bench {
     * a 66 s vs 55 s full-suite swing with no code change), and a number
     * without its steal reading cannot adjudicate noise vs regression.
     */
-  private def cpuStat(): Option[(Long, Long)] =
+  private[graft] def cpuStat(): Option[(Long, Long)] =
     try {
       val src = scala.io.Source.fromFile("/proc/stat")
       try {
@@ -33,6 +32,13 @@ object Bench {
         Some((f.sum, if (f.length > 7) f(7) else 0L))
       } finally src.close()
     } catch { case _: Throwable => None }
+
+  /** Steal % since `stat0` (a [[cpuStat]] sample): Δsteal/Δtotal of the
+    * aggregate cpu line, rounded to 0.01; None when /proc/stat is absent.
+    */
+  private[graft] def stealPctSince(stat0: Option[(Long, Long)]): Option[Double] =
+    for ((t0, s0) <- stat0; (t1, s1) <- cpuStat() if t1 > t0)
+      yield math.round(10000.0 * (s1 - s0) / (t1 - t0)) / 100.0
 
   /** MULTI-JVM headline mode (`SPARK_GRAFT_JVMS=N`, N > 1): the committed
     * BENCH_LOCAL.json used to be a single-JVM draw, and the round-13 JIT
@@ -54,7 +60,7 @@ object Bench {
     // surgery took the merged query set from child 1 ONLY — a query absent
     // from the first artifact silently vanished from the headline — and
     // could mis-split on any brace/comma drift (the same fragility class
-    // removed from ParagraphProbe in r14)
+    // removed in r14 from the harness behind PARAPROBE.json)
     import org.json4s._
     import org.json4s.jackson.JsonMethods
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
@@ -137,31 +143,7 @@ object Bench {
     val startedAt = java.time.Instant.now()
     val stat0 = cpuStat()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle-partition count is a DEPLOYMENT knob, not plan structure: the
-    // engine's plans are partition-count-agnostic, and production sizes
-    // partitions so a task's shuffle slice stays ~task-sized (100-200 MB).
-    // Default = cores (right for the sf0.1 headline: fixed 512 initial
-    // partitions measured +34 s of pure task overhead across 103 queries);
-    // scale-rehearsal decades MUST override — at /tmp/x1000 the multi-order
-    // span family shuffles ~60 GB, and 32 partitions means ~2 GB per
-    // sort-merge task: spill-bound superlinearity (d3 ≈ 1.25) that
-    // disappears at data-sized partition counts (SCALING.md round 12).
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    graft.util.Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // SPARK_GRAFT_NO_ISOLATE=1 restores the pre-r5 carryover mode (blocks
-    // and cached relations survive across queries) — only for A/B-ing the
-    // harness itself; the isolated mode is the honest per-query cost
-    val isolate = !sys.env.get("SPARK_GRAFT_NO_ISOLATE").contains("1")
+    val spark = graft.util.Tables.session("graft-bench")
 
     def force(name: String): Double = {
       // isolate queries from each other: eagerly-materialized pipelines
@@ -172,14 +154,12 @@ object Bench {
       // of its own cost (measured 2.4 s → 18.9 s on p_dup_clusters, full
       // suite vs isolated). Each query re-materializes inside its own
       // timed run, so dropping leftovers changes nothing semantically.
-      if (isolate) {
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-        spark.catalog.clearCache()
-        // settle the heap between queries: the iterative-fit queries collect
-        // sizeable driver arrays, and their garbage otherwise lands on
-        // whichever query runs next (measured 2.5s → 11s swings)
-        System.gc()
-      }
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      spark.catalog.clearCache()
+      // settle the heap between queries: the iterative-fit queries collect
+      // sizeable driver arrays, and their garbage otherwise lands on
+      // whichever query runs next (measured 2.5s → 11s swings)
+      System.gc()
       val t0 = System.nanoTime()
       try {
         SparkEntry.queries(name)(spark, sfDir)
@@ -238,12 +218,7 @@ object Bench {
     val nFailed = results.count(_._2 < 0)
     val endedAt = java.time.Instant.now()
     val wallSec = (endedAt.toEpochMilli - startedAt.toEpochMilli) / 1e3
-    // steal% across the whole run: Δsteal/Δtotal of the aggregate cpu line
-    val stealPct = (for ((t0, s0) <- stat0; (t1, s1) <- cpuStat()
-                         if t1 > t0)
-      yield 100.0 * (s1 - s0) / (t1 - t0).toDouble)
-      .map(p => math.round(p * 100.0) / 100.0)
-    val stealJson = stealPct.map(_.toString).getOrElse("null")
+    val stealJson = stealPctSince(stat0).map(_.toString).getOrElse("null")
     // JIT self-diagnostics (round 13): per-JVM 1.3-6x swings on
     // string-kernel queries between quiet windows traced to code-cache
     // pressure — record peak CodeHeap fill and total JIT time so any
@@ -265,7 +240,7 @@ object Bench {
     // registry counts (independent of any ONLY filter) — the single source
     // README counters are generated from (tools/update_readme.py)
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"n_failed":$nFailed,"runs_per_query":"2-3","agg":"min","isolate":$isolate,"sf":"$sfDir","steal_pct":$stealJson,"code_cache_peak_mb":$ccPeakMb,"code_cache_max_mb":$ccMaxMb,"code_heaps":$ccPools,"jit_sec":$jitSec,"wall_sec":$wallSec,"started_at":"$startedAt","ended_at":"$endedAt","n_registered":${SparkEntry.queries.size},"n_oracled":${SparkEntry.oracleSql.size}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"n_failed":$nFailed,"runs_per_query":"2-3","agg":"min","isolate":true,"sf":"$sfDir","steal_pct":$stealJson,"code_cache_peak_mb":$ccPeakMb,"code_cache_max_mb":$ccMaxMb,"code_heaps":$ccPools,"jit_sec":$jitSec,"wall_sec":$wallSec,"started_at":"$startedAt","ended_at":"$endedAt","n_registered":${SparkEntry.queries.size},"n_oracled":${SparkEntry.oracleSql.size}}"""
     println(json)
     // artifact hygiene: BENCH_LOCAL.json holds ONLY the headline number —
     // the full suite at the driver's bench scale (sf0.1), isolated mode.
@@ -273,14 +248,11 @@ object Bench {
     // each go to their own file, so no later experiment buries the
     // headline artifact (the round-5 lesson: a 5-query x10 rehearsal
     // overwrote the 71-query result and the real number survived only in
-    // git history). The !isolate check comes FIRST: a NO_ISOLATE A/B run
-    // must never overwrite a tracked honest artifact, whatever corpus it
-    // ran on. Trailing slashes are normalized so ".../sf0.1/" still routes
-    // to the headline file.
+    // git history). Trailing slashes are normalized so ".../sf0.1/" still
+    // routes to the headline file.
     val sfNorm = sfDir.stripSuffix("/")
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      if (!isolate) "BENCH_NOISOLATE.json"
-      else if (sfNorm.contains("/scale/")) "BENCH_SCALE.json"
+      if (sfNorm.contains("/scale/")) "BENCH_SCALE.json"
       else if (only.nonEmpty || !sfNorm.endsWith("sf0.1")) "BENCH_DEV.json"
       else "BENCH_LOCAL.json")
     Files.writeString(Paths.get(outFile), json + "\n")

@@ -22,7 +22,7 @@ import graft.slope._
   * cached RDD with an index mask, never a copied dataset — at 100 TB,
   * re-materializing per path step would dwarf the solve itself.
   *
-  * Feature-dimension ceiling (measured — `tools/ProxCeiling`, SCALING.md
+  * Feature-dimension ceiling (measured — PSCALE.json, SCALING.md
   * round 8): a depth-2 reduce ships ~√numPartitions partials of 8·p·m
   * bytes to the driver, so Spark's DEFAULT 1 GiB
   * `spark.driver.maxResultSize` would cap a depth-2 wide fit at

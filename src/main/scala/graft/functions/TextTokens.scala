@@ -12,8 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native word tokenizer: `text_tokens(text)` returns the maximal
   * `[a-z0-9]+` runs of `lower(text)` in document order — exactly
   * `regexp_extract_all(lower(text), '[a-z0-9]+', 0)`, the corpus-wide
-  * tokenization every text/dedup operator here builds on (retained as
-  * `TextPipeline.tokensHof` and pinned equal in TextTokensSpec).
+  * tokenization every text/dedup operator here builds on (retained in
+  * test scope as `HofTwins.tokensHof` and pinned equal in TextTokensSpec).
   *
   * The regex form pays `lower()` materializing a second string, a
   * java.util.regex matcher walk, and a per-match String copy, per

@@ -22,8 +22,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * This is the codegen'd twin of the higher-order-function bridge
   * (`regexp_extract_all` for the tokens + `split` on the same pattern for
   * the separators + an `aggregate` fold accumulating the char cursor,
-  * retained as `Dedup.tokenCharSpansHof` and pinned equal in
-  * TokenCharSpansSpec). That chain runs three regex passes over every
+  * retained in test scope as `HofTwins.tokenCharSpansHof` and pinned
+  * equal in TokenCharSpansSpec). That chain runs three regex passes over every
   * document and builds the span array by per-element `array_append` on the
   * interpreted lambda evaluator — O(L²) array copying per doc. Here the
   * whole bridge is ONE branch-free scan over the lowered string's UTF-8

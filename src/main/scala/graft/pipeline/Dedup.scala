@@ -423,8 +423,8 @@ object Dedup {
 
   /** Reload a disk-persisted index ([[writeNearDupIndex]]) in a fresh
     * session. Both frames persist MEMORY_AND_DISK lazily: the FIRST probe
-    * pays the parquet scan (the cold cost `IncrementalProbe` measures as
-    * `cold_probe_sec`), steady-state probes run against the cache.
+    * pays the parquet scan (the cold cost recorded as `cold_probe_sec` in
+    * INCPROBE.json), steady-state probes run against the cache.
     */
   def readNearDupIndex(spark: SparkSession, dir: String): NearDupIndex = {
     val meta = spark.read.parquet(s"$dir/meta").head
@@ -999,7 +999,7 @@ object Dedup {
     * (fingerprint-pinned by the round-13 SpanFanbackAB run,
     * SPANFANBACK_AB.json; oracles unchanged).
     */
-  private[graft] def multiDupIntervals(base: DataFrame, ns: Seq[Int],
+  private def multiDupIntervals(base: DataFrame, ns: Seq[Int],
       md5: Boolean): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("n", "g1", "g2")
     taggedWindowRows(base, ns, md5)
@@ -1071,21 +1071,9 @@ object Dedup {
   }
 
   /** Per-doc duplicated-span INTERVALS — the data form of
-    * [[dupSpanProfile]]: `(doc_id, n_tokens, islands)` where `islands` is
-    * the array of maximal merged `[st, en]` token intervals (0-based,
-    * inclusive; empty for span-free docs). Same substrate and join shape
-    * as the profile; the only difference is the fold emits geometry.
-    */
-  def dupSpanIntervals(docs: DataFrame, n: Int,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-        TextPipeline.tokenCount(col(textCol)).cast("long").as("n_tokens"))
-      .join(dupIslands(docs, n, idCol, textCol), Seq("doc_id"), "left")
-      .withColumn("islands", coalesce(col("islands"),
-        array().cast("array<struct<st:bigint,en:bigint>>")))
-
-  /** The expensive inner aggregate of [[dupSpanIntervals]]: `(doc_id,
-    * islands)` for AFFECTED docs only — docs holding at least one
+    * [[dupSpanProfile]]: `(doc_id, islands)`, where `islands` is the array
+    * of maximal merged `[st, en]` token intervals (0-based, inclusive),
+    * for AFFECTED docs only — docs holding at least one
     * cross-doc-duplicated gram window (a small corpus fraction; islands
     * is never empty here by construction). Consumers that also need
     * per-doc token counts for unaffected docs should compute those with
@@ -1149,7 +1137,7 @@ object Dedup {
     * order (empty when the whole doc is cut, one full-range piece when
     * nothing is). Row-local.
     */
-  private[graft] def complementPieces(cuts: Column, nTokens: Column): Column = {
+  private def complementPieces(cuts: Column, nTokens: Column): Column = {
     val emptyArr = array().cast("array<struct<st:bigint,en:bigint>>")
     aggregate(
       cuts,
@@ -1167,42 +1155,6 @@ object Dedup {
         array_append(a.getField("arr"),
           struct(a.getField("cursor").as("st"), (nTokens - 1L).as("en"))))
         .otherwise(a.getField("arr")))
-  }
-
-  /** Higher-order-function form of the token→char coordinate bridge,
-    * retained as the independently-derived twin that pins the native
-    * [[graft.functions.TokenCharSpans]] expression (TokenCharSpansSpec):
-    * one `regexp_extract_all` for the tokens, one `split` on the same
-    * pattern for the `n+1` separators around them (leading/trailing
-    * empties kept, so the interleave is exact), then a single fold
-    * accumulating the char cursor —
-    * `st(i) = |sep₀| + Σ_{j<i}(|tok_j| + |sep_{j+1}|)`. Offsets are
-    * computed against the LOWERCASED text; they index the original
-    * exactly whenever lowercasing preserves length (all of ASCII; the
-    * rare exceptions — e.g. U+0130 İ lowercases to two chars — are why
-    * [[emitPiecesOriginal]] guards on the lowered length before slicing
-    * the original). The emit path itself uses the native expression:
-    * three regex passes + an interpreted `array_append` fold per document
-    * were the dominant per-doc cost of original-byte emission at ×100.
-    */
-  private[graft] def tokenCharSpansHof(text: Column): Column = {
-    val lowered = lower(text)
-    val toks = TextPipeline.tokens(text)
-    val seps = split(lowered, "[a-z0-9]+", -1)
-    val emptyArr = array().cast("array<struct<st:bigint,en:bigint>>")
-    val lens = zip_with(toks, slice(seps, lit(2), size(toks)),
-      (t, s) => struct(length(t).cast("long").as("tl"),
-        length(s).cast("long").as("sl")))
-    aggregate(
-      lens,
-      struct(emptyArr.as("arr"),
-        length(element_at(seps, 1)).cast("long").as("cur")),
-      (a, x) => struct(
-        array_append(a.getField("arr"),
-          struct(a.getField("cur").as("st"),
-            (a.getField("cur") + x.getField("tl") - 1L).as("en"))).as("arr"),
-        (a.getField("cur") + x.getField("tl") + x.getField("sl")).as("cur")),
-      a => a.getField("arr"))
   }
 
   /** ORIGINAL-BYTE variant of [[emitPieces]]: each surviving piece is
@@ -1460,7 +1412,7 @@ object Dedup {
     * survives removal — the same expression that decides duplication
     * yields the keeper for free.
     */
-  private[graft] def removalCutIntervals(base: DataFrame, ns: Seq[Int],
+  private def removalCutIntervals(base: DataFrame, ns: Seq[Int],
       md5: Boolean): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("n", "g1", "g2")
     taggedWindowRows(base, ns, md5)

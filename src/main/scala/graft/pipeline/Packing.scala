@@ -106,7 +106,7 @@ object Packing {
   }
 
   /** Dedup-aware LOSS MASKS for packed sequences: duplicated-span
-    * intervals ([[Dedup.dupSpanIntervals]], the ExactSubstr removal
+    * intervals ([[Dedup.dupIslands]], the ExactSubstr removal
     * geometry) mapped through the packing offsets ([[packChunks]]) into
     * the concatenated stream, split at chunk boundaries, and audited per
     * shard — the "train on it but don't learn it twice" shape: a trainer
@@ -122,7 +122,7 @@ object Packing {
     * explode/distinct/semi-join substrate ([[Dedup.dupIslands]], affected
     * docs only) feeds ONLY the islands join, so it is evaluated exactly
     * once and nothing needs persisting. (The round-8 shape bundled both
-    * columns into one [[Dedup.dupSpanIntervals]] frame consumed twice;
+    * columns into one `(doc_id, n_tokens, islands)` frame consumed twice;
     * the persist that patched the resulting fan-out was adjudicated by
     * rotated-interleave A/B/C at ×10/×100 — SPANMASK_AB.json, SCALING.md
     * round-10: this shape wins both scales, and the persist LOSES to
@@ -150,10 +150,9 @@ object Packing {
   }
 
   /** Maps per-doc span `islands` through `packed` offsets into per-shard
-    * chunk-mask stats — [[spanMaskReport]]'s final stage, also the shared
-    * kernel of the `SpanMaskAB` measurement harness's legacy variants.
+    * chunk-mask stats — [[spanMaskReport]]'s final stage.
     */
-  private[graft] def maskRollup(packed: DataFrame, islands: DataFrame,
+  private def maskRollup(packed: DataFrame, islands: DataFrame,
       seqLen: Int): DataFrame = {
     val pieces = packed
       .join(islands.select(col("doc_id"), col("islands")), Seq("doc_id"))

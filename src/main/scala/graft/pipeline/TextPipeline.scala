@@ -14,29 +14,20 @@ import graft.util.Det
 object TextPipeline {
 
   /** Lowercase + whitespace-collapse + trim — the native one-pass
-    * [[graft.functions.NormalizeText]] (regex twin below, pinned equal in
-    * NormalizeTextSpec).
+    * [[graft.functions.NormalizeText]] (regex twin in test scope, pinned
+    * equal in NormalizeTextSpec).
     */
   def normalize(c: Column): Column =
     graft.functions.NormalizeText.normalizeText(c)
 
-  def normalizeHof(c: Column): Column =
-    trim(regexp_replace(lower(c), "\\s+", " "))
-
   /** Word tokens: maximal [a-z0-9]+ runs of the lowercased text — the
     * native one-byte-pass [[graft.functions.TextTokens]] expression
     * (every tokenizing operator in the suite rides this; the regex form
-    * it replaced is retained below and pinned equal in TextTokensSpec).
+    * it replaced is retained in test scope and pinned equal in
+    * TextTokensSpec).
     */
   def tokens(c: Column): Column =
     graft.functions.TextTokens.textTokens(c)
-
-  /** Regex twin of [[tokens]] — the definition the native expression is
-    * property-tested against. Interpreted per-match copies; not for hot
-    * paths.
-    */
-  def tokensHof(c: Column): Column =
-    regexp_extract_all(lower(c), lit("[a-z0-9]+"), lit(0))
 
   def tokenCount(c: Column): Column = size(tokens(c))
 
@@ -48,13 +39,11 @@ object TextPipeline {
 
   /** A BPE-ish subword proxy: alpha runs, digit runs, and single
     * non-alphanumeric marks each count as one token. Native one-pass
-    * count; the regex twin below is the definition it is pinned against.
+    * count; the regex twin in test scope is the definition it is pinned
+    * against (TextCountsSpec).
     */
   def bpeishTokenCount(c: Column): Column =
     graft.functions.BpeishCount.bpeishCount(c)
-
-  def bpeishTokenCountHof(c: Column): Column =
-    size(regexp_extract_all(lower(c), lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"), lit(0)))
 
   /** English-ish stopwords (used by quality scoring); the regex pattern
     * is DERIVED from this list so the native word-set counter and the
@@ -78,9 +67,6 @@ object TextPipeline {
 
   def punctCount(c: Column): Column =
     graft.functions.AsciiSetCount.asciiSetCount(c, punctChars)
-
-  def punctCountHof(c: Column): Column =
-    size(regexp_extract_all(c, lit(s"[$punctChars]"), lit(0)))
 
   /** Quality heuristics: length, mean token length, stopword ratio, punct
     * density. Composable columns; the composite flag marks documents that
@@ -388,31 +374,14 @@ object TextPipeline {
   /** Word n-gram array of the text, one entry per OCCURRENCE in document
     * order (space-joined token windows). Built entirely inside the row —
     * no positional self-join, so per-doc gram work never shuffles — by the
-    * native codegen'd `WordGrams` expression (`wordGramArrayHof` is the
-    * interpreted `transform`/`slice` twin it is property-tested against).
+    * native codegen'd `WordGrams` expression (an interpreted
+    * `transform`/`slice` twin in test scope is what it is property-tested
+    * against, RepetitionSpec).
     * Empty array for docs with fewer than n tokens.
     */
   def wordGramArray(c: Column, n: Int): Column = {
     require(n >= 1, s"n-gram order must be >= 1, got $n")
     graft.functions.WordGrams.wordGrams(tokens(c), n)
-  }
-
-  /** Composable higher-order-function twin of [[wordGramArray]] (kept as
-    * the semantic reference; interpreted, so not used on hot paths).
-    * NULL text → NULL, like the native expression (the bare
-    * when/otherwise would silently turn NULL into the empty array);
-    * token arrays from `tokens` never contain NULL elements, so the
-    * native path's element-poisoning case has no HOF analogue here.
-    */
-  def wordGramArrayHof(c: Column, n: Int): Column = {
-    require(n >= 1, s"n-gram order must be >= 1, got $n")
-    val toks = tokens(c)
-    // sequence(1, size-n+1) would count DOWN for short docs; guard first.
-    when(toks.isNull, lit(null).cast("array<string>"))
-      .when(size(toks) >= n,
-        transform(sequence(lit(1), size(toks) - (n - 1)),
-          i => array_join(slice(toks, i, lit(n)), " ")))
-      .otherwise(array().cast("array<string>"))
   }
 
   /** 60-bit md5 fingerprint of the normalized text — the exact-dedup key

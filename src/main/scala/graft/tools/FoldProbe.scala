@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -49,29 +49,14 @@ import java.nio.file.{Files, Paths}
   */
 object FoldProbe {
 
-  private def cpuStat(): Option[(Long, Long)] =
-    try {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      try {
-        val f = src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
-        Some((f.sum, if (f.length > 7) f(7) else 0L))
-      } finally src.close()
-    } catch { case _: Throwable => None }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outPath = args.lift(1).getOrElse("FOLDPROBE_ROW.json")
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
     val incRows = args.lift(3).map(_.toInt).getOrElse(10000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val b = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .appName("graft-fold-probe")
-    graft.util.Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val stat0 = cpuStat()
+    val spark = graft.util.Tables.session("graft-fold-probe")
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    val stat0 = graft.Bench.cpuStat()
 
     val P = graft.pipeline.CleanPipeline
     val docs = graft.util.Tables.t(spark, sfDir, "documents")
@@ -237,8 +222,7 @@ object FoldProbe {
     monoIdx.unpersist()
     freshBase.unpersist(blocking = false)
 
-    val steal = (for ((t0, s0) <- stat0; (t1, s1) <- cpuStat() if t1 > t0)
-      yield math.round(10000.0 * (s1 - s0) / (t1 - t0)) / 100.0)
+    val steal = graft.Bench.stealPctSince(stat0)
     val sizesJson = idxSizes.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     val json =

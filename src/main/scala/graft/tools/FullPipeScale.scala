@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -40,28 +40,13 @@ import java.nio.file.{Files, Paths}
   */
 object FullPipeScale {
 
-  private def cpuStat(): Option[(Long, Long)] =
-    try {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      try {
-        val f = src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
-        Some((f.sum, if (f.length > 7) f(7) else 0L))
-      } finally src.close()
-    } catch { case _: Throwable => None }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outPath = args.lift(1).getOrElse("FULLPIPE_SCALE.json")
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val b = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .appName("graft-fullpipe-scale")
-    graft.util.Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val stat0 = cpuStat()
+    val spark = graft.util.Tables.session("graft-fullpipe-scale")
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    val stat0 = graft.Bench.cpuStat()
 
     val P = graft.pipeline.CleanPipeline
     // the same page synthesis as the p_full_pipeline query
@@ -146,8 +131,7 @@ object FullPipeScale {
       } finally idx2.unpersist()
     }
 
-    val steal = (for ((t0, s0) <- stat0; (t1, s1) <- cpuStat() if t1 > t0)
-      yield math.round(10000.0 * (s1 - s0) / (t1 - t0)) / 100.0)
+    val steal = graft.Bench.stealPctSince(stat0)
     val coldJson = if (!cold) "" else
       s""","p61_write_sec":$writeSec,"p61_read_sec":$readSec,""" +
         s""""p61_cold_probe_sec":$coldProbeSec,"p61_rewarm_probe_sec":$rewarmProbeSec"""

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -48,14 +48,7 @@ object PipeLegs {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outPath = args.lift(1).getOrElse("PIPELEGS.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .appName("graft-pipe-legs")
-    graft.util.Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Tables.session("graft-pipe-legs")
 
     val P = graft.pipeline.CleanPipeline
     val D = graft.pipeline.Dedup

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Optimization-round plan snapshots: writes `.explain("formatted")` for
@@ -13,8 +12,9 @@ import graft.SparkEntry
   *   suffix — appended to each file name (before/after)
   *   TOP    — the heavy-query set this round tracks
   *
-  * Session config mirrors Bench (shuffle partitions = cores) so the
-  * committed shapes are the ones the bench actually runs.
+  * The session comes from the same factory as Bench
+  * ([[graft.util.Tables.session]]), so the committed shapes are the ones
+  * the bench actually runs.
   */
 object PlanSnap {
   val topQueries: Seq[String] = Seq(
@@ -33,20 +33,31 @@ object PlanSnap {
     "p_incremental_substr_removal_probe_only",
     "p_incremental_substr_removal_segmented_probe_only")
 
+  /** Renumbers allocator state in a plan string, per plan, in
+    * first-appearance order: expression ids `#<n>` become `#e1, #e2, ...`,
+    * `plan_id=<n>` becomes `plan_id=p1, ...`, RDD ids `RDD[<n>]` (a
+    * per-context counter) become `RDD[r1], ...`, lambda variables
+    * `lambda x_<n>` (a JVM-global counter) become `lambda x_1, ...`, and
+    * JVM array identity hashes such as `[D@1b2c3d` (a literal array's
+    * default toString) become `[D@h1, ...`. Structure (operators,
+    * columns, pushed filters, join keys) is untouched, so two dumps of the
+    * same plan compare byte-equal across sessions and test orders.
+    */
   def normalizeIds(plan: String): String = {
-    val exprId = raw"#(\d+)(L|[a-z]*)?".r
-    val seen = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    val pass1 = exprId.replaceAllIn(plan, m => {
-      val k = seen.getOrElseUpdate(m.group(1), seen.size + 1)
-      java.util.regex.Matcher.quoteReplacement(
-        s"#e$k${Option(m.group(2)).getOrElse("")}")
-    })
-    val planId = raw"plan_id=(\d+)".r
-    val seenP = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    planId.replaceAllIn(pass1, m => {
-      val k = seenP.getOrElseUpdate(m.group(1), seenP.size + 1)
-      s"plan_id=p$k"
-    })
+    def renumber(s: String, re: scala.util.matching.Regex)(
+        out: (scala.util.matching.Regex.Match, Int) => String): String = {
+      val seen = scala.collection.mutable.HashMap.empty[String, Int]
+      re.replaceAllIn(s, m => java.util.regex.Matcher.quoteReplacement(
+        out(m, seen.getOrElseUpdate(m.group(1), seen.size + 1))))
+    }
+    val exprIds = renumber(plan, raw"#(\d+)(L|[a-z]*)?".r)((m, k) =>
+      s"#e$k${Option(m.group(2)).getOrElse("")}")
+    val planIds = renumber(exprIds, raw"plan_id=(\d+)".r)((_, k) => s"plan_id=p$k")
+    val rddIds = renumber(planIds, raw"RDD\[(\d+)\]".r)((_, k) => s"RDD[r$k]")
+    val lambdas = renumber(rddIds, raw"lambda (([a-z]+)_\d+)".r)((m, k) =>
+      s"lambda ${m.group(2)}_$k")
+    renumber(lambdas, raw"(\[[A-Z]@[0-9a-f]+)\b".r)((m, k) =>
+      m.group(1).takeWhile(_ != '@') + s"@h$k")
   }
 
   def main(args: Array[String]): Unit = {
@@ -58,16 +69,7 @@ object PlanSnap {
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    graft.util.Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.Tables.session("graft-plan-snap")
     val outDir = java.nio.file.Paths.get("plans", tag)
     java.nio.file.Files.createDirectories(outDir)
     for (n <- names) {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-rehearsal corpus generator (SCALING.md, "Scale
@@ -123,15 +123,7 @@ object ScaleRehearsal {
     val k = kStr.toInt
     require(k >= 1 && k <= 1000, s"replicas out of range: $k")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-rehearsal")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    graft.util.Tables.sessionConfigs.foreach { case (key, v) => b.config(key, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Tables.session("graft-scale-rehearsal")
 
     def replicate(name: String, f: (DataFrame, Int) => DataFrame): Unit = if (wanted(name)) {
       // raw read (no Tables.t ts normalization): the generated corpus

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -19,14 +18,7 @@ object SegLegs {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outPath = args.lift(1).getOrElse("SEGLEGS.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .appName("graft-seg-legs")
-    graft.util.Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Tables.session("graft-seg-legs")
 
     val D = graft.pipeline.Dedup
     val minLen = 20

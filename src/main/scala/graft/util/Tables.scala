@@ -68,6 +68,35 @@ object Tables {
     // through per-cell pools instead of queueing whole stages
     "spark.scheduler.mode" -> "FAIR")
 
+  /** The one session factory every `main` in this project uses:
+    * `local[$SPARK_GRAFT_CPUS]` (default 4), no UI, [[sessionConfigs]]
+    * (UTC among them), log level WARN.
+    *
+    * Shuffle-partition count is a DEPLOYMENT knob, not plan structure: the
+    * engine's plans are partition-count-agnostic, and production sizes
+    * partitions so a task's shuffle slice stays ~task-sized (100-200 MB).
+    * Default = cores (right for the sf0.1 headline: fixed 512 initial
+    * partitions measured +34 s of pure task overhead across 103 queries);
+    * scale-rehearsal decades MUST override through
+    * `SPARK_GRAFT_SHUFFLE_PARTITIONS` — at /tmp/x1000 the multi-order span
+    * family shuffles ~60 GB, and 32 partitions means ~2 GB per sort-merge
+    * task: spill-bound superlinearity (d3 ≈ 1.25) that disappears at
+    * data-sized partition counts (SCALING.md round 12).
+    */
+  def session(appName: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val b = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions",
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
+      .config("spark.ui.enabled", "false")
+    sessionConfigs.foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Recover scan parallelism lost to coarse parquet row groups.
     *
     * The local test tables are single-row-group files, and a row group is

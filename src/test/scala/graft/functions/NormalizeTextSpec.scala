@@ -47,7 +47,7 @@ class NormalizeTextSpec extends AnyFunSuite with BeforeAndAfterAll {
     bothPaths {
       val rows = df.select(
         graft.pipeline.TextPipeline.normalize(col("t")).as("n"),
-        graft.pipeline.TextPipeline.normalizeHof(col("t")).as("h")).collect()
+        graft.pipeline.HofTwins.normalizeHof(col("t")).as("h")).collect()
       rows.zipWithIndex.foreach { case (r, i) =>
         if (r.isNullAt(1)) assert(r.isNullAt(0), s"row $i: NULL must stay NULL")
         else assert(r.getString(0) == r.getString(1), s"row $i")

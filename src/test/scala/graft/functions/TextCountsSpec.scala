@@ -24,6 +24,7 @@ import org.scalatest.BeforeAndAfterAll
 class TextCountsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   import graft.pipeline.TextPipeline._
+  import graft.pipeline.HofTwins.{bpeishTokenCountHof, punctCountHof}
 
   private var spark: SparkSession = _
 

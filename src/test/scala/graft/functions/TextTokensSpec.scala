@@ -72,7 +72,7 @@ class TextTokensSpec extends AnyFunSuite with BeforeAndAfterAll {
     bothPaths {
       val got = df.select(
           TextTokens.textTokens(col("t")).as("native"),
-          graft.pipeline.TextPipeline.tokensHof(col("t")).as("regex"))
+          graft.pipeline.HofTwins.tokensHof(col("t")).as("regex"))
         .collect()
       got.zipWithIndex.foreach { case (r, i) =>
         if (r.isNullAt(1)) assert(r.isNullAt(0), s"row $i: NULL text must yield NULL")

@@ -8,7 +8,7 @@ import org.scalatest.BeforeAndAfterAll
 
 /** Direct unit coverage for the native token→char coordinate bridge. The
   * binding property: `token_char_spans(text)` must equal the retained
-  * higher-order-function derivation (`Dedup.tokenCharSpansHof` — three
+  * higher-order-function derivation (`HofTwins.tokenCharSpansHof` — three
   * regex passes + a cursor fold over the token/separator interleave) on
   * ANY input, and `n_chars` must equal `length(lower(text))` — including
   * on multi-byte Unicode, supplementary (4-byte) characters, and the
@@ -120,7 +120,7 @@ class TokenCharSpansSpec extends AnyFunSuite with BeforeAndAfterAll {
     bothPaths {
       val got = df.select(
           TokenCharSpans.tokenCharSpans(col("t")).getField("spans").as("native"),
-          graft.pipeline.Dedup.tokenCharSpansHof(col("t")).as("hof"))
+          graft.pipeline.HofTwins.tokenCharSpansHof(col("t")).as("hof"))
         .collect()
       got.zipWithIndex.foreach { case (r, i) =>
         if (i == cases.length) assert(r.isNullAt(0), "NULL text must yield NULL")

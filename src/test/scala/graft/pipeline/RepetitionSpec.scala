@@ -95,7 +95,7 @@ class RepetitionSpec extends AnyFunSuite with BeforeAndAfterAll {
     // NULL text: native and HOF twins agree on NULL out
     val nulls = docsDf(0L -> (null: String))
       .select(TextPipeline.wordGramArray(col("text"), 2).as("nat"),
-        TextPipeline.wordGramArrayHof(col("text"), 2).as("hof")).head()
+        HofTwins.wordGramArrayHof(col("text"), 2).as("hof")).head()
     assert(nulls.isNullAt(0) && nulls.isNullAt(1))
   }
 
@@ -115,7 +115,7 @@ class RepetitionSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (n <- Seq(1, 2, 4)) {
       val rows = df.select(col("doc_id"),
         TextPipeline.wordGramArray(col("text"), n).as("nat"),
-        TextPipeline.wordGramArrayHof(col("text"), n).as("hof"))
+        HofTwins.wordGramArrayHof(col("text"), n).as("hof"))
         .collect()
       rows.foreach { r =>
         assert(r.getSeq[String](1) == r.getSeq[String](2), s"n=$n id=${r.getLong(0)}")

@@ -666,4 +666,24 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!pm.contains("NestedLoop") && !pm.contains("Cartesian"),
       "model-quality full-chain joins must be keyed")
   }
+
+  test("plan normalization renumbers identity hashes, RDD ids and lambda names like expression ids") {
+    def plan(ids: Seq[Int], hashes: Seq[String], lam: Int): String =
+      s"Scan ExistingRDD MapPartitionsRDD[${ids(0) * 7}] at localCheckpoint\n" +
+        s"Project [x#${ids(0)}, f(q#${ids(1)}, [D@${hashes(0)}) AS c#${ids(2)}]\n" +
+        s"+- Filter (nearest(y#${ids(0)}, [D@${hashes(1)}, [D@${hashes(0)}) > 0 AND " +
+        s"exists(v#${ids(1)}, lambdafunction(lambda x_$lam#${ids(2)} > 0, lambda x_$lam#${ids(2)})))"
+    val a = graft.tools.PlanSnap.normalizeIds(
+      plan(Seq(12, 13, 14), Seq("3d328d31", "5cf70a28"), 387))
+    // only the identity hashes differ
+    assert(a == graft.tools.PlanSnap.normalizeIds(
+      plan(Seq(12, 13, 14), Seq("1a2b3c", "ff00ee"), 387)))
+    // every allocator-assigned token differs
+    assert(a == graft.tools.PlanSnap.normalizeIds(
+      plan(Seq(40, 41, 42), Seq("1a2b3c", "ff00ee"), 203)))
+    assert(a == "Scan ExistingRDD MapPartitionsRDD[r1] at localCheckpoint\n" +
+      "Project [x#e1, f(q#e2, [D@h1) AS c#e3]\n" +
+      "+- Filter (nearest(y#e1, [D@h2, [D@h1) > 0 AND " +
+      "exists(v#e2, lambdafunction(lambda x_1#e3 > 0, lambda x_1#e3)))")
+  }
 }

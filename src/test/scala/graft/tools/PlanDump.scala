@@ -28,33 +28,17 @@ class PlanDump extends AnyFunSuite {
     sb.append("# PLANS - formatted physical plans of representative queries\n\n")
     sb.append("Generated by `testOnly graft.tools.PlanDump` (sf-independent shapes;\n")
     sb.append("AdaptiveSparkPlan nodes re-optimize at runtime from real sizes).\n")
-    sb.append("Expression/plan ids are normalized to first-occurrence order per\n")
-    sb.append("query (#e1, #e2, ...), so the dump is stable across sessions —\n")
+    sb.append("Expression/plan/RDD ids, lambda names and array identity hashes\n")
+    sb.append("are normalized to first-occurrence order per query (#e1, #e2, ...,\n")
+    sb.append("RDD[r1], lambda x_1, [D@h1, ...; `PlanSnap.normalizeIds`), so the\n")
+    sb.append("dump is stable across sessions and test orders —\n")
     sb.append("raw ids are allocator state, and their churn flapped this file 3x\n")
     sb.append("in round 14 with zero plan changes.\n")
     sb.append("Properties asserted programmatically in `PlanQualitySpec`.\n")
-    // per-query renumbering: every `#<digits>` gets the index of its first
-    // appearance; `plan_id=<n>` likewise. Structure (operators, columns,
-    // pushed filters, join keys) is untouched.
-    def normalizeIds(plan: String): String = {
-      val exprId = raw"#(\d+)(L|[a-z]*)?".r
-      val seen = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-      val pass1 = exprId.replaceAllIn(plan, m => {
-        val k = seen.getOrElseUpdate(m.group(1), seen.size + 1)
-        java.util.regex.Matcher.quoteReplacement(
-          s"#e$k${Option(m.group(2)).getOrElse("")}")
-      })
-      val planId = raw"plan_id=(\d+)".r
-      val seenP = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-      planId.replaceAllIn(pass1, m => {
-        val k = seenP.getOrElseUpdate(m.group(1), seenP.size + 1)
-        s"plan_id=p$k"
-      })
-    }
     for (n <- names) {
       sb.append(s"\n## $n\n\n```\n")
       val df = SparkEntry.queries(n)(spark, dir)
-      sb.append(normalizeIds(df.queryExecution.explainString(
+      sb.append(PlanSnap.normalizeIds(df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)).take(12000))
       sb.append("\n```\n")
     }
