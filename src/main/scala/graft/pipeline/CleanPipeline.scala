@@ -37,35 +37,29 @@ import org.apache.spark.sql.functions._
   */
 object CleanPipeline {
 
-  /** `materializeIntermediate` (default true): stage 2 consumes the
-    * cleaned corpus TWICE (its substrate persist and its lazy emission
-    * tail), and unlike the removal family's usual raw-parquet input the
-    * cleaned corpus is a derived chain — re-deriving it per consumer
-    * measured 1.4× slower at ×1000 (CLEANPIPE_AB.json, interleaved,
-    * geometry-pinned), so the default `localCheckpoint`s it once. On a
+  /** The cleaned corpus is `localCheckpoint`ed between the stages: stage
+    * 2 consumes it TWICE (its substrate persist and its lazy emission
+    * tail), and unlike the removal family's usual raw-parquet input it is
+    * a derived chain — re-deriving it per consumer measured 1.4× slower
+    * at ×1000 (CLEANPIPE_AB.json, interleaved, geometry-pinned). On a
     * real cluster prefer staging the cleaned corpus to the lake between
     * passes (write + read back): a local checkpoint truncates lineage,
     * so an executor loss mid-stage-2 cannot recompute — the same reason
-    * a production chain persists its intermediate anyway. `false` keeps
-    * the fully-lazy stream-to-sink shape.
+    * a production chain persists its intermediate anyway.
     */
   def cleanCorpus(docs: DataFrame,
       sepRegex: String = ParagraphDedup.ParagraphSep,
       joiner: String = "\n\n", minLen: Int = 20,
-      idCol: String = "doc_id", textCol: String = "text",
-      materializeIntermediate: Boolean = true): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    // the checkpoint makes the emission's consumption EAGER, so it can
+    // ride the already-persisted unit substrate instead of re-deriving
+    // the unit table (and the caller's input chain) in a fresh scan —
+    // one full split/normalize/md5 pass saved per run (§6 derive-once)
+    val (kept, release) =
+      ParagraphDedup.dedupUnitsOnSubstrate(docs, sepRegex, idCol, textCol)
     val cleaned =
-      if (materializeIntermediate) {
-        // the checkpoint makes the emission's consumption EAGER, so it can
-        // ride the already-persisted unit substrate instead of re-deriving
-        // the unit table (and the caller's input chain) in a fresh scan —
-        // one full split/normalize/md5 pass saved per run (§6 derive-once)
-        val (kept, release) =
-          ParagraphDedup.dedupUnitsOnSubstrate(docs, sepRegex, idCol, textCol)
-        try rejoinKept(kept, joiner).localCheckpoint()
-        finally release()
-      } else rejoinKept(
-        ParagraphDedup.dedupUnits(docs, sepRegex, idCol, textCol), joiner)
+      try rejoinKept(kept, joiner).localCheckpoint()
+      finally release()
     Dedup.removeDupSpansExact(cleaned, minLen)
   }
 
@@ -120,10 +114,10 @@ object CleanPipeline {
     * corpus) and checkpoint small, so the survivor anti-join broadcasts
     * under AQE. Stage 3 is the removal family's shape over the surviving
     * reps. The survivor table is `localCheckpoint`ed between stages (the
-    * same persist-the-hand-off rationale — and measured default — as
-    * `materializeIntermediate`): stage 3 consumes it twice (token
-    * substrate + emission tail), and on a real cluster it is the cleaned
-    * artifact a production run stages to the lake anyway.
+    * same persist-the-hand-off rationale as [[cleanCorpus]]): stage 3
+    * consumes it twice (token substrate + emission tail), and on a real
+    * cluster it is the cleaned artifact a production run stages to the
+    * lake anyway.
     */
   def fullCleanCorpus(docs: DataFrame,
       sepRegex: String = ParagraphDedup.ParagraphSep,
@@ -197,7 +191,12 @@ object CleanPipeline {
       * largest absorbed doc emitted no cleaned text).
       */
     def maxDocId: Long = para.maxDocId
-    def unpersist(): Unit = { para.unpersist(); substr.unpersist() }
+    def unpersist(): Unit = { retireSuperseded(); substr.unpersist() }
+    /** Retire this handle once a fold has superseded it: the paragraph
+      * half only — the folded substring half shares this one's segments
+      * (see [[Dedup.ExactSubstrIndex]] on ownership).
+      */
+    def retireSuperseded(): Unit = para.unpersist()
   }
 
   /** Build both stages' corpus-side state once; probe per increment with
@@ -223,12 +222,12 @@ object CleanPipeline {
     try {
       val substr = Dedup.exactSubstrIndexAt(cleaned, minLen, para.maxDocId)
       // materialize the gram aggregate OFF the substrate-riding emission
-      // before releasing it: the grams persist is lazy, and deferring it to
+      // before releasing it: the base persist is lazy, and deferring it to
       // the first probe would re-derive the whole stage-1 chain from
       // scratch (the build pays it here either way — the probe follows
-      // immediately in every deployment of this entry)
-      substr.grams.count()
-      CleanIndex(para, substr, joiner)
+      // immediately in every deployment of this entry); the count seeds
+      // the compaction threshold for free
+      CleanIndex(para, substr.copy(baseRows = substr.base.count()), joiner)
     } finally releasePara()
   }
 
@@ -280,7 +279,7 @@ object CleanPipeline {
       textCol: String = "text"): (DataFrame, DataFrame) = {
     // increment-sized, consumed twice by stage 2 (substrate + emission)
     // and once more by a folding caller: checkpoint once — cheap at any
-    // scale, same rationale as the batch form's materializeIntermediate.
+    // scale, same rationale as the batch form's stage hand-off.
     // The kept-unit emission rides the persisted increment substrate
     // (§6 derive-once — the checkpoint right here is what makes it eager)
     val (kept, release) = ParagraphDedup.incrementalDedupUnitsOnSubstrate(
@@ -296,7 +295,8 @@ object CleanPipeline {
     * the substring index over the CLEANED increment (its state mirrors
     * the cleaned lake) — cleaned against the CURRENT paragraph index,
     * before that index absorbs the increment. Returns a NEW persisted
-    * index; retire the old one once the swap is durable.
+    * index; retire the old one with [[CleanIndex.retireSuperseded]] once
+    * the swap is durable.
     */
   def updateCleanIndex(index: CleanIndex, incoming: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): CleanIndex =
@@ -361,9 +361,13 @@ object CleanPipeline {
       corpusFps: DataFrame, joiner: String, threshold: Double) {
     /** The composed watermark — the paragraph half's (sees every raw id). */
     def maxDocId: Long = para.maxDocId
-    def unpersist(): Unit = {
-      para.unpersist(); nearDup.unpersist(); substr.unpersist()
-      corpusFps.unpersist(blocking = false)
+    def unpersist(): Unit = { retireSuperseded(); substr.unpersist() }
+    /** Retire this handle once a fold has superseded it: every half but
+      * the substring one, whose segments the folded index shares (see
+      * [[Dedup.ExactSubstrIndex]] on ownership).
+      */
+    def retireSuperseded(): Unit = {
+      para.unpersist(); nearDup.unpersist(); corpusFps.unpersist(blocking = false)
     }
   }
 
@@ -413,8 +417,8 @@ object CleanPipeline {
   /** Persist a [[FullCleanIndex]] to `dir` as parquet — the cross-restart
     * half of the daily-crawl story, composing the halves' own bucketed
     * writers (paragraph units by fp, near-dup bands by (band, bh),
-    * survivor grams by (g1, g2) — each co-locating its probe join on a
-    * lake) plus the fingerprint set (bucketed by fp) and a meta table
+    * survivor gram segments by (g1, g2) — each co-locating its probe join
+    * on a lake) plus the fingerprint set (bucketed by fp) and a meta table
     * pinning the joiner and verify threshold so a reloaded probe can
     * never re-join or verify with a mismatched scheme. Watermarks ride in
     * each half's own meta.
@@ -522,8 +526,8 @@ object CleanPipeline {
     * the RAW increment, near-dup index over the CLEANED increment (ALL
     * its reps — losers stay probe-visible, as in the build), substring
     * index over the increment SURVIVORS (stage 3's substrate is surviving
-    * text only). Returns a NEW persisted index; retire the old one once
-    * the swap is durable.
+    * text only). Returns a NEW persisted index; retire the old one with
+    * [[FullCleanIndex.retireSuperseded]] once the swap is durable.
     */
   def updateFullCleanIndex(index: FullCleanIndex, incoming: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): FullCleanIndex =

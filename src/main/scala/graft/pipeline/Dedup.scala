@@ -1426,25 +1426,59 @@ object Dedup {
 
   /** A pre-built exact-substring dup-gram index — the persisted corpus-side
     * state of INCREMENTAL span removal, mirroring [[NearDupIndex]] for the
-    * near-dup family: `grams` holds one row per distinct `minLen`-token
-    * window hash of the corpus with its total occurrence count and its
-    * keeper (the first occurrence in `(doc_id, position)` order):
-    * `(g1, g2, nocc, keeper: struct<doc_id, i>)`. Grams with `nocc = 1`
-    * are KEPT — a corpus-unique window becomes duplicated the moment an
-    * increment re-crawls it, so the state must remember every window (the
-    * same reason a suffix array is corpus-sized). ~40 B per corpus token;
-    * on a lake this is a table bucketed by `(g1, g2)` so increment probes
-    * co-locate without shuffling the index. Call [[ExactSubstrIndex
-    * .unpersist]] when retiring it.
+    * near-dup family: one row per distinct `minLen`-token window hash of
+    * the corpus with its total occurrence count and its keeper (the first
+    * occurrence in `(doc_id, position)` order), `(g1, g2, nocc, keeper:
+    * struct<doc_id, i>)`. Grams with `nocc = 1` are KEPT — a corpus-unique
+    * window becomes duplicated the moment an increment re-crawls it (the
+    * same reason a suffix array is corpus-sized). ~40 B per corpus token.
+    *
+    * LSM-SEGMENTED (O'Neil et al., "The Log-Structured Merge-Tree", 1996):
+    * a `base` plus append-only `deltas`, each the aggregate of a disjoint
+    * corpus slice, merged on read — `(sum nocc, min keeper)` is a
+    * commutative monoid over any partition of the corpus. A fold appends
+    * ONE increment-sized segment instead of re-aggregating the corpus-sized
+    * table (11.9 s against the ×1000 index for a 1000-row increment,
+    * FOLDPROBE.json); once total delta rows pass `compactFraction` × base
+    * rows, a compaction re-aggregates everything into one base. The probe
+    * pays one extra increment-keyed join per open delta; with none open it
+    * is a single left join against the base. `baseRows` is
+    * [[UncountedRows]] after a build until the first fold counts it, so
+    * build, write, read and probe never pay for it. On disk the layout is
+    * append-only
+    * ([[writeExactSubstrIndex]], [[foldExactSubstrIndexOnDisk]]).
+    *
+    * OWNERSHIP: folds SHARE the base and prior deltas with the input handle,
+    * so never unpersist a superseded handle after a fold — retire state
+    * through the newest handle. Compaction retires every segment it
+    * consumed (the input handle's base included) once the merged base is
+    * materialized.
     */
-  final case class ExactSubstrIndex(grams: DataFrame, minLen: Int,
-      maxDocId: Long = IdContract.Unwatermarked) {
-    def unpersist(): Unit = grams.unpersist(blocking = false)
+  final case class ExactSubstrIndex(
+      base: DataFrame, baseRows: Long,
+      deltas: Seq[DataFrame], deltaRows: Seq[Long],
+      minLen: Int, maxDocId: Long = IdContract.Unwatermarked,
+      compactFraction: Double = 0.25) {
+    def segments: Seq[DataFrame] = base +: deltas
+
+    /** The merged `(g1, g2, nocc, keeper)` table over every segment —
+      * lazy, and the base itself while no delta is open.
+      */
+    def merged: DataFrame =
+      if (deltas.isEmpty) base
+      else segments.reduce(_ unionByName _)
+        .groupBy("g1", "g2")
+        .agg(sum(col("nocc")).as("nocc"), min(col("keeper")).as("keeper"))
+
+    def unpersist(): Unit = segments.foreach(_.unpersist(blocking = false))
   }
 
+  /** [[ExactSubstrIndex.baseRows]] of a base that has not been counted. */
+  val UncountedRows: Long = -1L
+
   /** The per-gram `(nocc, keeper)` aggregate of one corpus side — the
-    * map-side-combinable build step shared by [[buildExactSubstrIndex]],
-    * [[updateExactSubstrIndex]] and the probe's increment-side aggregate.
+    * map-side-combinable step shared by the build, every fold's delta
+    * segment and the probe's increment-side aggregate.
     */
   private def exactGramAgg(docs: DataFrame, minLen: Int,
       idCol: String, textCol: String): DataFrame =
@@ -1458,105 +1492,80 @@ object Dedup {
       .agg(count(lit(1)).as("nocc"),
         min(struct(col("doc_id"), col("i"))).as("keeper"))
 
-  /** Build the corpus-side [[ExactSubstrIndex]] once; probe it per
-    * increment with [[incrementalRemoveDupSpansExact]], fold each shipped
-    * increment into it with [[updateExactSubstrIndex]].
+  /** Build the corpus-side [[ExactSubstrIndex]] once — one corpus-sized
+    * aggregate as the base, no open delta; probe it per increment with
+    * [[incrementalRemoveDupSpansExact]], fold each shipped increment into
+    * it with [[updateExactSubstrIndex]].
     */
   def buildExactSubstrIndex(corpus: DataFrame, minLen: Int,
-      idCol: String = "doc_id", textCol: String = "text"): ExactSubstrIndex =
+      idCol: String = "doc_id", textCol: String = "text",
+      compactFraction: Double = 0.25): ExactSubstrIndex =
     exactSubstrIndexAt(corpus, minLen, IdContract.maxId(corpus, idCol),
-      idCol, textCol)
+      idCol, textCol, compactFraction)
 
   /** [[buildExactSubstrIndex]] with a caller-supplied [[IdContract]]
-    * watermark — for callers whose corpus is a DERIVED chain (the composed
-    * cleanup's cleaned corpus) where `max(id)` is already known from the
-    * raw side and re-deriving the chain just to re-compute it would cost a
-    * full extra pass. Pass [[IdContract.Unwatermarked]] for the one-shot
-    * unenforced mode.
+    * watermark — for a DERIVED corpus chain (the composed cleanup's cleaned
+    * corpus) whose `max(id)` the raw side already knows, or
+    * [[IdContract.Unwatermarked]] for the one-shot unenforced mode.
     */
   private[graft] def exactSubstrIndexAt(corpus: DataFrame, minLen: Int,
-      maxDocId: Long, idCol: String = "doc_id",
-      textCol: String = "text"): ExactSubstrIndex = {
+      maxDocId: Long, idCol: String = "doc_id", textCol: String = "text",
+      compactFraction: Double = 0.25): ExactSubstrIndex = {
     require(minLen >= 1, s"minLen must be >= 1, got $minLen")
     ExactSubstrIndex(
       exactGramAgg(corpus, minLen, idCol, textCol)
         .persist(StorageLevel.MEMORY_AND_DISK),
-      minLen, maxDocId)
+      UncountedRows, Seq.empty, Seq.empty, minLen, maxDocId, compactFraction)
   }
 
-  /** Fold an increment into the index — occurrence counts ADD and keepers
-    * MIN, because both are gram-wise monoid aggregates of the union
-    * corpus: `union → groupBy → (sum, min)` is one map-side-combinable
-    * pass over the (small) increment plus the index, never the original
-    * corpus text. Returns a NEW persisted index; the caller retires the
-    * old one ([[ExactSubstrIndex.unpersist]]) once the swap is durable.
+  /** Fold an increment in O(increment): its per-gram aggregate, persisted
+    * and MATERIALIZED here (the fold pays its own bill, not the next
+    * probe), is appended as a delta segment; compacts iff the open deltas
+    * now exceed `compactFraction` × base rows. Returns a NEW index sharing
+    * the input's segments. Monotone-id watermark enforced ([[IdContract]]).
     */
   def updateExactSubstrIndex(index: ExactSubstrIndex, incoming: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): ExactSubstrIndex = {
     val wm = IdContract.requireAboveAndAdvance(incoming, idCol,
       index.maxDocId, "updateExactSubstrIndex")
-    ExactSubstrIndex(
-      index.grams
-        .unionByName(exactGramAgg(incoming, index.minLen, idCol, textCol))
-        .groupBy("g1", "g2")
-        .agg(sum(col("nocc")).as("nocc"), min(col("keeper")).as("keeper"))
-        .persist(StorageLevel.MEMORY_AND_DISK),
-      index.minLen, wm)
+    val delta = exactGramAgg(incoming, index.minLen, idCol, textCol)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val n = delta.count()
+    val baseRows =
+      if (index.baseRows == UncountedRows) index.base.count() else index.baseRows
+    val next = index.copy(baseRows = baseRows, deltas = index.deltas :+ delta,
+      deltaRows = index.deltaRows :+ n, maxDocId = wm)
+    if (next.deltaRows.sum <= index.compactFraction * baseRows) next
+    else compactExactSubstrIndex(next)
   }
 
-  /** Persist an [[ExactSubstrIndex]] to `dir` as parquet — `grams/`
-    * clustered into `nBuckets` files by `(g1, g2)` (a bucketed table on a
-    * real warehouse, so the probe equi-join co-locates against the index
-    * without shuffling it), `meta/` pinning `minLen` so a reloaded probe
-    * can never hash with a mismatched window length.
+  /** Re-aggregate every segment into one fresh base — the amortized
+    * O(index) half of the LSM bill. Materializes the merged base, then
+    * retires EVERY input segment, so a fold chain never leaks a base.
     */
-  def writeExactSubstrIndex(index: ExactSubstrIndex, dir: String,
-      nBuckets: Int = 64): Unit = {
-    index.grams.repartition(nBuckets, col("g1"), col("g2"))
-      .write.mode("overwrite").parquet(s"$dir/grams")
-    val spark = index.grams.sparkSession
-    import spark.implicits._
-    Seq((index.minLen, index.maxDocId)).toDF("min_len", "max_doc_id")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  /** Reload a disk-persisted index ([[writeExactSubstrIndex]]) in a fresh
-    * session; persists lazily, so the first probe pays the parquet scan.
-    * The [[IdContract]] watermark round-trips with the index (pre-
-    * watermark dirs reload unwatermarked).
-    */
-  def readExactSubstrIndex(spark: SparkSession, dir: String): ExactSubstrIndex = {
-    val meta = spark.read.parquet(s"$dir/meta").head
-    ExactSubstrIndex(
-      // repartition on the probe key BEFORE caching: a raw parquet scan
-      // caches with unknown partitioning, so every probe join would
-      // re-exchange the corpus-sized gram table — clustering into the
-      // cache makes the exchange a one-time warm-up cost and every probe
-      // streams the cached store (the partitioning fold-built indexes
-      // already have)
-      spark.read.parquet(s"$dir/grams")
-        .repartition(spark.sessionState.conf.numShufflePartitions,
-          col("g1"), col("g2"))
-        .persist(StorageLevel.MEMORY_AND_DISK),
-      meta.getAs[Int]("min_len"),
-      if (meta.schema.fieldNames.contains("max_doc_id"))
-        meta.getAs[Long]("max_doc_id")
-      else IdContract.Unwatermarked)
-  }
+  def compactExactSubstrIndex(index: ExactSubstrIndex): ExactSubstrIndex =
+    if (index.deltas.isEmpty) index
+    else {
+      val merged = index.merged.persist(StorageLevel.MEMORY_AND_DISK)
+      val n = merged.count()
+      index.unpersist()
+      index.copy(base = merged, baseRows = n,
+        deltas = Seq.empty, deltaRows = Seq.empty)
+    }
 
   /** INCREMENTAL exact duplicated-substring removal — the daily-crawl twin
     * of [[removeDupSpansExact]], mirroring [[incrementalNearDup]] vs its
     * prebuilt index: the corpus's per-gram `(nocc, keeper)` state is built
     * ONCE ([[buildExactSubstrIndex]]) and each increment pays only its own
-    * O(L) rolling-hash pass, one per-gram aggregate, one equi-join against
-    * the index, and the row-local island/piece kernels. Emits the cleaned
-    * INCREMENT in [[removeDupSpans]]'s piece schema.
+    * O(L) rolling-hash pass, one per-gram aggregate, one equi-join per
+    * index segment, and the row-local island/piece kernels. Emits the
+    * cleaned INCREMENT in [[removeDupSpans]]'s piece schema.
     *
     * EXACTLY BATCH-EQUAL for increment docs, by construction: for every
     * window hash, the union corpus's occurrence count is
     * `index.nocc + increment count` and its first occurrence is
-    * `min(index.keeper, increment keeper)` — both recovered by one left
-    * join — so every increment window's cut decision (`total >= 2` and,
+    * `min(index.keeper, increment keeper)` — both recovered by left joins
+    * — so every increment window's cut decision (`total >= 2` and,
     * under `keepFirst`, `(doc_id, i) != keeper`) is identical to running
     * [[removeDupSpansExact]] over corpus ∪ increment. Pinned in
     * PipelineSpec on a random corpus with INTERLEAVED doc ids.
@@ -1569,8 +1578,8 @@ object Dedup {
     * (re-submitting an indexed doc double-counts its windows).
     *
     * Scale shape: the increment side is O(|increment|) everywhere; the
-    * index join is the only corpus-sized term and co-locates against the
-    * bucketed gram table on a lake ([[writeExactSubstrIndex]]). Nothing
+    * index joins are the only corpus-sized terms and co-locate against the
+    * bucketed gram segments on a lake ([[writeExactSubstrIndex]]). Nothing
     * re-reads corpus text. Cuts checkpoint small (affected increment docs
     * only); the emit tail is lazy and row-local, as in the batch form.
     */
@@ -1580,8 +1589,8 @@ object Dedup {
       emitOriginal: Boolean = false): DataFrame = {
     IdContract.requireAbove(incoming, idCol, index.maxDocId,
       "incrementalRemoveDupSpansExact")
-    val f = incrementalExactSubstrFrames(incoming, index, idCol, textCol,
-      keepFirst)
+    val f = incrementalExactSubstrFramesOver(incoming, index.segments,
+      index.minLen, idCol, textCol, keepFirst)
     val cuts = // eager: affected docs only; finally: no substrate leak on failure
       try f.cuts.localCheckpoint()
       finally f.base.unpersist(blocking = false)
@@ -1604,172 +1613,49 @@ object Dedup {
     finally idx.unpersist()
   }
 
-  /** LSM-style SEGMENTED [[ExactSubstrIndex]] — the fold-side upgrade
-    * path the FOLDPROBE decade rows motivated: [[updateExactSubstrIndex]]
-    * re-aggregates index ∪ increment on EVERY fold (O(index) — 11.9 s
-    * against the ×1000 gram index for a 1000-row increment, d3 0.87,
-    * approaching linear in index size), because a monolithic store must
-    * absorb the increment's rows in place. The segmented store makes the
-    * recurring fold O(increment): each fold appends ONE immutable
-    * increment-sized segment (the increment's own per-gram `(nocc,
-    * keeper)` aggregate) and probes merge on read — correct because
-    * `(sum nocc, min keeper)` is a commutative monoid over any partition
-    * of the corpus into segments — while a threshold compaction (total
-    * delta rows > `compactFraction` × base rows) re-aggregates everything
-    * back into one base. The classic LSM bill: O(increment) per fold plus
-    * an O(index) compaction amortized over `compactFraction × |index| /
-    * |increment|` folds; the probe pays a read tax of one extra
-    * increment-keyed join per open delta segment (quantified as the
-    * probe A/B legs in FOLDPROBE.json).
-    *
-    * On a lake this is an append-only layout: the daily fold writes one
-    * new bucketed segment dir plus a tiny meta file
-    * ([[foldSegmentedExactSubstrIndexOnDisk]]) instead of rewriting the
-    * corpus-sized gram table, and compaction is a periodic rewrite to a
-    * fresh table path with an atomic pointer swap (here: a fresh dir).
-    *
-    * OWNERSHIP differs from the monolithic index on purpose: folds SHARE
-    * the base and prior delta frames with the input handle (append-only),
-    * so never unpersist a superseded handle after a fold — retire state
-    * through the newest handle's [[SegmentedExactSubstrIndex.unpersist]].
-    * Compaction retires the delta frames it consumed itself, after
-    * materializing the merged base.
-    */
-  final case class SegmentedExactSubstrIndex(
-      base: DataFrame, baseRows: Long,
-      deltas: Seq[DataFrame], deltaRows: Seq[Long],
-      minLen: Int, maxDocId: Long = IdContract.Unwatermarked,
-      compactFraction: Double = 0.25) {
-    def segments: Seq[DataFrame] = base +: deltas
-    def unpersist(): Unit = segments.foreach(_.unpersist(blocking = false))
-  }
+  private def segmentDir(dir: String, i: Int): String = f"$dir/seg-$i%05d"
 
-  /** Build the base segment over the corpus (one corpus-sized aggregate,
-    * exactly [[buildExactSubstrIndex]]'s) with no open deltas.
+  /** Persist an [[ExactSubstrIndex]] to `dir` as an APPEND-ONLY layout:
+    * `seg-00000/` (base) … `seg-0000k/` (deltas), each clustered by
+    * `(g1, g2)` into `nBuckets` files (a bucketed table on a warehouse, so
+    * the probe join co-locates without shuffling the index), plus `meta/`
+    * pinning `min_len`, the [[IdContract]] watermark, `compact_fraction`
+    * and per-segment row counts (an uncounted base stays [[UncountedRows]]
+    * on disk). The daily disk fold ([[foldExactSubstrIndexOnDisk]]) then
+    * touches only one new segment dir + the tiny meta.
     */
-  def buildSegmentedExactSubstrIndex(corpus: DataFrame, minLen: Int,
-      idCol: String = "doc_id", textCol: String = "text",
-      compactFraction: Double = 0.25): SegmentedExactSubstrIndex =
-    segmentedFrom(buildExactSubstrIndex(corpus, minLen, idCol, textCol),
-      compactFraction)
-
-  /** Adopt an existing monolithic index as the base segment (counts it —
-    * one job over the persisted aggregate — to seed the compaction
-    * threshold). The input's grams frame is SHARED, not copied, and
-    * OWNERSHIP TRANSFERS to the segmented chain: a later compaction will
-    * retire it, so stop unpersisting through the monolithic handle.
-    */
-  def segmentedFrom(index: ExactSubstrIndex,
-      compactFraction: Double = 0.25): SegmentedExactSubstrIndex =
-    SegmentedExactSubstrIndex(index.grams, index.grams.count(),
-      Seq.empty, Seq.empty, index.minLen, index.maxDocId, compactFraction)
-
-  /** Fold an increment in O(increment): one map-side-combinable aggregate
-    * over the increment's grams, persisted and MATERIALIZED here (the
-    * fold pays its own bill at fold time, not at the next probe), then
-    * appended as an immutable delta segment. Compacts iff the open deltas
-    * now exceed `compactFraction` × base rows. Monotone-id watermark
-    * enforced exactly as the monolithic fold ([[IdContract]]).
-    */
-  def updateSegmentedExactSubstrIndex(index: SegmentedExactSubstrIndex,
-      incoming: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): SegmentedExactSubstrIndex = {
-    val wm = IdContract.requireAboveAndAdvance(incoming, idCol,
-      index.maxDocId, "updateSegmentedExactSubstrIndex")
-    val delta = exactGramAgg(incoming, index.minLen, idCol, textCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = delta.count()
-    val next = index.copy(deltas = index.deltas :+ delta,
-      deltaRows = index.deltaRows :+ n, maxDocId = wm)
-    if (next.deltaRows.sum <= index.compactFraction * index.baseRows) next
-    else compactSegmentedExactSubstrIndex(next)
-  }
-
-  /** Re-aggregate every segment into one fresh base — the amortized
-    * O(index) half of the LSM bill, the same exchange
-    * [[updateExactSubstrIndex]] pays on EVERY fold. Materializes the
-    * merged base, then retires EVERY input segment frame (base included —
-    * the chain owns its state; see [[segmentedFrom]] on adoption), so a
-    * fold chain never leaks a superseded base.
-    */
-  def compactSegmentedExactSubstrIndex(
-      index: SegmentedExactSubstrIndex): SegmentedExactSubstrIndex =
-    if (index.deltas.isEmpty) index
-    else {
-      val merged = index.segments.reduce(_ unionByName _)
-        .groupBy("g1", "g2")
-        .agg(sum(col("nocc")).as("nocc"), min(col("keeper")).as("keeper"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val n = merged.count()
-      index.segments.foreach(_.unpersist(blocking = false))
-      SegmentedExactSubstrIndex(merged, n, Seq.empty, Seq.empty,
-        index.minLen, index.maxDocId, index.compactFraction)
-    }
-
-  /** INCREMENTAL exact duplicated-substring removal against a SEGMENTED
-    * index — the same batch-equality contract, emit schema and increment-
-    * sized probe shape as [[incrementalRemoveDupSpansExact]]; only the
-    * index side differs (per-segment joins + an increment-sized monoid
-    * merge, see [[incrementalExactSubstrFramesOver]]).
-    */
-  def incrementalRemoveDupSpansExactSegmented(incoming: DataFrame,
-      index: SegmentedExactSubstrIndex, idCol: String = "doc_id",
-      textCol: String = "text", keepFirst: Boolean = true,
-      emitOriginal: Boolean = false): DataFrame = {
-    IdContract.requireAbove(incoming, idCol, index.maxDocId,
-      "incrementalRemoveDupSpansExactSegmented")
-    val f = incrementalExactSubstrFramesOver(incoming, index.segments,
-      index.minLen, idCol, textCol, keepFirst)
-    val cuts = // eager: affected docs only; finally: no substrate leak on failure
-      try f.cuts.localCheckpoint()
-      finally f.base.unpersist(blocking = false)
-    if (emitOriginal) emitPiecesOriginal(incoming, cuts, idCol, textCol)
-    else emitPieces(incoming, cuts, idCol, textCol)
-  }
-
-  /** Persist a segmented index as an APPEND-ONLY layout: `seg-00000/`
-    * (base) … `seg-0000k/` (deltas), each clustered by `(g1, g2)` into
-    * `nBuckets` files, plus `meta/` pinning `min_len`, the [[IdContract]]
-    * watermark, `compact_fraction` and per-segment row counts. The daily
-    * disk fold ([[foldSegmentedExactSubstrIndexOnDisk]]) then touches
-    * only increment-sized bytes: one new segment dir + the tiny meta.
-    */
-  def writeSegmentedExactSubstrIndex(index: SegmentedExactSubstrIndex,
-      dir: String, nBuckets: Int = 64): Unit = {
+  def writeExactSubstrIndex(index: ExactSubstrIndex, dir: String,
+      nBuckets: Int = 64): Unit = {
     index.segments.zipWithIndex.foreach { case (s, i) =>
       s.repartition(nBuckets, col("g1"), col("g2"))
-        .write.mode("overwrite").parquet(f"$dir/seg-$i%05d")
+        .write.mode("overwrite").parquet(segmentDir(dir, i))
     }
-    writeSegmentedMeta(index.base.sparkSession, dir, index.minLen,
-      index.maxDocId, index.compactFraction,
-      index.baseRows +: index.deltaRows)
+    writeIndexMeta(index.base.sparkSession, s"$dir/meta", index.minLen,
+      index.maxDocId, index.compactFraction, index.baseRows +: index.deltaRows)
   }
 
-  private def writeSegmentedMeta(spark: SparkSession, dir: String,
+  private def writeIndexMeta(spark: SparkSession, path: String,
       minLen: Int, maxDocId: Long, compactFraction: Double,
       segRows: Seq[Long]): Unit = {
     import spark.implicits._
     Seq((minLen, maxDocId, compactFraction, segRows))
       .toDF("min_len", "max_doc_id", "compact_fraction", "seg_rows")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+      .coalesce(1).write.mode("overwrite").parquet(path)
   }
 
   /** ATOMIC meta swap: the new meta is written COMPLETE to `.meta.tmp`
     * first (parquet commit = `_SUCCESS` marker), then swapped in with
     * delete + rename. A crash anywhere leaves a state
-    * [[recoverSegmentedDir]] rolls forward or back deterministically, so
-    * a failed fold is always retryable — the append-only framing the
-    * layout promises ([[foldSegmentedExactSubstrIndexOnDisk]]).
+    * [[recoverIndexDir]] rolls forward or back deterministically, so
+    * a failed fold is always retryable ([[foldExactSubstrIndexOnDisk]]).
     */
-  private def swapSegmentedMeta(spark: SparkSession, dir: String,
+  private def swapIndexMeta(spark: SparkSession, dir: String,
       minLen: Int, maxDocId: Long, compactFraction: Double,
       segRows: Seq[Long]): Unit = {
-    import spark.implicits._
     val fs = fsOf(spark, dir)
     val tmp = new org.apache.hadoop.fs.Path(s"$dir/.meta.tmp")
-    Seq((minLen, maxDocId, compactFraction, segRows))
-      .toDF("min_len", "max_doc_id", "compact_fraction", "seg_rows")
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    writeIndexMeta(spark, tmp.toString, minLen, maxDocId, compactFraction,
+      segRows)
     val meta = new org.apache.hadoop.fs.Path(s"$dir/meta")
     fs.delete(meta, true)
     require(fs.rename(tmp, meta), s"meta swap rename failed under $dir")
@@ -1790,7 +1676,7 @@ object Dedup {
     * watermark — the caller's retry redoes it from scratch). Called by
     * every disk-fold and read entry, so no manual cleanup is ever needed.
     */
-  private[graft] def recoverSegmentedDir(spark: SparkSession,
+  private def recoverIndexDir(spark: SparkSession,
       dir: String): Unit = {
     val fs = fsOf(spark, dir)
     val tmp = new org.apache.hadoop.fs.Path(s"$dir/.meta.tmp")
@@ -1803,94 +1689,98 @@ object Dedup {
     }
   }
 
-  /** Reload a disk-persisted segmented index; each segment persists
-    * lazily, CLUSTERED on the probe key (one exchange per segment, paid
-    * once at first materialization to refill the in-memory
-    * co-partitioning) — caching the raw scans instead would leave the
-    * cached segments unpartitioned and EVERY probe would re-exchange the
-    * corpus-sized base.
+  /** The recovered meta row of an index dir; fails loudly on a dir in the
+    * retired single-table layout (`grams/`, no `seg_rows` in meta), which
+    * is rebuilt, never read.
     */
-  def readSegmentedExactSubstrIndex(spark: SparkSession,
-      dir: String): SegmentedExactSubstrIndex = {
-    recoverSegmentedDir(spark, dir)
+  private def readIndexMeta(spark: SparkSession,
+      dir: String): org.apache.spark.sql.Row = {
+    recoverIndexDir(spark, dir)
     val meta = spark.read.parquet(s"$dir/meta").head
+    require(meta.schema.fieldNames.contains("seg_rows"),
+      s"$dir holds an exact-substring index in the retired single-table " +
+        "layout (grams/, no seg_rows in meta) — rebuild it with " +
+        "buildExactSubstrIndex + writeExactSubstrIndex")
+    meta
+  }
+
+  /** Reload a disk-persisted index ([[writeExactSubstrIndex]]) in a fresh
+    * session. Each segment persists lazily, CLUSTERED on the probe key: a
+    * raw parquet scan caches with unknown partitioning, so every probe
+    * join would re-exchange the corpus-sized base — clustering into the
+    * cache makes the exchange a one-time warm-up cost (one per segment)
+    * and every probe streams the cached store (the partitioning
+    * fold-built indexes already have). The [[IdContract]] watermark
+    * round-trips with the index.
+    */
+  def readExactSubstrIndex(spark: SparkSession, dir: String): ExactSubstrIndex = {
+    val meta = readIndexMeta(spark, dir)
     val segRows = meta.getAs[scala.collection.Seq[Long]]("seg_rows").toSeq
     val segs = segRows.indices.map(i =>
-      spark.read.parquet(f"$dir/seg-$i%05d")
+      spark.read.parquet(segmentDir(dir, i))
         .repartition(spark.sessionState.conf.numShufflePartitions,
           col("g1"), col("g2"))
         .persist(StorageLevel.MEMORY_AND_DISK))
-    SegmentedExactSubstrIndex(segs.head, segRows.head,
-      segs.tail, segRows.tail, meta.getAs[Int]("min_len"),
-      meta.getAs[Long]("max_doc_id"),
+    ExactSubstrIndex(segs.head, segRows.head, segs.tail, segRows.tail,
+      meta.getAs[Int]("min_len"), meta.getAs[Long]("max_doc_id"),
       meta.getAs[Double]("compact_fraction"))
   }
 
-  /** The DAILY DISK FOLD: append one increment to a disk-resident
-    * segmented index by writing ONE new increment-sized segment dir and
-    * rewriting the tiny meta — the corpus-sized segment files are never
-    * touched. Watermark-enforced from the on-disk meta. Does NOT compact:
-    * on a lake, compaction is a separate periodic job — read the index,
-    * [[compactSegmentedExactSubstrIndex]], write to a FRESH path, swap
-    * the table pointer atomically — because rewriting a live dir in
-    * place would race its readers.
+  /** The DAILY DISK FOLD: append one increment to a disk-resident index by
+    * writing ONE new increment-sized segment dir and rewriting the tiny
+    * meta — the corpus-sized segment files are never touched. Watermark-
+    * enforced from the on-disk meta. Does NOT compact: on a lake,
+    * compaction is a separate periodic job — read the index,
+    * [[compactExactSubstrIndex]], write to a FRESH path, swap the table
+    * pointer atomically — because rewriting a live dir in place would race
+    * its readers.
     *
     * CRASH-RETRYABLE: the segment is staged to a temp dir and RENAMED
     * into `seg-K` (an orphan `seg-K` from an earlier crashed fold — a
     * dir meta does not list — is deleted first, never trusted: the crash
     * may have interrupted its write), and the meta update is a committed-
-    * tmp + swap ([[swapSegmentedMeta]] / [[recoverSegmentedDir]]). Any
+    * tmp + swap ([[swapIndexMeta]] / [[recoverIndexDir]]). Any
     * crash leaves the dir either wholly pre-fold (retry redoes the fold)
     * or wholly post-fold (retry fails LOUDLY on the advanced watermark —
     * the fold already happened), never wedged.
     */
-  def foldSegmentedExactSubstrIndexOnDisk(spark: SparkSession, dir: String,
+  def foldExactSubstrIndexOnDisk(spark: SparkSession, dir: String,
       incoming: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", nBuckets: Int = 8): Unit = {
-    recoverSegmentedDir(spark, dir)
-    val meta = spark.read.parquet(s"$dir/meta").head
+    val meta = readIndexMeta(spark, dir)
     val segRows = meta.getAs[scala.collection.Seq[Long]]("seg_rows").toSeq
     val minLen = meta.getAs[Int]("min_len")
     val wm = IdContract.requireAboveAndAdvance(incoming, idCol,
-      meta.getAs[Long]("max_doc_id"), "foldSegmentedExactSubstrIndexOnDisk")
+      meta.getAs[Long]("max_doc_id"), "foldExactSubstrIndexOnDisk")
     val fs = fsOf(spark, dir)
     val segTmp = new org.apache.hadoop.fs.Path(s"$dir/.seg.tmp")
     exactGramAgg(incoming, minLen, idCol, textCol)
       .repartition(nBuckets, col("g1"), col("g2"))
       .write.mode("overwrite").parquet(segTmp.toString)
-    val segDir = new org.apache.hadoop.fs.Path(f"$dir/seg-${segRows.size}%05d")
+    val segDir = new org.apache.hadoop.fs.Path(segmentDir(dir, segRows.size))
     fs.delete(segDir, true) // orphan of a crashed fold: unlisted in meta
     require(fs.rename(segTmp, segDir), s"segment rename failed under $dir")
     val n = spark.read.parquet(segDir.toString).count()
-    swapSegmentedMeta(spark, dir, minLen, wm,
+    swapIndexMeta(spark, dir, minLen, wm,
       meta.getAs[Double]("compact_fraction"), segRows :+ n)
   }
 
-  /** The lazy internals of [[incrementalRemoveDupSpansExact]], exposed for
-    * plan-quality tests (same contract as [[exactSubstrFrames]]).
-    */
-  private[graft] def incrementalExactSubstrFrames(incoming: DataFrame,
-      index: ExactSubstrIndex, idCol: String, textCol: String,
-      keepFirst: Boolean): RemoveSpanFrames =
-    incrementalExactSubstrFramesOver(incoming, Seq(index.grams),
-      index.minLen, idCol, textCol, keepFirst)
-
-  /** [[incrementalExactSubstrFrames]] generalized over a SEGMENTED gram
-    * store ([[SegmentedExactSubstrIndex]]). With ONE segment the plan is
-    * the monolithic probe unchanged — a single left join against the
-    * persisted aggregate. With k segments the probe is k CHAINED left
-    * joins — the monolithic probe's exact join shape, once per segment:
-    * the increment-sized accumulator is the shuffled-hash BUILD side
-    * (hinted; AQE converts the same way for the monolithic probe) and
-    * each segment only STREAMS through its cached scan, never shuffled or
-    * sorted. The cross-segment `(sum nocc, min keeper)` monoid then folds
-    * ROW-LOCALLY over the joined columns (`+`/`least`, null-skipping) —
-    * no union, no re-aggregate: two earlier cuts of this plan paid an
-    * index-sized bill here (an optimizer-chosen sort-merge that sorted
-    * the base per segment, then a union + re-aggregate whose fused
-    * non-codegen stage de-vectorized the 170M-row segment scans to ~15 s
-    * where the monolithic probe streams the same store in ~1 s); the
-    * chained shape is pinned in PlanQualitySpec and priced by
+  /** The lazy internals of [[incrementalRemoveDupSpansExact]] over an
+    * index's segment list, exposed for plan-quality tests (same contract
+    * as [[exactSubstrFrames]]). With ONE segment (no open delta) the probe
+    * is a single left join against the persisted aggregate. With k
+    * segments it is k CHAINED left joins — that join shape once per
+    * segment: the increment-sized accumulator is the shuffled-hash BUILD
+    * side (hinted; AQE converts the same way for the single-segment probe)
+    * and each segment only STREAMS through its cached scan, never shuffled
+    * or sorted. The cross-segment `(sum nocc, min keeper)` monoid then
+    * folds ROW-LOCALLY over the joined columns (`+`/`least`,
+    * null-skipping) — no union, no re-aggregate: two earlier cuts of this
+    * plan paid an index-sized bill here (an optimizer-chosen sort-merge
+    * that sorted the base per segment, then a union + re-aggregate whose
+    * fused non-codegen stage de-vectorized the 170M-row segment scans to
+    * ~15 s where a single-segment probe streams the same store in ~1 s);
+    * the chained shape is pinned in PlanQualitySpec and priced by
     * FOLDPROBE's read-tax legs.
     */
   private[graft] def incrementalExactSubstrFramesOver(incoming: DataFrame,
@@ -2107,28 +1997,6 @@ object SimHash {
     spreadById.select(col(idCol).as("doc_id"),
         graft.functions.SimhashFp.simhashFp(col(textCol)).as("simhash"))
       .filter(col("simhash").isNotNull)
-  }
-
-  /** Exploded formulation of [[simhash]] — tf groupBy + 60-column vote
-    * aggregation — retained as the independently-derived twin the native
-    * kernel is pinned against (SimhashFpSpec).
-    */
-  private[graft] def simhashExploded(docs: DataFrame, idCol: String = "doc_id",
-              textCol: String = "text"): DataFrame = {
-    val toks = docs.select(col(idCol).as("doc_id"),
-        explode(TextPipeline.tokens(col(textCol))).as("tok"))
-      .groupBy("doc_id", "tok").agg(count(lit(1)).as("w"))
-      .select(col("doc_id"), col("w"), Det.md5Hash60(col("tok")).as("h"))
-    // all 60 bit-votes in one wide aggregation (exploding a bit column would
-    // shuffle 60× the rows); the fingerprint assembles from the vote columns
-    val voteAggs = (0 until 60).map(b =>
-      sum(expr(s"w * ((shiftright(h, $b) & 1) * 2 - 1)")).as(s"v_$b"))
-    val assemble = (0 until 60).map(b =>
-      s"(CASE WHEN v_$b > 0 THEN shiftleft(cast(1 as bigint), $b) ELSE cast(0 as bigint) END)")
-      .mkString(" + ")
-    toks.groupBy("doc_id")
-      .agg(voteAggs.head, voteAggs.tail: _*)
-      .select(col("doc_id"), expr(assemble).as("simhash"))
   }
 
   /** Near-duplicate pairs by Hamming distance ≤ `maxHamming`, found via

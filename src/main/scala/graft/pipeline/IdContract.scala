@@ -6,11 +6,12 @@ import org.apache.spark.sql.functions._
 /** Mechanical enforcement of the incremental indexes' doc-id contracts.
   *
   * Every incremental index in this package ([[ParagraphDedup.ParagraphIndex]],
-  * [[Dedup.ExactSubstrIndex]], [[Dedup.NearDupIndex]],
-  * [[CleanPipeline.CleanIndex]]) carries a `maxDocId` WATERMARK — the
-  * largest doc id the corpus side has absorbed — and every index probe and
-  * fold `require`s the increment's ids STRICTLY ABOVE it. The contract this
-  * enforces is monotone crawl ids, and the reason it must fail loudly is
+  * the segmented [[Dedup.ExactSubstrIndex]], [[Dedup.NearDupIndex]],
+  * [[CleanPipeline.CleanIndex]], [[CleanPipeline.FullCleanIndex]]) carries
+  * a `maxDocId` WATERMARK — the largest doc id the corpus side has
+  * absorbed — and every index probe and fold `require`s the increment's
+  * ids STRICTLY ABOVE it. The contract this enforces is monotone crawl
+  * ids, and the reason it must fail loudly is
   * that the violation corrupts silently: a smaller increment id sharing
   * content with an indexed doc steals the union keeper, so the batch
   * equivalent would cut the CORPUS copy — text an incremental deployment

@@ -292,7 +292,9 @@ object ParagraphDedup {
   // ---- Incremental (daily-crawl) form --------------------------------
 
   /** A pre-built unit-fingerprint index — the sub-document analogue of
-    * [[graft.pipeline.Dedup.ExactSubstrIndex]], and the corpus-side state
+    * [[graft.pipeline.Dedup.ExactSubstrIndex]] (one table here, whose
+    * fold re-aggregates, where the gram index appends segments), and the
+    * corpus-side state
     * of INCREMENTAL paragraph/line dedup: one row per distinct NON-BLANK
     * unit fingerprint of the corpus, `(fp, nocc, keeper: struct<doc_id,
     * idx>)`. Fingerprints with `nocc = 1` are KEPT — a corpus-unique

@@ -53,11 +53,33 @@ object PipelineQueries {
     else stamps.max
   }
 
+  /** What [[ensurePrebuilt]] keys a prebuilt index on besides the code
+    * stamp: the sf dir, then one `relative-path length mtime` line per
+    * file under `documents.parquet` (one file or a dir of parts), so a
+    * corpus rewritten IN PLACE at the same path never reuses an index
+    * built over its old content.
+    */
+  private def corpusFingerprint(s: org.apache.spark.sql.SparkSession,
+      sfDir: String): String = {
+    val root = new org.apache.hadoop.fs.Path(s"$sfDir/documents.parquet")
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val rootPath = fs.makeQualified(root).toUri.getPath
+    val it = fs.listFiles(root, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map { f =>
+        val rel = f.getPath.toUri.getPath.stripPrefix(rootPath)
+        s"${if (rel.isEmpty) "." else rel} ${f.getLen} ${f.getModificationTime}"
+      }.toSeq.sorted
+    (sfDir +: files).mkString("\n")
+  }
+
   /** Build-once substrate for the `*_probe_only` deployment-shape rows:
     * returns a per-(corpus, code-stamp) directory under the JVM temp
     * root, running `build` only when it is absent or STALE (missing
     * `_GRAFT_READY` marker, marker older than [[pipelineClassStamp]], or
-    * marker naming a different corpus — an md5-prefix collision guard).
+    * marker holding a different [[corpusFingerprint]] — a corpus
+    * rewritten in place, or another corpus behind an md5-prefix
+    * collision).
     * The flagship incremental rows rebuild their corpus index INSIDE the
     * timed query (the honest oracle shape, but a cost deployment pays
     * once then amortizes over every daily increment); their probe-only
@@ -77,17 +99,27 @@ object PipelineQueries {
       new java.io.File(System.getProperty("java.io.tmpdir"), "graft_prebuilt"),
       s"${tag}_$hash")
     val ready = new java.io.File(dir, "_GRAFT_READY")
+    val fingerprint = corpusFingerprint(s, sfDir)
     val fresh = ready.exists() && ready.lastModified() >= pipelineClassStamp &&
-      scala.util.Try(java.nio.file.Files.readString(ready.toPath).trim)
-        .toOption.contains(sfDir)
+      scala.util.Try(java.nio.file.Files.readString(ready.toPath))
+        .toOption.contains(fingerprint)
     if (!fresh) {
       val p = new org.apache.hadoop.fs.Path(dir.toString)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       build(dir.toString)
-      java.nio.file.Files.writeString(ready.toPath, sfDir)
+      java.nio.file.Files.writeString(ready.toPath, fingerprint)
     }
     dir.toString
   }
+
+  /** The removal family's oracled projection: the pieces of CUT docs
+    * only, text hashed, in piece order.
+    */
+  private def cutPieceHashes(pieces: org.apache.spark.sql.DataFrame) =
+    pieces.filter(col("cut_tokens") > 0)
+      .select(col("doc_id"), col("piece_idx"), col("st"), col("en"),
+        col("n_tokens"), md5(col("text")).as("text_hash"))
+      .orderBy("doc_id", "piece_idx")
 
   /** Text statistics per language: counts are exact integers. */
   val textProfile: Q = Q.sql(
@@ -1767,11 +1799,7 @@ object PipelineQueries {
          |       md5(array_to_string(t.toks[p.pst:p.pen], ' ')) AS text_hash
          |FROM pieces p JOIN t ON t.doc_id = p.doc_id
          |ORDER BY p.doc_id, p.piece_idx""".stripMargin) { (s, dir) =>
-      Dedup.removeDupSpans(docsSpread(s, dir), ns, minLen)
-        .filter(col("cut_tokens") > 0)
-        .select(col("doc_id"), col("piece_idx"), col("st"), col("en"),
-          col("n_tokens"), md5(col("text")).as("text_hash"))
-        .orderBy("doc_id", "piece_idx")
+      cutPieceHashes(Dedup.removeDupSpans(docsSpread(s, dir), ns, minLen))
     }
   }
 
@@ -1840,11 +1868,7 @@ object PipelineQueries {
          |       md5(array_to_string(t.toks[p.pst:p.pen], ' ')) AS text_hash
          |FROM pieces p JOIN t ON t.doc_id = p.doc_id
          |ORDER BY p.doc_id, p.piece_idx""".stripMargin) { (s, dir) =>
-      Dedup.removeDupSpansExact(docsSpread(s, dir), minLen)
-        .filter(col("cut_tokens") > 0)
-        .select(col("doc_id"), col("piece_idx"), col("st"), col("en"),
-          col("n_tokens"), md5(col("text")).as("text_hash"))
-        .orderBy("doc_id", "piece_idx")
+      cutPieceHashes(Dedup.removeDupSpansExact(docsSpread(s, dir), minLen))
     }
   }
 
@@ -2036,22 +2060,9 @@ object PipelineQueries {
     }
   }
 
-  /** INCREMENTAL exact substring removal — the daily-crawl twin of
-    * `p_exact_substr_removal`: even doc_ids are the INDEXED CORPUS (a
-    * per-gram (nocc, keeper) state built once,
-    * `Dedup.buildExactSubstrIndex`), odd doc_ids the INCREMENT, and only
-    * the increment's cleaned pieces are emitted. The oracle is the BATCH
-    * exact-removal SQL over the UNION corpus restricted to increment docs
-    * — so the check pins the batch-equality theorem itself (increment
-    * windows see the union's occurrence counts and first-occurrence
-    * keepers through the index join), not merely some self-consistent
-    * incremental answer. Substrate-adversarial as in the batch check:
-    * DuckDB groups literal gram strings, Spark rolls 128-bit polynomials.
-    */
   /** The batch exact-removal WITH chain over ALL documents, emitting only
-    * docs matching `finalPred` — shared by both incremental substring
-    * oracles (monolithic and SEGMENTED index), which differ only in which
-    * doc slice plays the increment.
+    * docs matching `finalPred` — shared by every incremental substring
+    * oracle, which differ only in which doc slice plays the increment.
     */
   private def incrSubstrOracleSql(minLen: Int, finalPred: String): String =
     s"""WITH t AS (
@@ -2102,19 +2113,27 @@ object PipelineQueries {
        |WHERE $finalPred
        |ORDER BY p.doc_id, p.piece_idx""".stripMargin
 
+  /** INCREMENTAL exact substring removal — the daily-crawl twin of
+    * `p_exact_substr_removal`: even doc_ids are the INDEXED CORPUS (a
+    * per-gram (nocc, keeper) state built once,
+    * `Dedup.buildExactSubstrIndex`), odd doc_ids the INCREMENT, and only
+    * the increment's cleaned pieces are emitted. The oracle is the BATCH
+    * exact-removal SQL over the UNION corpus restricted to increment docs
+    * — so the check pins the batch-equality theorem itself (increment
+    * windows see the union's occurrence counts and first-occurrence
+    * keepers through the index join), not merely some self-consistent
+    * incremental answer. Substrate-adversarial as in the batch check:
+    * DuckDB groups literal gram strings, Spark rolls 128-bit polynomials.
+    */
   val incrementalSubstrRemoval: Q = {
     val minLen = 20
     Q.sql(
       "p_incremental_substr_removal",
       incrSubstrOracleSql(minLen, "p.doc_id % 2 = 1")) { (s, dir) =>
       val d = docsSpread(s, dir)
-      Dedup.incrementalRemoveDupSpansExact(
-          d.filter(col("doc_id") % 2 === 1), d.filter(col("doc_id") % 2 === 0),
-          minLen)
-        .filter(col("cut_tokens") > 0)
-        .select(col("doc_id"), col("piece_idx"), col("st"), col("en"),
-          col("n_tokens"), md5(col("text")).as("text_hash"))
-        .orderBy("doc_id", "piece_idx")
+      cutPieceHashes(Dedup.incrementalRemoveDupSpansExact(
+        d.filter(col("doc_id") % 2 === 1), d.filter(col("doc_id") % 2 === 0),
+        minLen))
     }
   }
 
@@ -2146,20 +2165,16 @@ object PipelineQueries {
         try Dedup.writeExactSubstrIndex(idx, out) finally idx.unpersist()
       }
       val idx = Dedup.readExactSubstrIndex(s, idxDir)
-      try Dedup.incrementalRemoveDupSpansExact(
-          d.filter(col("doc_id") > k), idx)
-        .filter(col("cut_tokens") > 0)
-        .select(col("doc_id"), col("piece_idx"), col("st"), col("en"),
-          col("n_tokens"), md5(col("text")).as("text_hash"))
-        .orderBy("doc_id", "piece_idx")
+      try cutPieceHashes(
+        Dedup.incrementalRemoveDupSpansExact(d.filter(col("doc_id") > k), idx))
       finally idx.unpersist()
     }
   }
 
-  /** INCREMENTAL exact substring removal against the LSM-SEGMENTED gram
-    * index (P62) — the O(increment)-fold deployment shape: doc-id
+  /** INCREMENTAL exact substring removal through the LSM lifecycle of the
+    * gram index (P62) — the O(increment)-fold deployment shape: doc-id
     * QUARTILES play four crawl days (base build over q1, two watermarked
-    * `updateSegmentedExactSubstrIndex` folds for q2/q3), then q4 is
+    * `updateExactSubstrIndex` folds for q2/q3), then q4 is
     * probed. `compactFraction = 0.7` is tuned so the LSM lifecycle's
     * BOTH halves run under the oracle: corpus-sized quartile deltas put
     * fold #1 at delta/base ≈ 1 > 0.7 (compacts — base becomes q1 ∪ q2)
@@ -2169,7 +2184,7 @@ object PipelineQueries {
     * was only spec-covered). The require pins that tuning against corpus
     * drift — loud, not silently weaker. The oracle is the BATCH removal
     * over the union restricted to q4 — pinning that merge-on-read over
-    * segments recovers exactly the monolithic occurrence counts and
+    * segments recovers exactly the union's occurrence counts and
     * first-occurrence keepers.
     */
   val incrementalSubstrRemovalSegmented: Q = {
@@ -2181,9 +2196,9 @@ object PipelineQueries {
       val d = docsSpread(s, dir)
       val mx = d.agg(max(col("doc_id"))).head.getLong(0)
       val (c1, c2, c3) = (mx / 4, mx / 2, 3 * mx / 4)
-      val idx = Dedup.updateSegmentedExactSubstrIndex(
-        Dedup.updateSegmentedExactSubstrIndex(
-          Dedup.buildSegmentedExactSubstrIndex(
+      val idx = Dedup.updateExactSubstrIndex(
+        Dedup.updateExactSubstrIndex(
+          Dedup.buildExactSubstrIndex(
             d.filter(col("doc_id") <= c1), minLen, compactFraction = 0.7),
           d.filter(col("doc_id") > c1 && col("doc_id") <= c2)),
         d.filter(col("doc_id") > c2 && col("doc_id") <= c3))
@@ -2192,12 +2207,8 @@ object PipelineQueries {
           s"(got ${idx.deltas.size} open deltas) — retune compactFraction " +
           "so the probe exercises BOTH compaction and the multi-segment " +
           "monoid merge")
-      try Dedup.incrementalRemoveDupSpansExactSegmented(
-          d.filter(col("doc_id") > c3), idx)
-        .filter(col("cut_tokens") > 0)
-        .select(col("doc_id"), col("piece_idx"), col("st"), col("en"),
-          col("n_tokens"), md5(col("text")).as("text_hash"))
-        .orderBy("doc_id", "piece_idx")
+      try cutPieceHashes(
+        Dedup.incrementalRemoveDupSpansExact(d.filter(col("doc_id") > c3), idx))
       finally idx.unpersist()
     }
   }
@@ -2205,11 +2216,11 @@ object PipelineQueries {
   /** DEPLOYMENT-SHAPE twin of [[incrementalSubstrRemovalSegmented]] —
     * AND the P62 lake lifecycle end-to-end under the DuckDB oracle: the
     * prebuilt substrate is the ON-DISK segmented store (base written
-    * once, q2/q3 appended via two `foldSegmentedExactSubstrIndexOnDisk`
+    * once, q2/q3 appended via two `foldExactSubstrIndexOnDisk`
     * crash-retryable disk folds), and the timed body is
     * read-segments + chained probe — the daily cost after a cold
     * restart. Same oracle as the in-memory sibling: merge-on-read over
-    * disk segments must recover exactly the monolithic counts/keepers.
+    * disk segments must recover exactly the union's counts/keepers.
     */
   val incrementalSubstrRemovalSegmentedProbeOnly: Q = {
     val minLen = 20
@@ -2221,23 +2232,19 @@ object PipelineQueries {
       val mx = d.agg(max(col("doc_id"))).head.getLong(0)
       val (c1, c2, c3) = (mx / 4, mx / 2, 3 * mx / 4)
       val idxDir = ensurePrebuilt(s, dir, "substr_seg_lsm") { out =>
-        val base = Dedup.buildSegmentedExactSubstrIndex(
+        val base = Dedup.buildExactSubstrIndex(
           d.filter(col("doc_id") <= c1), minLen,
           compactFraction = Double.MaxValue)
-        try Dedup.writeSegmentedExactSubstrIndex(base, out)
+        try Dedup.writeExactSubstrIndex(base, out)
         finally base.unpersist()
-        Dedup.foldSegmentedExactSubstrIndexOnDisk(s, out,
+        Dedup.foldExactSubstrIndexOnDisk(s, out,
           d.filter(col("doc_id") > c1 && col("doc_id") <= c2))
-        Dedup.foldSegmentedExactSubstrIndexOnDisk(s, out,
+        Dedup.foldExactSubstrIndexOnDisk(s, out,
           d.filter(col("doc_id") > c2 && col("doc_id") <= c3))
       }
-      val idx = Dedup.readSegmentedExactSubstrIndex(s, idxDir)
-      try Dedup.incrementalRemoveDupSpansExactSegmented(
-          d.filter(col("doc_id") > c3), idx)
-        .filter(col("cut_tokens") > 0)
-        .select(col("doc_id"), col("piece_idx"), col("st"), col("en"),
-          col("n_tokens"), md5(col("text")).as("text_hash"))
-        .orderBy("doc_id", "piece_idx")
+      val idx = Dedup.readExactSubstrIndex(s, idxDir)
+      try cutPieceHashes(
+        Dedup.incrementalRemoveDupSpansExact(d.filter(col("doc_id") > c3), idx))
       finally idx.unpersist()
     }
   }

@@ -58,21 +58,12 @@ final case class AsofEnriched(key: Long, ts: java.sql.Timestamp,
   * forward-folding substring index ([[StreamingPipeline
   * .removeDupSpansExactStream]]): `currentIndex()` always returns the
   * corpus ∪ processed-batches state — after `query` stops, that is what
-  * deployment persists for the next run, and what the caller unpersists.
+  * deployment persists ([[graft.pipeline.Dedup.writeExactSubstrIndex]])
+  * for the next run, and what the caller unpersists.
   */
 final case class StreamingRemoval(
     query: org.apache.spark.sql.streaming.StreamingQuery,
     currentIndex: () => graft.pipeline.Dedup.ExactSubstrIndex)
-
-/** [[StreamingRemoval]]'s twin over the LSM-SEGMENTED index
-  * ([[StreamingPipeline.removeDupSpansExactStreamSegmented]]): same
-  * `currentIndex()` contract, but the state is
-  * [[graft.pipeline.Dedup.SegmentedExactSubstrIndex]] — what deployment
-  * persists via [[graft.pipeline.Dedup.writeSegmentedExactSubstrIndex]].
-  */
-final case class StreamingRemovalSegmented(
-    query: org.apache.spark.sql.streaming.StreamingQuery,
-    currentIndex: () => graft.pipeline.Dedup.SegmentedExactSubstrIndex)
 
 /** A running streaming near-dup query plus the live handle to its
   * forward-folding LSH index ([[StreamingPipeline.incrementalNearDupStream]]):
@@ -285,6 +276,9 @@ object StreamingPipeline {
     * row-at-a-time state; the index itself is the cross-batch state, and
     * it lives outside the state store because it is corpus-sized and
     * disk-persistable ([[graft.pipeline.Dedup.writeExactSubstrIndex]]).
+    * The segmented index is built for exactly this loop: each fold
+    * appends one batch-sized segment — O(batch) per trigger — and
+    * compacts only when the open deltas cross the index's threshold.
     *
     * With doc ids monotone across batches (the natural crawl ordering),
     * every emitted piece is bit-equal to the BATCH
@@ -294,14 +288,14 @@ object StreamingPipeline {
     * (cut only because the index fold carried batch 1's grams into
     * batch 2's probe).
     *
-    * The caller owns `initial` (it is never unpersisted here);
-    * intermediate fold results are retired as they are superseded, and
-    * the LATEST fold stays reachable through the returned handle — after
-    * the query stops, `currentIndex()` is the corpus ∪ all-batches state,
-    * which deployment writes to disk
-    * ([[graft.pipeline.Dedup.writeExactSubstrIndex]]) as the next run's
-    * `initial` (and the caller unpersists once done with it). Micro-
-    * batches run sequentially per query, so the index swap needs no lock.
+    * Nothing is retired here: folds share frames append-only, and a
+    * compaction retires the segments it consumed itself — `initial`'s
+    * base included (see [[graft.pipeline.Dedup.ExactSubstrIndex]]
+    * ownership). After the query stops, `currentIndex()` is the
+    * corpus ∪ all-batches state, which deployment writes to disk as the
+    * next run's `initial` (and the caller unpersists once done with it).
+    * Micro-batches run sequentially per query, so the index swap needs
+    * no lock.
     */
   def removeDupSpansExactStream(docs: DataFrame,
       initial: graft.pipeline.Dedup.ExactSubstrIndex,
@@ -325,53 +319,13 @@ object StreamingPipeline {
         if (epoch > lastFolded) {
           sink(graft.pipeline.Dedup.incrementalRemoveDupSpansExact(batch, idx,
             emitOriginal = emitOriginal), epoch)
-          val next = graft.pipeline.Dedup.updateExactSubstrIndex(idx, batch)
-          next.grams.count() // materialize before retiring the superseded index
-          if (idx ne initial) idx.unpersist()
-          idx = next
+          // O(batch): the fold materializes only the new delta
+          idx = graft.pipeline.Dedup.updateExactSubstrIndex(idx, batch)
           lastFolded = epoch
         }
       }
       .start()
     StreamingRemoval(q, () => idx)
-  }
-
-  /** [[removeDupSpansExactStream]] over the LSM-SEGMENTED index (P62) —
-    * the layout built for exactly this loop: the monolithic stream pays
-    * an O(index) re-aggregate-and-materialize EVERY micro-batch (the
-    * fold IS the trigger cadence), while the segmented fold appends one
-    * batch-sized segment — O(batch) per trigger — and compacts only when
-    * the open deltas cross the index's threshold. No per-batch
-    * retire-and-swap dance either: folds share frames append-only
-    * (see [[graft.pipeline.Dedup.SegmentedExactSubstrIndex]] ownership),
-    * and compaction retires what it consumed itself. Same at-least-once
-    * epoch guard and batch-equality contract as the monolithic form;
-    * pinned in StreamingSpec against one batch run over the union.
-    */
-  def removeDupSpansExactStreamSegmented(docs: DataFrame,
-      initial: graft.pipeline.Dedup.SegmentedExactSubstrIndex,
-      sink: (DataFrame, Long) => Unit,
-      emitOriginal: Boolean = false): StreamingRemovalSegmented = {
-    @volatile var idx = initial
-    var lastFolded = Long.MinValue
-    val q = docs.writeStream
-      .outputMode(OutputMode.Append())
-      // same at-least-once rule as the monolithic twin: a replayed epoch
-      // skips WHOLE (probe included) — its pieces were already emitted,
-      // and the probe's watermark check would reject the replayed ids
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        if (epoch > lastFolded) {
-          sink(graft.pipeline.Dedup.incrementalRemoveDupSpansExactSegmented(
-            batch, idx, emitOriginal = emitOriginal), epoch)
-          // O(batch): materializes only the new delta (inside update);
-          // superseded handles share every frame with the new one, so
-          // there is nothing to retire here
-          idx = graft.pipeline.Dedup.updateSegmentedExactSubstrIndex(idx, batch)
-          lastFolded = epoch
-        }
-      }
-      .start()
-    StreamingRemovalSegmented(q, () => idx)
   }
 
   /** Streaming incremental NEAR-DUP detection (P46's stream form) — the
@@ -489,6 +443,11 @@ object StreamingPipeline {
     * same-process retries are guarded by epoch, exactly as in
     * [[removeDupSpansExactStream]] — a restart from checkpoint must pair
     * a re-read index with the offsets it was folded to.
+    *
+    * Each superseded handle is retired with `retireSuperseded` — the
+    * rebuilt paragraph half only: the folded gram half shares its
+    * segments with the handle it came from, so unpersisting the old
+    * composite whole would drop segments the live index still reads.
     */
   def cleanCorpusStream(docs: DataFrame,
       initial: graft.pipeline.CleanPipeline.CleanIndex,
@@ -507,9 +466,10 @@ object StreamingPipeline {
         if (epoch > lastFolded) {
           val next = graft.pipeline.CleanPipeline
             .updateCleanIndexWith(idx, batch, cleanedBatch, "doc_id", "text")
-          // materialize both halves before retiring the superseded index
-          next.para.units.count(); next.substr.grams.count()
-          if (idx ne initial) idx.unpersist()
+          // materialize the rebuilt half before retiring the superseded
+          // one (the substring fold materializes its own delta)
+          next.para.units.count()
+          if (idx ne initial) idx.retireSuperseded()
           idx = next
           lastFolded = epoch
         }
@@ -528,8 +488,8 @@ object StreamingPipeline {
     * into the paragraph half, CLEANED batch reps into the LSH half, batch
     * SURVIVORS into the gram half). The probe is derived ONCE per trigger
     * and shared between the sink path and the fold (the derive-once
-    * contract of `fullCleanProbe`). Same at-least-once/epoch-guard notes
-    * as [[cleanCorpusStream]].
+    * contract of `fullCleanProbe`). Same at-least-once/epoch-guard and
+    * retirement notes as [[cleanCorpusStream]].
     */
   def fullCleanCorpusStream(docs: DataFrame,
       initial: graft.pipeline.CleanPipeline.FullCleanIndex,
@@ -545,11 +505,12 @@ object StreamingPipeline {
         if (epoch > lastFolded) {
           val next = graft.pipeline.CleanPipeline
             .updateFullCleanIndexWith(idx, batch, probe, "doc_id", "text")
-          // materialize all halves before retiring the superseded index
-          next.para.units.count(); next.substr.grams.count()
+          // materialize the rebuilt halves before retiring the superseded
+          // ones (the substring fold materializes its own delta)
+          next.para.units.count()
           next.nearDup.docStore.count(); next.nearDup.bands.count()
           next.corpusFps.count()
-          if (idx ne initial) idx.unpersist()
+          if (idx ne initial) idx.retireSuperseded()
           idx = next
           lastFolded = epoch
         }

@@ -14,8 +14,6 @@ import java.nio.file.{Files, Paths}
   *                            materialization (context, paid once)
   *   - `para_fold_sec`      — updateParagraphIndex: index ∪ increment-agg
   *                            re-aggregate (index-sized exchange)
-  *   - `substr_fold_sec`    — updateExactSubstrIndex: same shape over the
-  *                            survivor gram index
   *   - `fullclean_fold_sec` — updateFullCleanIndex end-to-end (all three
   *                            halves + the fp set), probe derived once
   *   - `fp_union_distinct_sec` / `fp_anti_append_sec` — A/B of the fp-set
@@ -24,16 +22,10 @@ import java.nio.file.{Files, Paths}
   *                            vs the shipped anti-join append (increment
   *                            fps minus present, appended — the corpus
   *                            side streams through the join unchanged)
-  *   - `substr_seg_fold_sec` — the LSM-SEGMENTED gram fold (P62): the
-  *                            same survivors appended as ONE immutable
-  *                            increment-sized segment, vs
-  *                            `substr_fold_sec`'s monolithic re-aggregate
-  *   - `substr_probe_mono_sec` / `substr_probe_seg_sec` — the segmented
-  *                            store's probe READ TAX: the same increment
-  *                            probed against identical index content held
-  *                            monolithic vs as base + 3 open segments
-  *                            (chained shuffled-hash probe — the shipped
-  *                            shape)
+  *   - `substr_seg_fold_sec` — updateExactSubstrIndex (P62): the
+  *                            survivors appended as ONE delta segment
+  *   - `substr_probe_seg_sec` — the probe against base + 3 open delta
+  *                            segments (the chained-join read tax)
   *   - `substr_seg_disk_fold_sec` / `substr_probe_seg_cold_sec` — the
   *                            ON-DISK lifecycle: one crash-retryable
   *                            disk fold (segment dir + atomic meta swap)
@@ -90,13 +82,15 @@ object FoldProbe {
     val buildSec = timed {
       idx = P.buildFullCleanIndex(corpus)
       idx.para.units.count(); idx.nearDup.docStore.count()
-      idx.nearDup.bands.count(); idx.substr.grams.count()
+      idx.nearDup.bands.count()
+      // the base count seeds the compaction threshold the folds read
+      idx = idx.copy(substr = idx.substr.copy(baseRows = idx.substr.base.count()))
       idx.corpusFps.count()
     }
     val idxSizes = Map(
       "para_units" -> idx.para.units.count(),
       "neardup_bands" -> idx.nearDup.bands.count(),
-      "substr_grams" -> idx.substr.grams.count(),
+      "substr_grams" -> idx.substr.baseRows,
       "corpus_fps" -> idx.corpusFps.count())
 
     // derive the probe once (fold input) — NOT part of any fold leg
@@ -108,13 +102,10 @@ object FoldProbe {
     val paraFold = minOf {
       PD.updateParagraphIndex(idx.para, inc).units.count()
     }
-    val substrFold = minOf {
-      D.updateExactSubstrIndex(idx.substr, probe.survivors).grams.count()
-    }
     val fullFold = minOf {
       val f = P.updateFullCleanIndexWith(idx, inc, probe, "doc_id", "text")
       f.para.units.count(); f.nearDup.docStore.count()
-      f.nearDup.bands.count(); f.substr.grams.count(); f.corpusFps.count()
+      f.nearDup.bands.count(); f.corpusFps.count()
     }
     // fp-set fold A/B on identical inputs
     val incFpsAll = probe.cleanedInc
@@ -128,27 +119,23 @@ object FoldProbe {
           .join(idx.corpusFps, Seq("fp"), "left_anti")).count()
     }
 
-    // LSM-SEGMENTED substr fold A/B (P62): the same survivors folded as
-    // ONE append segment — O(increment) — vs substr_fold_sec's monolithic
-    // O(index) re-aggregate above. compactFraction=MaxValue isolates the
-    // append; compaction is the amortized half and costs exactly one
-    // monolithic fold.
-    val segBase = D.segmentedFrom(idx.substr, Double.MaxValue)
+    // segmented substr fold (P62): the survivors folded as ONE append
+    // segment — O(increment). compactFraction=MaxValue isolates the
+    // append; compaction is the amortized O(index) half.
+    val segBase = idx.substr.copy(compactFraction = Double.MaxValue)
     val substrSegFold = minOf {
-      D.updateSegmentedExactSubstrIndex(segBase, probe.survivors)
+      D.updateExactSubstrIndex(segBase, probe.survivors)
     }
-    // probe READ-TAX A/B: identical logical index content — the lower
-    // half of the increment folded in — held monolithic vs as base + 3
-    // open delta segments; the upper half (ids above, watermark-monotone)
-    // is probed against each. RESIDENCY DISCIPLINE: eviction is one-way
-    // (evicted blocks never re-promote), and the fullclean fold leg above
-    // materialized a second full index set — at ×1000 that pushes most of
-    // the shared gram store to disk, so probing through it bills the
-    // DISFAVORED side ~10 GB of disk reads while the other side streams
-    // its freshly-built in-memory store (the first two cuts of this leg
-    // read 16× and 18× "read tax" that was residency, not plan). Both
-    // sides therefore run against a FRESH memory-resident copy of the
-    // base, each materialized after everything unneeded is retired.
+    // probe READ TAX: the lower half of the increment folded in as 3 open
+    // delta segments; the upper half (ids above, watermark-monotone) is
+    // probed. RESIDENCY DISCIPLINE: eviction is one-way (evicted blocks
+    // never re-promote), and the fullclean fold leg above materialized a
+    // second full index set — at ×1000 that pushes most of the gram store
+    // to disk, and probing through it prices ~10 GB of disk reads instead
+    // of the plan (earlier cuts of this leg read 16× and 18× "read tax"
+    // that was residency). The probe therefore runs against a FRESH
+    // memory-resident copy of the base, materialized after everything
+    // unneeded is retired.
     idx.para.unpersist(); idx.nearDup.unpersist()
     idx.corpusFps.unpersist(blocking = false)
     val pcut = inc.select(col("doc_id")).orderBy(col("doc_id").desc)
@@ -164,20 +151,18 @@ object FoldProbe {
       s"read-tax legs need >= 3 fold-half ids, got ${foldIds.length} " +
         s"(incRows=$incRows too small or degenerate doc_id distribution)")
     val (t1, t2) = (foldIds(foldIds.length / 3), foldIds(2 * foldIds.length / 3))
-    val freshBase = idx.substr.grams.where(lit(true))
+    val freshBase = idx.substr.base.where(lit(true))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     freshBase.count()
-    val baseIdx = D.ExactSubstrIndex(freshBase, idx.substr.minLen,
-      idx.substr.maxDocId)
+    val baseIdx = segBase.copy(base = freshBase)
     idx.substr.unpersist()
     val segIdx = Seq(
         incFold.filter(col("doc_id") < t1),
         incFold.filter(col("doc_id") >= t1 && col("doc_id") < t2),
         incFold.filter(col("doc_id") >= t2))
-      .foldLeft(D.segmentedFrom(baseIdx, Double.MaxValue))(
-        (i, d) => D.updateSegmentedExactSubstrIndex(i, d))
+      .foldLeft(baseIdx)((i, d) => D.updateExactSubstrIndex(i, d))
     val substrProbeSeg = minOf {
-      D.incrementalRemoveDupSpansExactSegmented(incProbe, segIdx)
+      D.incrementalRemoveDupSpansExact(incProbe, segIdx)
         .write.format("noop").mode("overwrite").save()
     }
 
@@ -195,32 +180,23 @@ object FoldProbe {
     //     cluster-into-cache + chained probe — what the first increment
     //     after a restart actually costs
     val diskDir = Files.createTempDirectory("foldprobe_segdisk").toString
-    D.writeSegmentedExactSubstrIndex(
-      D.SegmentedExactSubstrIndex(segIdx.base, segIdx.baseRows,
-        segIdx.deltas.take(2), segIdx.deltaRows.take(2), segIdx.minLen,
-        t2 - 1, segIdx.compactFraction),
+    D.writeExactSubstrIndex(
+      segIdx.copy(deltas = segIdx.deltas.take(2),
+        deltaRows = segIdx.deltaRows.take(2), maxDocId = t2 - 1),
       diskDir)
     val substrSegDiskFold = isolated {
-      D.foldSegmentedExactSubstrIndexOnDisk(spark, diskDir,
+      D.foldExactSubstrIndexOnDisk(spark, diskDir,
         incFold.filter(col("doc_id") >= t2))
     }
     val substrProbeSegCold = minOf {
-      val h = D.readSegmentedExactSubstrIndex(spark, diskDir)
-      D.incrementalRemoveDupSpansExactSegmented(incProbe, h)
+      val h = D.readExactSubstrIndex(spark, diskDir)
+      D.incrementalRemoveDupSpansExact(incProbe, h)
         .write.format("noop").mode("overwrite").save()
     }
     new org.apache.hadoop.fs.Path(diskDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(diskDir), true)
-    segIdx.deltas.foreach(_.unpersist(blocking = false))
-    val monoIdx = D.updateExactSubstrIndex(baseIdx, incFold)
-    monoIdx.grams.count()
-    val substrProbeMono = minOf {
-      D.incrementalRemoveDupSpansExact(incProbe, monoIdx)
-        .write.format("noop").mode("overwrite").save()
-    }
-    monoIdx.unpersist()
-    freshBase.unpersist(blocking = false)
+    segIdx.unpersist()
 
     val steal = graft.Bench.stealPctSince(stat0)
     val sizesJson = idxSizes.toSeq.sortBy(_._1)
@@ -229,12 +205,11 @@ object FoldProbe {
       s"""{"metric":"fold_probe","sf":"$sfDir","shuffle_partitions":$parts,""" +
         s""""reps":$reps,"inc_rows":$incRows,"build_sec":$buildSec,""" +
         s""""index_sizes":$sizesJson,"para_fold_sec":$paraFold,""" +
-        s""""substr_fold_sec":$substrFold,"fullclean_fold_sec":$fullFold,""" +
+        s""""fullclean_fold_sec":$fullFold,""" +
         s""""fp_union_distinct_sec":$fpUnionDistinct,""" +
         s""""fp_anti_append_sec":$fpAntiAppend,""" +
         s""""substr_seg_fold_sec":$substrSegFold,""" +
         s""""substr_seg_disk_fold_sec":$substrSegDiskFold,""" +
-        s""""substr_probe_mono_sec":$substrProbeMono,""" +
         s""""substr_probe_seg_sec":$substrProbeSeg,""" +
         s""""substr_probe_seg_cold_sec":$substrProbeSegCold,""" +
         s""""steal_pct":${steal.map(_.toString).getOrElse("null")}}"""

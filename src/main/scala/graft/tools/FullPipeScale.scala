@@ -94,7 +94,7 @@ object FullPipeScale {
       idx = P.buildFullCleanIndex(low, minLen = 20)
       // materialize every half — deployment writes them out
       idx.para.units.count(); idx.nearDup.docStore.count()
-      idx.nearDup.bands.count(); idx.substr.grams.count()
+      idx.nearDup.bands.count(); idx.substr.base.count()
       idx.corpusFps.count()
     }
     // between probe reps, unpersist ONLY the probe's own checkpointed

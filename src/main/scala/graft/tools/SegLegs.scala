@@ -42,20 +42,20 @@ object SegLegs {
       val mx = leg(s"${p}max_id") { d.agg(max(col("doc_id"))).head.getLong(0) }
       val (c1, c2, c3) = (mx / 4, mx / 2, 3 * mx / 4)
       val base = leg(s"${p}build_q1") {
-        D.buildSegmentedExactSubstrIndex(
+        D.buildExactSubstrIndex(
           d.filter(col("doc_id") <= c1), minLen, compactFraction = 0.7)
       }
       val f1 = leg(s"${p}fold_q2_compact") {
-        D.updateSegmentedExactSubstrIndex(base,
+        D.updateExactSubstrIndex(base,
           d.filter(col("doc_id") > c1 && col("doc_id") <= c2))
       }
       val f2 = leg(s"${p}fold_q3_open") {
-        D.updateSegmentedExactSubstrIndex(f1,
+        D.updateExactSubstrIndex(f1,
           d.filter(col("doc_id") > c2 && col("doc_id") <= c3))
       }
       require(f2.deltas.size == 1, s"expected 1 open delta, got ${f2.deltas.size}")
       leg(s"${p}probe_q4") {
-        D.incrementalRemoveDupSpansExactSegmented(
+        D.incrementalRemoveDupSpansExact(
             d.filter(col("doc_id") > c3), f2)
           .filter(col("cut_tokens") > 0)
           .select(col("doc_id"), col("piece_idx"), col("st"), col("en"),

@@ -10,7 +10,7 @@ import org.scalatest.BeforeAndAfterAll
   * per distinct token, md5₆₀ bit votes weighted by term frequency, bit b
   * of the fingerprint set iff vote_b > 0. Brute-forced per document here,
   * and cross-checked as whole DataFrames (`Dedup.simhash` native vs
-  * `Dedup.simhashExploded`) on a mixed corpus — including the token-free
+  * `HofTwins.simhashExploded`) on a mixed corpus — including the token-free
   * doc the exploded form silently drops and the native form NULLs.
   */
 class SimhashFpSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -78,7 +78,7 @@ class SimhashFpSpec extends AnyFunSuite with BeforeAndAfterAll {
     bothPaths {
       val native = graft.pipeline.SimHash.simhash(corpus)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      val exploded = graft.pipeline.SimHash.simhashExploded(corpus)
+      val exploded = graft.pipeline.HofTwins.simhashExploded(corpus)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(native == exploded)
       assert(!native.contains(100L) && !native.contains(101L),

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.util.Det
 
 /** Interpreted regex / higher-order-function definitions of the native text
   * kernels. Each is the independently-derived form its native expression
@@ -74,5 +75,27 @@ object HofTwins {
             (a.getField("cur") + x.getField("tl") - 1L).as("en"))).as("arr"),
         (a.getField("cur") + x.getField("tl") + x.getField("sl")).as("cur")),
       a => a.getField("arr"))
+  }
+
+  /** Exploded formulation of [[SimHash.simhash]] — tf groupBy + 60-column
+    * vote aggregation — the independently-derived twin the native
+    * kernel is pinned against (SimhashFpSpec).
+    */
+  def simhashExploded(docs: DataFrame, idCol: String = "doc_id",
+      textCol: String = "text"): DataFrame = {
+    val toks = docs.select(col(idCol).as("doc_id"),
+        explode(TextPipeline.tokens(col(textCol))).as("tok"))
+      .groupBy("doc_id", "tok").agg(count(lit(1)).as("w"))
+      .select(col("doc_id"), col("w"), Det.md5Hash60(col("tok")).as("h"))
+    // all 60 bit-votes in one wide aggregation (exploding a bit column would
+    // shuffle 60× the rows); the fingerprint assembles from the vote columns
+    val voteAggs = (0 until 60).map(b =>
+      sum(expr(s"w * ((shiftright(h, $b) & 1) * 2 - 1)")).as(s"v_$b"))
+    val assemble = (0 until 60).map(b =>
+      s"(CASE WHEN v_$b > 0 THEN shiftleft(cast(1 as bigint), $b) ELSE cast(0 as bigint) END)")
+      .mkString(" + ")
+    toks.groupBy("doc_id")
+      .agg(voteAggs.head, voteAggs.tail: _*)
+      .select(col("doc_id"), expr(assemble).as("simhash"))
   }
 }

@@ -1168,7 +1168,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = corpus.toDF("doc_id", "text")
     val (dayA, dayB, dayC) = (df.filter(col("doc_id") % 3 === 0),
       df.filter(col("doc_id") % 3 === 1), df.filter(col("doc_id") % 3 === 2))
-    def gramSet(idx: Dedup.ExactSubstrIndex) = idx.grams.collect()
+    def gramSet(idx: Dedup.ExactSubstrIndex) = idx.merged.collect()
       .map(r => (r.getAs[Long]("g1"), r.getAs[Long]("g2"),
         r.getAs[Long]("nocc"),
         (r.getStruct(3).getLong(0), r.getStruct(3).getLong(1)))).toSet
@@ -1232,63 +1232,64 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(batch.nonEmpty, "degenerate fixture: probe day cut nothing")
 
     // leg 1: three append folds, never compacting — probe over 4 open
-    // segments must equal the monolithic incremental AND the batch run
+    // segments must equal a default-threshold (compacting) chain AND the
+    // batch run
     val segOpen = Seq(days(1), days(2), days(3)).foldLeft(
-      Dedup.buildSegmentedExactSubstrIndex(days(0), minLen,
+      Dedup.buildExactSubstrIndex(days(0), minLen,
         compactFraction = Double.MaxValue))(
-      Dedup.updateSegmentedExactSubstrIndex(_, _))
+      Dedup.updateExactSubstrIndex(_, _))
     assert(segOpen.deltas.size == 3 && segOpen.maxDocId == 39L,
       s"expected 3 open deltas at wm 39, got ${segOpen.deltas.size} @ ${segOpen.maxDocId}")
     val segProbe = shape(
-      Dedup.incrementalRemoveDupSpansExactSegmented(probeDay, segOpen))
+      Dedup.incrementalRemoveDupSpansExact(probeDay, segOpen))
     assert(segProbe == batch, "segmented probe (4 segments) diverged from batch")
-    val mono = Seq(days(1), days(2), days(3)).foldLeft(
+    val compacting = Seq(days(1), days(2), days(3)).foldLeft(
       Dedup.buildExactSubstrIndex(days(0), minLen))(
       Dedup.updateExactSubstrIndex(_, _))
-    assert(shape(Dedup.incrementalRemoveDupSpansExact(probeDay, mono))
-      == segProbe, "segmented and monolithic probes diverged")
+    assert(shape(Dedup.incrementalRemoveDupSpansExact(probeDay, compacting))
+      == segProbe, "open-delta and default-threshold probes diverged")
 
     // leg 2: compactFraction = 0 forces compaction on every fold — the
-    // final state is ONE base equal to a fresh monolithic build, gram for
-    // gram, and the probe is unchanged
+    // final state is ONE base equal to a fresh build, gram for gram, and
+    // the probe is unchanged
     val segCompacted = Seq(days(1), days(2), days(3)).foldLeft(
-      Dedup.buildSegmentedExactSubstrIndex(days(0), minLen,
-        compactFraction = 0.0))(Dedup.updateSegmentedExactSubstrIndex(_, _))
+      Dedup.buildExactSubstrIndex(days(0), minLen,
+        compactFraction = 0.0))(Dedup.updateExactSubstrIndex(_, _))
     assert(segCompacted.deltas.isEmpty, "compaction left open deltas")
     val fresh = Dedup.buildExactSubstrIndex(
       days.take(4).reduce(_ unionByName _), minLen)
-    assert(gramSet(segCompacted.base) == gramSet(fresh.grams),
-      "compacted base diverged from a fresh monolithic build")
-    assert(shape(Dedup.incrementalRemoveDupSpansExactSegmented(
+    assert(gramSet(segCompacted.base) == gramSet(fresh.base),
+      "compacted base diverged from a fresh build")
+    assert(shape(Dedup.incrementalRemoveDupSpansExact(
       probeDay, segCompacted)) == batch, "post-compaction probe diverged")
 
     // leg 3: disk round-trip with an APPEND-ONLY on-disk fold — write 2
     // segments, fold day 3 touching only one new segment dir + meta,
     // reload (3 segments, advanced watermark), fold day 4 in memory on
     // the reloaded handle, probe
-    val twoSeg = Dedup.updateSegmentedExactSubstrIndex(
-      Dedup.buildSegmentedExactSubstrIndex(days(0), minLen,
+    val twoSeg = Dedup.updateExactSubstrIndex(
+      Dedup.buildExactSubstrIndex(days(0), minLen,
         compactFraction = Double.MaxValue), days(1))
     val tmp = java.nio.file.Files
       .createTempDirectory("graft_seg_substr_idx").toString
-    Dedup.writeSegmentedExactSubstrIndex(twoSeg, tmp, nBuckets = 4)
-    Dedup.foldSegmentedExactSubstrIndexOnDisk(spark, tmp, days(2))
-    val loaded = Dedup.readSegmentedExactSubstrIndex(spark, tmp)
+    Dedup.writeExactSubstrIndex(twoSeg, tmp, nBuckets = 4)
+    Dedup.foldExactSubstrIndexOnDisk(spark, tmp, days(2))
+    val loaded = Dedup.readExactSubstrIndex(spark, tmp)
     assert(loaded.segments.size == 3 && loaded.maxDocId == 29L &&
       loaded.minLen == minLen,
       s"reloaded index: ${loaded.segments.size} segments @ ${loaded.maxDocId}")
-    val loadedFolded = Dedup.updateSegmentedExactSubstrIndex(loaded, days(3))
-    assert(shape(Dedup.incrementalRemoveDupSpansExactSegmented(
+    val loadedFolded = Dedup.updateExactSubstrIndex(loaded, days(3))
+    assert(shape(Dedup.incrementalRemoveDupSpansExact(
       probeDay, loadedFolded)) == batch,
       "probe via disk-folded + reloaded index diverged from batch")
     // watermark: an already-indexed id must fail loudly, in memory and on disk
     intercept[IllegalArgumentException] {
-      Dedup.updateSegmentedExactSubstrIndex(loadedFolded, days(1))
+      Dedup.updateExactSubstrIndex(loadedFolded, days(1))
     }
     intercept[IllegalArgumentException] {
-      Dedup.foldSegmentedExactSubstrIndexOnDisk(spark, tmp, days(1))
+      Dedup.foldExactSubstrIndexOnDisk(spark, tmp, days(1))
     }
-    segOpen.unpersist(); mono.unpersist(); segCompacted.unpersist()
+    segOpen.unpersist(); compacting.unpersist(); segCompacted.unpersist()
     fresh.unpersist(); loadedFolded.unpersist()
   }
 
@@ -1304,15 +1305,15 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fsPath = new org.apache.hadoop.fs.Path("/")
     val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def segCount(dir: String): Int =
-      Dedup.readSegmentedExactSubstrIndex(spark, dir).segments.size
+      Dedup.readExactSubstrIndex(spark, dir).segments.size
 
     // baseline: base over days 0-9, one clean disk fold of 10-19
-    val base = Dedup.buildSegmentedExactSubstrIndex(slice(0, 10), minLen,
+    val base = Dedup.buildExactSubstrIndex(slice(0, 10), minLen,
       compactFraction = Double.MaxValue)
     val tmp = java.nio.file.Files
       .createTempDirectory("graft_seg_recover").toString
-    Dedup.writeSegmentedExactSubstrIndex(base, tmp, nBuckets = 2)
-    Dedup.foldSegmentedExactSubstrIndexOnDisk(spark, tmp, slice(10, 20))
+    Dedup.writeExactSubstrIndex(base, tmp, nBuckets = 2)
+    Dedup.foldExactSubstrIndexOnDisk(spark, tmp, slice(10, 20))
 
     // crash shape 1: segment renamed into place but meta never swapped
     // (an orphan dir meta does not list) — the pre-fix mode("errorifexists")
@@ -1321,7 +1322,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val orphan = new org.apache.hadoop.fs.Path(s"$tmp/seg-00002")
     fs.mkdirs(orphan)
     require(fs.exists(orphan))
-    Dedup.foldSegmentedExactSubstrIndexOnDisk(spark, tmp, slice(20, 25))
+    Dedup.foldExactSubstrIndexOnDisk(spark, tmp, slice(20, 25))
     assert(segCount(tmp) == 3, "retry over an orphan segment dir failed")
 
     // crash shape 2: an UNCOMMITTED .meta.tmp (no _SUCCESS — crash mid
@@ -1335,28 +1336,66 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // rename) rolls FORWARD: the fold had fully happened, so recovery
     // installs the new meta and a retry of the same increment fails
     // LOUDLY on the advanced watermark instead of double-folding
-    Dedup.foldSegmentedExactSubstrIndexOnDisk(spark, tmp, slice(25, 28))
+    Dedup.foldExactSubstrIndexOnDisk(spark, tmp, slice(25, 28))
     val meta = new org.apache.hadoop.fs.Path(s"$tmp/meta")
     require(fs.rename(meta, metaTmp)) // committed tmp (carries _SUCCESS)
     assert(segCount(tmp) == 4, "committed meta tmp must roll forward")
     intercept[IllegalArgumentException] {
-      Dedup.foldSegmentedExactSubstrIndexOnDisk(spark, tmp, slice(25, 28))
+      Dedup.foldExactSubstrIndexOnDisk(spark, tmp, slice(25, 28))
     }
 
     // the recovered index still answers correctly: probe day 28-29
     // against the disk state == the batch run over everything folded
-    val loaded = Dedup.readSegmentedExactSubstrIndex(spark, tmp)
+    val loaded = Dedup.readExactSubstrIndex(spark, tmp)
     def shape(d: DataFrame) = d.orderBy("doc_id", "piece_idx").collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("piece_idx"),
         r.getAs[Long]("st"), r.getAs[Long]("en"), r.getAs[String]("text")))
       .toSeq
     val got = shape(
-      Dedup.incrementalRemoveDupSpansExactSegmented(slice(28, 30), loaded))
+      Dedup.incrementalRemoveDupSpansExact(slice(28, 30), loaded))
     val want = shape(Dedup.removeDupSpansExact(
       df.filter(col("doc_id") < 28).unionByName(slice(28, 30)), minLen)
       .filter(col("doc_id") >= 28))
     assert(got == want, "post-recovery probe diverged from batch")
     base.unpersist(); loaded.unpersist()
+  }
+
+  test("probe-only rows rebuild their prebuilt index when the corpus is rewritten in place") {
+    val sp = spark; import sp.implicits._
+    def run25(c: Char): String = (1 to 25).map(i => s"$c$i").mkString(" ")
+    val sf = java.nio.file.Files.createTempDirectory("graft_rewritten_sf")
+    def write(corpusRun: Char): Unit =
+      ((1L to 8L).map(i => (i, s"corpus doc $i ${run25(corpusRun)} tail $i")) ++
+        Seq((9L, s"inc nine ${run25('a')} end"), (10L, s"inc ten ${run25('b')} end")))
+        .toDF("doc_id", "text").coalesce(1)
+        .write.mode("overwrite").parquet(s"$sf/documents.parquet")
+    def rows(d: DataFrame) = d.collect().map(_.toSeq).toSeq
+    val q = graft.SparkEntry.queries("p_incremental_substr_removal_probe_only")
+    try {
+      // ids 1..8 are the indexed low four-fifths, 9..10 the probed increment
+      write('a')
+      val first = rows(q(spark, sf.toString))
+      // same path, new content: the corpus now repeats doc 10's run, not 9's
+      write('b')
+      val second = rows(q(spark, sf.toString))
+      val d = spark.read.parquet(s"$sf/documents.parquet")
+      val idx = Dedup.buildExactSubstrIndex(d.filter(col("doc_id") <= 8L), 20)
+      val want =
+        try rows(Dedup.incrementalRemoveDupSpansExact(d.filter(col("doc_id") > 8L), idx)
+          .filter(col("cut_tokens") > 0)
+          .select(col("doc_id"), col("piece_idx"), col("st"), col("en"),
+            col("n_tokens"), md5(col("text")).as("text_hash"))
+          .orderBy("doc_id", "piece_idx"))
+        finally idx.unpersist()
+      assert(first.map(_.head).toSet == Set(9L) && want.map(_.head).toSet == Set(10L),
+        s"degenerate fixture: first cut ${first.map(_.head)}, fresh cut ${want.map(_.head)}")
+      assert(second == want,
+        "probe after an in-place rewrite must match a freshly built index, not the stale one")
+    } finally {
+      val fs = new org.apache.hadoop.fs.Path(sf.toString)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(new org.apache.hadoop.fs.Path(sf.toString), true)
+    }
   }
 
   test("incrementalNearDup: planted cross-side pair found; within-batch pairs suppressed") {

@@ -450,9 +450,9 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     val docs = graft.util.Tables.t(spark, dir, "documents")
     val idx = graft.pipeline.Dedup.buildExactSubstrIndex(
       docs.filter(col("doc_id") % 2 === 0), 20)
-    val f = graft.pipeline.Dedup.incrementalExactSubstrFrames(
-      docs.filter(col("doc_id") % 2 === 1), idx, "doc_id", "text",
-      keepFirst = true)
+    val f = graft.pipeline.Dedup.incrementalExactSubstrFramesOver(
+      docs.filter(col("doc_id") % 2 === 1), idx.segments, idx.minLen,
+      "doc_id", "text", keepFirst = true)
     try {
       import org.apache.spark.storage.StorageLevel
       assert(f.base.storageLevel != StorageLevel.NONE,
@@ -478,8 +478,8 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("doc_id"), col("text"))
     val mx = docs.agg(org.apache.spark.sql.functions.max(col("doc_id")))
       .head.getLong(0)
-    val idx = graft.pipeline.Dedup.updateSegmentedExactSubstrIndex(
-      graft.pipeline.Dedup.buildSegmentedExactSubstrIndex(
+    val idx = graft.pipeline.Dedup.updateExactSubstrIndex(
+      graft.pipeline.Dedup.buildExactSubstrIndex(
         docs.filter(col("doc_id") <= mx / 3), minLen = 20,
         compactFraction = Double.MaxValue),
       docs.filter(col("doc_id") > mx / 3 && col("doc_id") <= 2 * mx / 3))
@@ -493,12 +493,12 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
         "every segment probe must be an equi-join on the gram hash")
       assert(p.contains("partial_count") || p.contains("partial_min"),
         "increment per-gram aggregate must map-side combine")
-      // the read-tax discipline: k CHAINED left joins (the monolithic
+      // the read-tax discipline: k CHAINED left joins (the single-segment
       // probe's shape, once per segment — the increment side builds, the
       // segment streams) with the cross-segment monoid folded ROW-LOCALLY
       // — no Union and no extra aggregate on the index path (a union +
       // re-aggregate cut of this plan de-vectorized the segment scans to
-      // ~15x the monolithic probe at x1000; FOLDPROBE prices the shape)
+      // ~15x the single-segment probe at x1000; FOLDPROBE prices the shape)
       assert(!p.contains("Union"),
         s"segment merge must be chained joins + row-local monoid, not a union:\n$p")
       assert(p.linesIterator.count(_.contains("ShuffledHashJoin")) >= 2,
@@ -541,14 +541,14 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     try for (parts <- Seq("32", "512")) {
       spark.conf.set("spark.sql.shuffle.partitions", parts)
       spark.conf.set("spark.sql.adaptive.enabled", "true")
-      val seg = graft.pipeline.Dedup.updateSegmentedExactSubstrIndex(
-        graft.pipeline.Dedup.updateSegmentedExactSubstrIndex(
-          graft.pipeline.Dedup.buildSegmentedExactSubstrIndex(
+      val seg = graft.pipeline.Dedup.updateExactSubstrIndex(
+        graft.pipeline.Dedup.updateExactSubstrIndex(
+          graft.pipeline.Dedup.buildExactSubstrIndex(
             docs.filter(col("doc_id") <= mx / 4), minLen = 20,
             compactFraction = Double.MaxValue),
           docs.filter(col("doc_id") > mx / 4 && col("doc_id") <= mx / 2)),
         docs.filter(col("doc_id") > mx / 2 && col("doc_id") <= 3 * mx / 4))
-      val mono = graft.pipeline.Dedup.buildSegmentedExactSubstrIndex(
+      val mono = graft.pipeline.Dedup.buildExactSubstrIndex(
         docs.filter(col("doc_id") <= 3 * mx / 4), minLen = 20,
         compactFraction = Double.MaxValue)
       val probe = docs.filter(col("doc_id") > 3 * mx / 4)

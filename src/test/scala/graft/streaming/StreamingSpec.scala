@@ -368,7 +368,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val finalIdx = h.currentIndex()
     val fresh = graft.pipeline.Dedup.buildExactSubstrIndex(
       corpus.unionByName((batch1 ++ batch2).toDF("doc_id", "text")), minLen)
-    def gramSet(i: graft.pipeline.Dedup.ExactSubstrIndex) = i.grams.collect()
+    def gramSet(i: graft.pipeline.Dedup.ExactSubstrIndex) = i.merged.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getAs[Long]("nocc"),
         (r.getStruct(3).getLong(0), r.getStruct(3).getLong(1)))).toSet
     assert(gramSet(finalIdx) == gramSet(fresh),
@@ -405,12 +405,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("piece_idx"),
         r.getAs[Long]("st"), r.getAs[Long]("en"), r.getAs[Long]("n_tokens"),
         r.getAs[Long]("cut_tokens"), r.getAs[String]("text"))).toSeq
-    val idx0 = graft.pipeline.Dedup.buildSegmentedExactSubstrIndex(
+    val idx0 = graft.pipeline.Dedup.buildExactSubstrIndex(
       corpus, minLen, compactFraction = Double.MaxValue)
     val got = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Long, Long, Long, Long, String)]
     val input = MemoryStream[(Long, String)]
-    val h = StreamingPipeline.removeDupSpansExactStreamSegmented(
+    val h = StreamingPipeline.removeDupSpansExactStream(
       input.toDF().toDF("doc_id", "text"), idx0,
       (pieces, _) => got.synchronized { got ++= shape(pieces.collect()) })
     try {
@@ -433,16 +433,16 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cutDocs = got.filter(_._6 > 0).map(_._1).toSet
     assert(cutDocs == Set(10L, 20L),
       s"docs 10 (vs base) and 20 (vs batch-1 delta) must be cut: $cutDocs")
-    // compacting the surviving handle recovers the monolithic state — the
+    // compacting the surviving handle recovers the one-base state — the
     // periodic deployment job — gram for gram vs a fresh union build
     val compacted = graft.pipeline.Dedup
-      .compactSegmentedExactSubstrIndex(finalIdx)
+      .compactExactSubstrIndex(finalIdx)
     val fresh = graft.pipeline.Dedup.buildExactSubstrIndex(
       corpus.unionByName((batch1 ++ batch2).toDF("doc_id", "text")), minLen)
     def gramSet(grams: org.apache.spark.sql.DataFrame) = grams.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getAs[Long]("nocc"),
         (r.getStruct(3).getLong(0), r.getStruct(3).getLong(1)))).toSet
-    assert(gramSet(compacted.base) == gramSet(fresh.grams),
+    assert(gramSet(compacted.base) == gramSet(fresh.base),
       "compacted post-stream index must equal a fresh build over the union")
     compacted.unpersist(); fresh.unpersist()
   }
@@ -567,7 +567,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     def setEqual(a: org.apache.spark.sql.DataFrame,
                  b: org.apache.spark.sql.DataFrame): Boolean =
       a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
-    assert(setEqual(finalIdx.substr.grams, freshFull.substr.grams),
+    assert(setEqual(finalIdx.substr.merged, freshFull.substr.merged),
       "folded substring-gram half diverges from a fresh build over the union")
     assert(finalIdx.substr.maxDocId == freshFull.substr.maxDocId,
       "substring-half watermark diverges from the fresh build")
@@ -575,6 +575,47 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       "folded exact-fingerprint set diverges from a fresh build over the union")
     freshFull.unpersist()
     finalIdx.unpersist(); idxB.unpersist(); idxA.unpersist(); idx0.unpersist()
+  }
+
+  test("streaming FULL cleanup retires superseded halves only: the live gram segments stay cached across compaction") {
+    val sp = spark
+    import sp.implicits._
+    implicit val sqlCtx = sp.sqlContext
+    def run(c: Char, n: Int): String = (1 to n).map(i => s"$c$i").mkString(" ")
+    // gram-segment rows at minLen 20: the corpus base holds 41; batch 1
+    // adds 81 (> 0.25 × 41: the fold compacts, base 122), batches 2 and 3
+    // add 11 and 16 (27 <= 0.25 × 122: both stay open deltas)
+    val corpus = Seq((0L, run('a', 60))).toDF("doc_id", "text")
+    val batches = Seq(Seq((10L, run('b', 100))), Seq((20L, run('c', 30))),
+      Seq((30L, run('d', 35))))
+    val idx0 = graft.pipeline.CleanPipeline.buildFullCleanIndex(corpus)
+    val input = MemoryStream[(Long, String)]
+    val h = StreamingPipeline.fullCleanCorpusStream(
+      input.toDF().toDF("doc_id", "text"), idx0, (pieces, _) => pieces.count())
+    try batches.foreach { b =>
+      input.addData(b: _*); h.query.processAllAvailable()
+    } finally h.query.stop()
+    val finalIdx = h.currentIndex()
+    val substr = finalIdx.substr
+    assert(substr.deltas.nonEmpty && substr.deltas.size < batches.size,
+      s"fixture must compact once and leave a delta open: ${substr.deltas.size} deltas")
+    assert(substr.segments.forall(
+        _.storageLevel != org.apache.spark.storage.StorageLevel.NONE),
+      "a superseded handle's retirement dropped a segment the live index reads")
+    // the live index probes exactly like a fresh build over the union
+    val probe = Seq((40L, s"${run('e', 50)} ${run('a', 25)} ${run('d', 25)}"))
+      .toDF("doc_id", "text")
+    val fresh = graft.pipeline.CleanPipeline.buildFullCleanIndex(
+      corpus.unionByName(batches.flatten.toDF("doc_id", "text")))
+    def shape(d: org.apache.spark.sql.DataFrame) = d
+      .orderBy("doc_id", "piece_idx").collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("piece_idx"),
+        r.getAs[Long]("cut_tokens"), r.getAs[String]("text"))).toSeq
+    val got = shape(graft.pipeline.CleanPipeline.incrementalFullClean(probe, finalIdx))
+    assert(got.exists(_._3 > 0), s"probe doc must lose its corpus and batch-3 runs: $got")
+    assert(got == shape(graft.pipeline.CleanPipeline.incrementalFullClean(probe, fresh)),
+      "live streamed index probes differently from a fresh build over the union")
+    fresh.unpersist(); finalIdx.unpersist(); idx0.unpersist()
   }
 
   test("streaming composed cleanup: both index halves fold, every batch batch-equal") {
@@ -617,7 +658,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     def unitSet(i: graft.pipeline.ParagraphDedup.ParagraphIndex) =
       i.units.collect().map(r => (r.getLong(0), r.getLong(1),
         (r.getStruct(2).getLong(0), r.getStruct(2).getLong(1)))).toSet
-    def gramSet(i: graft.pipeline.Dedup.ExactSubstrIndex) = i.grams.collect()
+    def gramSet(i: graft.pipeline.Dedup.ExactSubstrIndex) = i.merged.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getAs[Long]("nocc"),
         (r.getStruct(3).getLong(0), r.getStruct(3).getLong(1)))).toSet
     assert(unitSet(finalIdx.para) == unitSet(fresh.para),

@@ -67,14 +67,12 @@ def main():
                      "cold-restart probe)"),
         "legs": {
             "para_fold_sec": "updateParagraphIndex (index-union-increment re-aggregate)",
-            "substr_fold_sec": "updateExactSubstrIndex over the probe's survivors (monolithic O(index) re-aggregate)",
             "fullclean_fold_sec": "updateFullCleanIndex end-to-end (all halves + fp set), probe pre-derived",
             "fp_union_distinct_sec": "RETIRED fp fold: union + distinct over the corpus-sized set",
             "fp_anti_append_sec": "SHIPPED fp fold: increment-distinct anti-join append",
-            "substr_seg_fold_sec": "P62 LSM-SEGMENTED fold: the same survivors appended as ONE immutable increment-sized segment (updateSegmentedExactSubstrIndex, compaction disabled to isolate the append)",
-            "substr_seg_disk_fold_sec": "P62 ON-DISK fold: foldSegmentedExactSubstrIndexOnDisk (new segment dir + atomic meta swap; single in-JVM draw, min across JVMs)",
-            "substr_probe_mono_sec": "probe read-tax A/B, monolithic side: incrementalRemoveDupSpansExact of the increment's top half vs the index holding its folded lower half",
-            "substr_probe_seg_sec": "probe read-tax A/B, segmented side: same content held as base + 3 open delta segments, probed via the SHIPPED chained shuffled-hash joins (Dedup.incrementalRemoveDupSpansExactSegmented)",
+            "substr_seg_fold_sec": "P62 LSM-segmented fold: the probe's survivors appended as ONE immutable increment-sized segment (updateExactSubstrIndex, compaction disabled to isolate the append)",
+            "substr_seg_disk_fold_sec": "P62 ON-DISK fold: foldExactSubstrIndexOnDisk (new segment dir + atomic meta swap; single in-JVM draw, min across JVMs)",
+            "substr_probe_seg_sec": "probe read tax: the increment's top half probed against base + 3 open delta segments holding its folded lower half, via the chained shuffled-hash joins (Dedup.incrementalRemoveDupSpansExact)",
             "substr_probe_seg_cold_sec": "COLD-RESTART segmented probe: segments re-read from parquet each rep (scan + cluster-into-cache + chained probe)",
             "build_sec": "buildFullCleanIndex context (paid once per corpus)",
         },
