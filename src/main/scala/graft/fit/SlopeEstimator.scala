@@ -356,7 +356,10 @@ object SlopeEstimator {
              featureNames: Array[String],
              classNames: Array[String],
              cfg: SlopeConfig): SlopeModel = {
-    val persisted = rows.persist(StorageLevel.MEMORY_AND_DISK)
+    // a private child, cached and LOCALLY CHECKPOINTED by the first pass:
+    // a `parallelize` input no longer re-ships each task's slice per pass
+    val persisted = rows.mapPartitions(identity, preservesPartitioning = true)
+      .persist(StorageLevel.MEMORY_AND_DISK).localCheckpoint()
     try {
       val stats = standardizeStats(persisted, pFeat, mTargets, cfg.center, cfg.scale)
       // gaussian centers the response (preProcessResponse.R:10-13)

@@ -326,8 +326,13 @@ final class SlopeModel(
     // closed form. Every step contributes exactly n rows, so the
     // within-step rank is globalCum − step·n — no per-step jobs, no
     // single-partition window (see DistributedRank).
+    // posexplode_OUTER: p_resp is never null or empty, so the rows are the
+    // same, but a plain posexplode makes the optimizer infer a
+    // `size(p_resp) > 0` filter and push it below the projections with the
+    // whole path's predictions inlined — a second evaluation per row whose
+    // generated hash-aggregate code outgrew the JVM's 64 KB method limit
     val scored = transform(df, featureCols, "p_resp", predictType = "response")
-      .select(posexplode(col("p_resp")).as(Seq("step", "probs")),
+      .select(posexplode_outer(col("p_resp")).as(Seq("step", "probs")),
         (col(labelCol).cast("string") === classNames(1)).cast("double").as("y"))
       .select(col("step"), expr("probs[0]").as("prob"), col("y"))
     val nRows = df.count()
@@ -380,9 +385,9 @@ final class SlopeModel(
         "auc: case weights must be finite, non-negative and under the " +
           "1e-6 grid range, got %s", w.cast("string"))))
     val scored = transform(df, featureCols, "p_resp", predictType = "response")
-      .select(posexplode(col("p_resp")).as(Seq("step", "probs")),
+      .select(posexplode_outer(col("p_resp")).as(Seq("step", "probs")),
         (col(labelCol).cast("string") === classNames(1)).cast("double").as("y"),
-        wg.as("wg"))
+        wg.as("wg")) // _outer: see aucAllSteps
       .select(col("step"), expr("probs[0]").as("prob"), col("y"), col("wg"))
     // per-group masses accumulate as DECIMAL(38,0) (a degenerate tie group
     // — think constant scores over 1e13 rows — would wrap a long sum

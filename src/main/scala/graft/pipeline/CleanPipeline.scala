@@ -191,12 +191,11 @@ object CleanPipeline {
       * largest absorbed doc emitted no cleaned text).
       */
     def maxDocId: Long = para.maxDocId
-    def unpersist(): Unit = { retireSuperseded(); substr.unpersist() }
-    /** Retire this handle once a fold has superseded it: the paragraph
-      * half only — the folded substring half shares this one's segments
-      * (see [[Dedup.ExactSubstrIndex]] on ownership).
+    /** Retire the NEWEST handle: a fold shares both halves' segments with
+      * the handle it came from, so a superseded handle is never retired
+      * (see [[SegmentStore]] on ownership).
       */
-    def retireSuperseded(): Unit = para.unpersist()
+    def unpersist(): Unit = { para.unpersist(); substr.unpersist() }
   }
 
   /** Build both stages' corpus-side state once; probe per increment with
@@ -227,7 +226,7 @@ object CleanPipeline {
       // scratch (the build pays it here either way — the probe follows
       // immediately in every deployment of this entry); the count seeds
       // the compaction threshold for free
-      CleanIndex(para, substr.copy(baseRows = substr.base.count()), joiner)
+      CleanIndex(para, substr.copy(store = substr.store.counted()), joiner)
     } finally releasePara()
   }
 
@@ -239,7 +238,7 @@ object CleanPipeline {
       nBuckets: Int = 64): Unit = {
     ParagraphDedup.writeParagraphIndex(index.para, s"$dir/para", nBuckets)
     Dedup.writeExactSubstrIndex(index.substr, s"$dir/substr", nBuckets)
-    val spark = index.para.units.sparkSession
+    val spark = index.para.store.base.sparkSession
     import spark.implicits._
     Seq(index.joiner).toDF("joiner")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
@@ -294,9 +293,9 @@ object CleanPipeline {
     * over the RAW increment (its state is pre-clean unit fingerprints),
     * the substring index over the CLEANED increment (its state mirrors
     * the cleaned lake) — cleaned against the CURRENT paragraph index,
-    * before that index absorbs the increment. Returns a NEW persisted
-    * index; retire the old one with [[CleanIndex.retireSuperseded]] once
-    * the swap is durable.
+    * before that index absorbs the increment. Returns a NEW index sharing
+    * both halves' segments with `index`, so the old handle needs no
+    * retiring.
     */
   def updateCleanIndex(index: CleanIndex, incoming: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): CleanIndex =
@@ -361,13 +360,16 @@ object CleanPipeline {
       corpusFps: DataFrame, joiner: String, threshold: Double) {
     /** The composed watermark — the paragraph half's (sees every raw id). */
     def maxDocId: Long = para.maxDocId
-    def unpersist(): Unit = { retireSuperseded(); substr.unpersist() }
-    /** Retire this handle once a fold has superseded it: every half but
-      * the substring one, whose segments the folded index shares (see
-      * [[Dedup.ExactSubstrIndex]] on ownership).
+    def unpersist(): Unit = {
+      retireSuperseded(); para.unpersist(); substr.unpersist()
+    }
+    /** Retire this handle once a fold has superseded it: the near-dup
+      * index and the fingerprint set, which a fold rebuilds — the
+      * paragraph and substring halves share their segments with the folded
+      * index (see [[SegmentStore]] on ownership).
       */
     def retireSuperseded(): Unit = {
-      para.unpersist(); nearDup.unpersist(); corpusFps.unpersist(blocking = false)
+      nearDup.unpersist(); corpusFps.unpersist(blocking = false)
     }
   }
 
@@ -416,7 +418,7 @@ object CleanPipeline {
 
   /** Persist a [[FullCleanIndex]] to `dir` as parquet — the cross-restart
     * half of the daily-crawl story, composing the halves' own bucketed
-    * writers (paragraph units by fp, near-dup bands by (band, bh),
+    * writers (paragraph unit segments by fp, near-dup bands by (band, bh),
     * survivor gram segments by (g1, g2) — each co-locating its probe join
     * on a lake) plus the fingerprint set (bucketed by fp) and a meta table
     * pinning the joiner and verify threshold so a reloaded probe can

@@ -1342,28 +1342,29 @@ object Dedup {
     * tests (same contract as [[removeDupSpansFrames]]).
     */
   private[graft] def exactSubstrFrames(docs: DataFrame, minLen: Int,
-      idCol: String, textCol: String, keepFirst: Boolean): RemoveSpanFrames = {
-    require(minLen >= 1, s"minLen must be >= 1, got $minLen")
-    val base = docs
-      .select(col(idCol).as("doc_id"), TextPipeline.tokens(col(textCol)).as("toks"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val grams = base
-      .select(col("doc_id"),
-        posexplode(graft.functions.RollingGramHashes
-          .rollingGramHashes(col("toks"), minLen)))
-      .select(col("doc_id"), col("pos").cast("long").as("i"),
-        col("col.h1").as("g1"), col("col.h2").as("g2"))
+      idCol: String, textCol: String, keepFirst: Boolean): RemoveSpanFrames =
     // >= 2 occurrences ANYWHERE (within-doc repeats count); keeper = the
     // first occurrence in (doc_id, position) order. min(struct) is
     // map-side combinable, and the dup set is a small corpus fraction, so
     // the join back broadcasts under AQE.
-    val dupSet = grams
-      .groupBy("g1", "g2")
-      .agg(count(lit(1)).as("nocc"),
-        min(struct(col("doc_id"), col("i"))).as("keeper"))
-      .filter(col("nocc") >= 2)
-      .select("g1", "g2", "keeper")
-    val joined = grams.join(dupSet, Seq("g1", "g2"))
+    gramCutFrames(docs, minLen, idCol, textCol, keepFirst)(grams =>
+      SegmentStore.aggregate(grams, GramKeys, "i")
+        .filter(col("nocc") >= 2)
+        .select("g1", "g2", "keeper"))
+
+  /** The exact family's shared frames: the persisted token substrate, its
+    * `minLen`-window rows, and the per-doc cut islands of every window in
+    * `dupSetOf(windows)` — `(g1, g2, keeper)`, the duplicated grams with
+    * their keepers — other than its keeper under `keepFirst`.
+    */
+  private def gramCutFrames(docs: DataFrame, minLen: Int, idCol: String,
+      textCol: String, keepFirst: Boolean)(
+      dupSetOf: DataFrame => DataFrame): RemoveSpanFrames = {
+    require(minLen >= 1, s"minLen must be >= 1, got $minLen")
+    val base = tokenRows(docs, idCol, textCol)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val grams = gramRows(base, minLen)
+    val joined = grams.join(dupSetOf(grams), Seq("g1", "g2"))
     val cutWins =
       if (keepFirst) joined.filter(struct(col("doc_id"), col("i")) =!= col("keeper"))
       else joined
@@ -1426,71 +1427,45 @@ object Dedup {
 
   /** A pre-built exact-substring dup-gram index — the persisted corpus-side
     * state of INCREMENTAL span removal, mirroring [[NearDupIndex]] for the
-    * near-dup family: one row per distinct `minLen`-token window hash of
-    * the corpus with its total occurrence count and its keeper (the first
-    * occurrence in `(doc_id, position)` order), `(g1, g2, nocc, keeper:
-    * struct<doc_id, i>)`. Grams with `nocc = 1` are KEPT — a corpus-unique
-    * window becomes duplicated the moment an increment re-crawls it (the
-    * same reason a suffix array is corpus-sized). ~40 B per corpus token.
-    *
-    * LSM-SEGMENTED (O'Neil et al., "The Log-Structured Merge-Tree", 1996):
-    * a `base` plus append-only `deltas`, each the aggregate of a disjoint
-    * corpus slice, merged on read — `(sum nocc, min keeper)` is a
-    * commutative monoid over any partition of the corpus. A fold appends
-    * ONE increment-sized segment instead of re-aggregating the corpus-sized
-    * table (11.9 s against the ×1000 index for a 1000-row increment,
-    * FOLDPROBE.json); once total delta rows pass `compactFraction` × base
-    * rows, a compaction re-aggregates everything into one base. The probe
-    * pays one extra increment-keyed join per open delta; with none open it
-    * is a single left join against the base. `baseRows` is
-    * [[UncountedRows]] after a build until the first fold counts it, so
-    * build, write, read and probe never pay for it. On disk the layout is
-    * append-only
-    * ([[writeExactSubstrIndex]], [[foldExactSubstrIndexOnDisk]]).
-    *
-    * OWNERSHIP: folds SHARE the base and prior deltas with the input handle,
-    * so never unpersist a superseded handle after a fold — retire state
-    * through the newest handle. Compaction retires every segment it
-    * consumed (the input handle's base included) once the merged base is
-    * materialized.
+    * near-dup family: a [[SegmentStore]] of one row per distinct
+    * `minLen`-token window hash of the corpus with its occurrence count
+    * and keeper, `(g1, g2, nocc, keeper: struct<doc_id, i>)`. Grams with
+    * `nocc = 1` are KEPT — a corpus-unique window becomes duplicated the
+    * moment an increment re-crawls it (the same reason a suffix array is
+    * corpus-sized). ~40 B per corpus token. `minLen` rides along so a
+    * probe can never hash with a mismatched window; `maxDocId` is the
+    * [[IdContract]] watermark.
     */
-  final case class ExactSubstrIndex(
-      base: DataFrame, baseRows: Long,
-      deltas: Seq[DataFrame], deltaRows: Seq[Long],
-      minLen: Int, maxDocId: Long = IdContract.Unwatermarked,
-      compactFraction: Double = 0.25) {
-    def segments: Seq[DataFrame] = base +: deltas
-
-    /** The merged `(g1, g2, nocc, keeper)` table over every segment —
-      * lazy, and the base itself while no delta is open.
-      */
-    def merged: DataFrame =
-      if (deltas.isEmpty) base
-      else segments.reduce(_ unionByName _)
-        .groupBy("g1", "g2")
-        .agg(sum(col("nocc")).as("nocc"), min(col("keeper")).as("keeper"))
-
-    def unpersist(): Unit = segments.foreach(_.unpersist(blocking = false))
+  final case class ExactSubstrIndex(store: SegmentStore, minLen: Int,
+      maxDocId: Long = IdContract.Unwatermarked) {
+    def unpersist(): Unit = store.unpersist()
   }
 
-  /** [[ExactSubstrIndex.baseRows]] of a base that has not been counted. */
-  val UncountedRows: Long = -1L
+  /** The key columns of the gram [[SegmentStore]]. */
+  private val GramKeys = Seq("g1", "g2")
+
+  /** `(doc_id, toks)`: the token substrate of the exact family. */
+  private def tokenRows(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    docs.select(col(idCol).as("doc_id"),
+      TextPipeline.tokens(col(textCol)).as("toks"))
+
+  /** `(doc_id, i, g1, g2)`: one row per `minLen`-token window hash. */
+  private def gramRows(toks: DataFrame, minLen: Int): DataFrame =
+    toks
+      .select(col("doc_id"),
+        posexplode(graft.functions.RollingGramHashes
+          .rollingGramHashes(col("toks"), minLen)))
+      .select(col("doc_id"), col("pos").cast("long").as("i"),
+        col("col.h1").as("g1"), col("col.h2").as("g2"))
 
   /** The per-gram `(nocc, keeper)` aggregate of one corpus side — the
-    * map-side-combinable step shared by the build, every fold's delta
-    * segment and the probe's increment-side aggregate.
+    * build's base and every fold's delta segment.
     */
   private def exactGramAgg(docs: DataFrame, minLen: Int,
       idCol: String, textCol: String): DataFrame =
-    docs
-      .select(col(idCol).as("doc_id"),
-        posexplode(graft.functions.RollingGramHashes
-          .rollingGramHashes(TextPipeline.tokens(col(textCol)), minLen)))
-      .select(col("doc_id"), col("pos").cast("long").as("i"),
-        col("col.h1").as("g1"), col("col.h2").as("g2"))
-      .groupBy("g1", "g2")
-      .agg(count(lit(1)).as("nocc"),
-        min(struct(col("doc_id"), col("i"))).as("keeper"))
+    SegmentStore.aggregate(
+      gramRows(tokenRows(docs, idCol, textCol), minLen), GramKeys, "i")
 
   /** Build the corpus-side [[ExactSubstrIndex]] once — one corpus-sized
     * aggregate as the base, no open delta; probe it per increment with
@@ -1499,7 +1474,8 @@ object Dedup {
     */
   def buildExactSubstrIndex(corpus: DataFrame, minLen: Int,
       idCol: String = "doc_id", textCol: String = "text",
-      compactFraction: Double = 0.25): ExactSubstrIndex =
+      compactFraction: Double = SegmentStore.DefaultCompactFraction)
+      : ExactSubstrIndex =
     exactSubstrIndexAt(corpus, minLen, IdContract.maxId(corpus, idCol),
       idCol, textCol, compactFraction)
 
@@ -1510,48 +1486,26 @@ object Dedup {
     */
   private[graft] def exactSubstrIndexAt(corpus: DataFrame, minLen: Int,
       maxDocId: Long, idCol: String = "doc_id", textCol: String = "text",
-      compactFraction: Double = 0.25): ExactSubstrIndex = {
+      compactFraction: Double = SegmentStore.DefaultCompactFraction)
+      : ExactSubstrIndex = {
     require(minLen >= 1, s"minLen must be >= 1, got $minLen")
-    ExactSubstrIndex(
-      exactGramAgg(corpus, minLen, idCol, textCol)
-        .persist(StorageLevel.MEMORY_AND_DISK),
-      UncountedRows, Seq.empty, Seq.empty, minLen, maxDocId, compactFraction)
+    ExactSubstrIndex(SegmentStore.of(GramKeys,
+      exactGramAgg(corpus, minLen, idCol, textCol), compactFraction),
+      minLen, maxDocId)
   }
 
-  /** Fold an increment in O(increment): its per-gram aggregate, persisted
-    * and MATERIALIZED here (the fold pays its own bill, not the next
-    * probe), is appended as a delta segment; compacts iff the open deltas
-    * now exceed `compactFraction` × base rows. Returns a NEW index sharing
-    * the input's segments. Monotone-id watermark enforced ([[IdContract]]).
+  /** Fold an increment in O(increment): its per-gram aggregate is appended
+    * as one delta segment ([[SegmentStore.append]]). Returns a NEW index
+    * sharing the input's segments. Monotone-id watermark enforced
+    * ([[IdContract]]).
     */
   def updateExactSubstrIndex(index: ExactSubstrIndex, incoming: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): ExactSubstrIndex = {
     val wm = IdContract.requireAboveAndAdvance(incoming, idCol,
       index.maxDocId, "updateExactSubstrIndex")
-    val delta = exactGramAgg(incoming, index.minLen, idCol, textCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = delta.count()
-    val baseRows =
-      if (index.baseRows == UncountedRows) index.base.count() else index.baseRows
-    val next = index.copy(baseRows = baseRows, deltas = index.deltas :+ delta,
-      deltaRows = index.deltaRows :+ n, maxDocId = wm)
-    if (next.deltaRows.sum <= index.compactFraction * baseRows) next
-    else compactExactSubstrIndex(next)
+    ExactSubstrIndex(index.store.append(
+      exactGramAgg(incoming, index.minLen, idCol, textCol)), index.minLen, wm)
   }
-
-  /** Re-aggregate every segment into one fresh base — the amortized
-    * O(index) half of the LSM bill. Materializes the merged base, then
-    * retires EVERY input segment, so a fold chain never leaks a base.
-    */
-  def compactExactSubstrIndex(index: ExactSubstrIndex): ExactSubstrIndex =
-    if (index.deltas.isEmpty) index
-    else {
-      val merged = index.merged.persist(StorageLevel.MEMORY_AND_DISK)
-      val n = merged.count()
-      index.unpersist()
-      index.copy(base = merged, baseRows = n,
-        deltas = Seq.empty, deltaRows = Seq.empty)
-    }
 
   /** INCREMENTAL exact duplicated-substring removal — the daily-crawl twin
     * of [[removeDupSpansExact]], mirroring [[incrementalNearDup]] vs its
@@ -1589,7 +1543,7 @@ object Dedup {
       emitOriginal: Boolean = false): DataFrame = {
     IdContract.requireAbove(incoming, idCol, index.maxDocId,
       "incrementalRemoveDupSpansExact")
-    val f = incrementalExactSubstrFramesOver(incoming, index.segments,
+    val f = incrementalExactSubstrFramesOver(incoming, index.store,
       index.minLen, idCol, textCol, keepFirst)
     val cuts = // eager: affected docs only; finally: no substrate leak on failure
       try f.cuts.localCheckpoint()
@@ -1613,239 +1567,55 @@ object Dedup {
     finally idx.unpersist()
   }
 
-  private def segmentDir(dir: String, i: Int): String = f"$dir/seg-$i%05d"
+  private val SubstrRebuild = "buildExactSubstrIndex + writeExactSubstrIndex"
 
-  /** Persist an [[ExactSubstrIndex]] to `dir` as an APPEND-ONLY layout:
-    * `seg-00000/` (base) … `seg-0000k/` (deltas), each clustered by
-    * `(g1, g2)` into `nBuckets` files (a bucketed table on a warehouse, so
-    * the probe join co-locates without shuffling the index), plus `meta/`
-    * pinning `min_len`, the [[IdContract]] watermark, `compact_fraction`
-    * and per-segment row counts (an uncounted base stays [[UncountedRows]]
-    * on disk). The daily disk fold ([[foldExactSubstrIndexOnDisk]]) then
-    * touches only one new segment dir + the tiny meta.
+  private def substrMeta(minLen: Int, maxDocId: Long): Seq[Column] =
+    Seq(lit(minLen).as("min_len"), lit(maxDocId).as("max_doc_id"))
+
+  /** Persist an [[ExactSubstrIndex]] in the [[SegmentStore.write]] layout,
+    * `meta/` pinning `min_len` and the [[IdContract]] watermark.
     */
   def writeExactSubstrIndex(index: ExactSubstrIndex, dir: String,
-      nBuckets: Int = 64): Unit = {
-    index.segments.zipWithIndex.foreach { case (s, i) =>
-      s.repartition(nBuckets, col("g1"), col("g2"))
-        .write.mode("overwrite").parquet(segmentDir(dir, i))
-    }
-    writeIndexMeta(index.base.sparkSession, s"$dir/meta", index.minLen,
-      index.maxDocId, index.compactFraction, index.baseRows +: index.deltaRows)
-  }
+      nBuckets: Int = 64): Unit =
+    SegmentStore.write(index.store, dir, nBuckets,
+      substrMeta(index.minLen, index.maxDocId))
 
-  private def writeIndexMeta(spark: SparkSession, path: String,
-      minLen: Int, maxDocId: Long, compactFraction: Double,
-      segRows: Seq[Long]): Unit = {
-    import spark.implicits._
-    Seq((minLen, maxDocId, compactFraction, segRows))
-      .toDF("min_len", "max_doc_id", "compact_fraction", "seg_rows")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  /** ATOMIC meta swap: the new meta is written COMPLETE to `.meta.tmp`
-    * first (parquet commit = `_SUCCESS` marker), then swapped in with
-    * delete + rename. A crash anywhere leaves a state
-    * [[recoverIndexDir]] rolls forward or back deterministically, so
-    * a failed fold is always retryable ([[foldExactSubstrIndexOnDisk]]).
-    */
-  private def swapIndexMeta(spark: SparkSession, dir: String,
-      minLen: Int, maxDocId: Long, compactFraction: Double,
-      segRows: Seq[Long]): Unit = {
-    val fs = fsOf(spark, dir)
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/.meta.tmp")
-    writeIndexMeta(spark, tmp.toString, minLen, maxDocId, compactFraction,
-      segRows)
-    val meta = new org.apache.hadoop.fs.Path(s"$dir/meta")
-    fs.delete(meta, true)
-    require(fs.rename(tmp, meta), s"meta swap rename failed under $dir")
-  }
-
-  private def fsOf(spark: SparkSession,
-      dir: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Roll a crashed disk fold forward or back. The fold protocol writes
-    * (1) the new segment to a temp dir, (2) renames it to `seg-K`,
-    * (3) writes the new meta COMPLETE to `.meta.tmp`, (4) deletes `meta`
-    * and renames the tmp in. Invariant: a COMMITTED `.meta.tmp` (its
-    * `_SUCCESS` marker exists) always describes an already-renamed
-    * `seg-K`, so recovery finishes the swap; an uncommitted tmp is a
-    * mid-write crash and is discarded (its fold never advanced the
-    * watermark — the caller's retry redoes it from scratch). Called by
-    * every disk-fold and read entry, so no manual cleanup is ever needed.
-    */
-  private def recoverIndexDir(spark: SparkSession,
-      dir: String): Unit = {
-    val fs = fsOf(spark, dir)
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/.meta.tmp")
-    if (fs.exists(tmp)) {
-      val meta = new org.apache.hadoop.fs.Path(s"$dir/meta")
-      if (fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))) {
-        fs.delete(meta, true)
-        require(fs.rename(tmp, meta), s"meta recovery rename failed under $dir")
-      } else fs.delete(tmp, true)
-    }
-  }
-
-  /** The recovered meta row of an index dir; fails loudly on a dir in the
-    * retired single-table layout (`grams/`, no `seg_rows` in meta), which
-    * is rebuilt, never read.
-    */
-  private def readIndexMeta(spark: SparkSession,
-      dir: String): org.apache.spark.sql.Row = {
-    recoverIndexDir(spark, dir)
-    val meta = spark.read.parquet(s"$dir/meta").head
-    require(meta.schema.fieldNames.contains("seg_rows"),
-      s"$dir holds an exact-substring index in the retired single-table " +
-        "layout (grams/, no seg_rows in meta) — rebuild it with " +
-        "buildExactSubstrIndex + writeExactSubstrIndex")
-    meta
-  }
-
-  /** Reload a disk-persisted index ([[writeExactSubstrIndex]]) in a fresh
-    * session. Each segment persists lazily, CLUSTERED on the probe key: a
-    * raw parquet scan caches with unknown partitioning, so every probe
-    * join would re-exchange the corpus-sized base — clustering into the
-    * cache makes the exchange a one-time warm-up cost (one per segment)
-    * and every probe streams the cached store (the partitioning
-    * fold-built indexes already have). The [[IdContract]] watermark
-    * round-trips with the index.
+  /** Reload a [[writeExactSubstrIndex]] dir ([[SegmentStore.read]]); a dir
+    * in the retired `grams/` layout fails with a rebuild error.
     */
   def readExactSubstrIndex(spark: SparkSession, dir: String): ExactSubstrIndex = {
-    val meta = readIndexMeta(spark, dir)
-    val segRows = meta.getAs[scala.collection.Seq[Long]]("seg_rows").toSeq
-    val segs = segRows.indices.map(i =>
-      spark.read.parquet(segmentDir(dir, i))
-        .repartition(spark.sessionState.conf.numShufflePartitions,
-          col("g1"), col("g2"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    ExactSubstrIndex(segs.head, segRows.head, segs.tail, segRows.tail,
-      meta.getAs[Int]("min_len"), meta.getAs[Long]("max_doc_id"),
-      meta.getAs[Double]("compact_fraction"))
+    val (store, meta) = SegmentStore.read(spark, dir, GramKeys, SubstrRebuild)
+    ExactSubstrIndex(store, meta.getAs[Int]("min_len"),
+      meta.getAs[Long]("max_doc_id"))
   }
 
-  /** The DAILY DISK FOLD: append one increment to a disk-resident index by
-    * writing ONE new increment-sized segment dir and rewriting the tiny
-    * meta — the corpus-sized segment files are never touched. Watermark-
-    * enforced from the on-disk meta. Does NOT compact: on a lake,
-    * compaction is a separate periodic job — read the index,
-    * [[compactExactSubstrIndex]], write to a FRESH path, swap the table
-    * pointer atomically — because rewriting a live dir in place would race
-    * its readers.
-    *
-    * CRASH-RETRYABLE: the segment is staged to a temp dir and RENAMED
-    * into `seg-K` (an orphan `seg-K` from an earlier crashed fold — a
-    * dir meta does not list — is deleted first, never trusted: the crash
-    * may have interrupted its write), and the meta update is a committed-
-    * tmp + swap ([[swapIndexMeta]] / [[recoverIndexDir]]). Any
-    * crash leaves the dir either wholly pre-fold (retry redoes the fold)
-    * or wholly post-fold (retry fails LOUDLY on the advanced watermark —
-    * the fold already happened), never wedged.
+  /** The DAILY DISK FOLD: append one increment to a disk-resident index as
+    * ONE new increment-sized segment dir plus a rewritten meta
+    * ([[SegmentStore.appendOnDisk]] — crash-retryable, never compacts).
+    * Watermark-enforced from the on-disk meta.
     */
   def foldExactSubstrIndexOnDisk(spark: SparkSession, dir: String,
       incoming: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", nBuckets: Int = 8): Unit = {
-    val meta = readIndexMeta(spark, dir)
-    val segRows = meta.getAs[scala.collection.Seq[Long]]("seg_rows").toSeq
-    val minLen = meta.getAs[Int]("min_len")
-    val wm = IdContract.requireAboveAndAdvance(incoming, idCol,
-      meta.getAs[Long]("max_doc_id"), "foldExactSubstrIndexOnDisk")
-    val fs = fsOf(spark, dir)
-    val segTmp = new org.apache.hadoop.fs.Path(s"$dir/.seg.tmp")
-    exactGramAgg(incoming, minLen, idCol, textCol)
-      .repartition(nBuckets, col("g1"), col("g2"))
-      .write.mode("overwrite").parquet(segTmp.toString)
-    val segDir = new org.apache.hadoop.fs.Path(segmentDir(dir, segRows.size))
-    fs.delete(segDir, true) // orphan of a crashed fold: unlisted in meta
-    require(fs.rename(segTmp, segDir), s"segment rename failed under $dir")
-    val n = spark.read.parquet(segDir.toString).count()
-    swapIndexMeta(spark, dir, minLen, wm,
-      meta.getAs[Double]("compact_fraction"), segRows :+ n)
-  }
+      textCol: String = "text", nBuckets: Int = 8): Unit =
+    SegmentStore.appendOnDisk(spark, dir, GramKeys, nBuckets, SubstrRebuild) {
+      meta =>
+        val minLen = meta.getAs[Int]("min_len")
+        val wm = IdContract.requireAboveAndAdvance(incoming, idCol,
+          meta.getAs[Long]("max_doc_id"), "foldExactSubstrIndexOnDisk")
+        (exactGramAgg(incoming, minLen, idCol, textCol), substrMeta(minLen, wm))
+    }
 
-  /** The lazy internals of [[incrementalRemoveDupSpansExact]] over an
-    * index's segment list, exposed for plan-quality tests (same contract
-    * as [[exactSubstrFrames]]). With ONE segment (no open delta) the probe
-    * is a single left join against the persisted aggregate. With k
-    * segments it is k CHAINED left joins — that join shape once per
-    * segment: the increment-sized accumulator is the shuffled-hash BUILD
-    * side (hinted; AQE converts the same way for the single-segment probe)
-    * and each segment only STREAMS through its cached scan, never shuffled
-    * or sorted. The cross-segment `(sum nocc, min keeper)` monoid then
-    * folds ROW-LOCALLY over the joined columns (`+`/`least`,
-    * null-skipping) — no union, no re-aggregate: two earlier cuts of this
-    * plan paid an index-sized bill here (an optimizer-chosen sort-merge
-    * that sorted the base per segment, then a union + re-aggregate whose
-    * fused non-codegen stage de-vectorized the 170M-row segment scans to
-    * ~15 s where a single-segment probe streams the same store in ~1 s);
-    * the chained shape is pinned in PlanQualitySpec and priced by
-    * FOLDPROBE's read-tax legs.
+  /** The lazy internals of [[incrementalRemoveDupSpansExact]] over a gram
+    * store, exposed for plan-quality tests (same contract as
+    * [[exactSubstrFrames]]): the increment's own per-gram aggregate meets
+    * the store in [[SegmentStore.unionVerdict]] — a single left join with
+    * no open delta, hinted chained joins with open deltas.
     */
   private[graft] def incrementalExactSubstrFramesOver(incoming: DataFrame,
-      segments: Seq[DataFrame], minLen: Int, idCol: String, textCol: String,
-      keepFirst: Boolean): RemoveSpanFrames = {
-    val base = incoming
-      .select(col(idCol).as("doc_id"), TextPipeline.tokens(col(textCol)).as("toks"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val grams = base
-      .select(col("doc_id"),
-        posexplode(graft.functions.RollingGramHashes
-          .rollingGramHashes(col("toks"), minLen)))
-      .select(col("doc_id"), col("pos").cast("long").as("i"),
-        col("col.h1").as("g1"), col("col.h2").as("g2"))
-    // the increment's own per-gram aggregate, left-joined against the
-    // index: union-corpus count = inc + index, union-corpus keeper =
-    // min(inc, index) — grams absent from the index (null side) cover
-    // increment-internal duplication with the same expressions.
-    val incAgg = grams
-      .groupBy("g1", "g2")
-      .agg(count(lit(1)).as("inc_nocc"),
-        min(struct(col("doc_id"), col("i"))).as("inc_keeper"))
-    val dupSet =
-      if (segments.lengthCompare(1) == 0)
-        incAgg
-          .join(segments.head.select(col("g1"), col("g2"),
-            col("nocc").as("idx_nocc"), col("keeper").as("idx_keeper")),
-            Seq("g1", "g2"), "left")
-          .select(col("g1"), col("g2"),
-            (col("inc_nocc") + coalesce(col("idx_nocc"), lit(0L))).as("nocc"),
-            when(col("idx_keeper").isNull, col("inc_keeper"))
-              .otherwise(least(col("idx_keeper"), col("inc_keeper"))).as("keeper"))
-          .filter(col("nocc") >= 2)
-          .select("g1", "g2", "keeper")
-      else {
-        val chained = segments.zipWithIndex.foldLeft(incAgg) {
-          case (acc, (seg, i)) =>
-            acc.hint("shuffle_hash")
-              .join(seg.select(col("g1"), col("g2"),
-                col("nocc").as(s"idx_nocc_$i"),
-                col("keeper").as(s"idx_keeper_$i")), Seq("g1", "g2"), "left")
-        }
-        val nocc = segments.indices
-          .map(i => coalesce(col(s"idx_nocc_$i"), lit(0L)))
-          .foldLeft(col("inc_nocc"))(_ + _)
-        // least() skips nulls, and min-of-struct IS lexicographic least,
-        // so the keeper monoid folds row-locally across segments
-        val keeper = least(
-          (segments.indices.map(i => col(s"idx_keeper_$i")) :+
-            col("inc_keeper")): _*)
-        chained
-          .select(col("g1"), col("g2"), nocc.as("nocc"), keeper.as("keeper"))
-          .filter(col("nocc") >= 2)
-          .select("g1", "g2", "keeper")
-      }
-    val joined = grams.join(dupSet, Seq("g1", "g2"))
-    val cutWins =
-      if (keepFirst) joined.filter(struct(col("doc_id"), col("i")) =!= col("keeper"))
-      else joined
-    val cuts = cutWins
-      .groupBy("doc_id")
-      .agg(sort_array(collect_list(col("i"))).as("ps"))
-      .select(col("doc_id"), islandIntervals(col("ps"), minLen).as("cut"))
-    RemoveSpanFrames(base, cuts)
-  }
+      store: SegmentStore, minLen: Int, idCol: String, textCol: String,
+      keepFirst: Boolean): RemoveSpanFrames =
+    gramCutFrames(incoming, minLen, idCol, textCol, keepFirst)(grams =>
+      store.unionVerdict(SegmentStore.aggregate(grams, GramKeys, "i", "inc_")))
 
   /** The corpus's cross-doc-duplicated gram hashes as a SORTED primitive
     * array — the driver-held substrate of [[dupSpanCols]] (binary-search

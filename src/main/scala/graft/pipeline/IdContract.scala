@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Mechanical enforcement of the incremental indexes' doc-id contracts.
   *
-  * Every incremental index in this package ([[ParagraphDedup.ParagraphIndex]],
-  * the segmented [[Dedup.ExactSubstrIndex]], [[Dedup.NearDupIndex]],
+  * Every incremental index in this package ([[ParagraphDedup.ParagraphIndex]]
+  * and [[Dedup.ExactSubstrIndex]] — the two [[SegmentStore]] users —
+  * [[Dedup.NearDupIndex]],
   * [[CleanPipeline.CleanIndex]], [[CleanPipeline.FullCleanIndex]]) carries
   * a `maxDocId` WATERMARK — the largest doc id the corpus side has
   * absorbed — and every index probe and fold `require`s the increment's

@@ -150,10 +150,7 @@ object ParagraphDedup {
     // case); keeper = first occurrence in (doc_id, idx) order. Map-side
     // combinable; the dup set is a small corpus fraction, so the probe
     // join broadcasts under AQE.
-    val dupSet = base.filter(!col("blank"))
-      .groupBy("fp")
-      .agg(count(lit(1)).as("nocc"),
-        min(struct(col("doc_id"), col("idx"))).as("keeper"))
+    val dupSet = fpAgg(base)
       .filter(col("nocc") >= 2)
       .select("fp", "keeper")
     ParagraphFrames(base, dupSet, cutCounts(base, dupSet))
@@ -292,28 +289,26 @@ object ParagraphDedup {
   // ---- Incremental (daily-crawl) form --------------------------------
 
   /** A pre-built unit-fingerprint index — the sub-document analogue of
-    * [[graft.pipeline.Dedup.ExactSubstrIndex]] (one table here, whose
-    * fold re-aggregates, where the gram index appends segments), and the
-    * corpus-side state
-    * of INCREMENTAL paragraph/line dedup: one row per distinct NON-BLANK
-    * unit fingerprint of the corpus, `(fp, nocc, keeper: struct<doc_id,
-    * idx>)`. Fingerprints with `nocc = 1` are KEPT — a corpus-unique
-    * paragraph becomes duplicated the moment a crawl repeats it, so the
-    * state must remember every unit (same reason the substring index is
-    * corpus-sized; here it is far smaller: one row per distinct
-    * PARAGRAPH, not per token window — tens of bytes per corpus unit).
+    * [[graft.pipeline.Dedup.ExactSubstrIndex]], on the same
+    * [[SegmentStore]], and the corpus-side state of INCREMENTAL
+    * paragraph/line dedup: one row per distinct NON-BLANK unit fingerprint
+    * of the corpus, `(fp, nocc, keeper: struct<doc_id, idx>)`.
+    * Fingerprints with `nocc = 1` are KEPT — a corpus-unique paragraph
+    * becomes duplicated the moment a crawl repeats it (tens of bytes per
+    * corpus unit: one row per distinct PARAGRAPH, not per token window).
     * `sepRegex` rides along so a probe can never split with a mismatched
-    * unit notion, and `maxDocId` is the [[IdContract]] watermark every
+    * unit notion; `maxDocId` is the [[IdContract]] watermark every
     * probe/fold `require`s increment ids strictly above
-    * ([[IdContract.Unwatermarked]] disables enforcement — the one-shot
-    * convenience overload's mode). On a lake this is a table bucketed by
-    * `fp` so increment probes co-locate without shuffling the index. Call
-    * [[ParagraphIndex.unpersist]] when retiring it.
+    * ([[IdContract.Unwatermarked]] — the one-shot convenience overload's
+    * mode — disables it).
     */
-  final case class ParagraphIndex(units: DataFrame, sepRegex: String,
+  final case class ParagraphIndex(store: SegmentStore, sepRegex: String,
       maxDocId: Long = IdContract.Unwatermarked) {
-    def unpersist(): Unit = units.unpersist(blocking = false)
+    def unpersist(): Unit = store.unpersist()
   }
+
+  /** The key column of the unit-fingerprint [[SegmentStore]]. */
+  private val FpKey = Seq("fp")
 
   /** The per-fingerprint `(nocc, keeper)` aggregate of one corpus side —
     * the map-side-combinable build step shared by [[buildParagraphIndex]],
@@ -322,11 +317,11 @@ object ParagraphDedup {
     */
   private def unitFpAgg(docs: DataFrame, sepRegex: String,
       idCol: String, textCol: String): DataFrame =
-    unitTable(docs, sepRegex, idCol, textCol)
-      .filter(!col("blank"))
-      .groupBy("fp")
-      .agg(count(lit(1)).as("nocc"),
-        min(struct(col("doc_id"), col("idx"))).as("keeper"))
+    fpAgg(unitTable(docs, sepRegex, idCol, textCol))
+
+  /** [[SegmentStore.aggregate]] over a unit table's non-blank units. */
+  private def fpAgg(units: DataFrame, prefix: String = ""): DataFrame =
+    SegmentStore.aggregate(units.filter(!col("blank")), FpKey, "idx", prefix)
 
   /** Build the corpus-side [[ParagraphIndex]] once; probe it per increment
     * with [[incrementalDedupUnits]], fold each shipped increment into it
@@ -336,10 +331,8 @@ object ParagraphDedup {
       idCol: String = "doc_id", textCol: String = "text"): ParagraphIndex = {
     require(sepRegex.nonEmpty, "separator regex must be non-empty")
     ParagraphIndex(
-      unitFpAgg(corpus, sepRegex, idCol, textCol)
-        .persist(StorageLevel.MEMORY_AND_DISK),
-      sepRegex,
-      IdContract.maxId(corpus, idCol))
+      SegmentStore.of(FpKey, unitFpAgg(corpus, sepRegex, idCol, textCol)),
+      sepRegex, IdContract.maxId(corpus, idCol))
   }
 
   /** [[buildParagraphIndex]] and [[dedupUnits]] over THE SAME corpus from
@@ -370,19 +363,16 @@ object ParagraphDedup {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val (index, kept) =
       try {
-        val units = base.filter(!col("blank"))
-          .groupBy("fp")
-          .agg(count(lit(1)).as("nocc"),
-            min(struct(col("doc_id"), col("idx"))).as("keeper"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        val units = fpAgg(base).persist(StorageLevel.MEMORY_AND_DISK)
         // materialize the index OFF the substrate before the caller
         // releases it — a lazy persist would re-derive the unit table on
-        // first use
-        units.count()
+        // first use; the count seeds the compaction threshold for free
+        val n = units.count()
         val d = units.filter(col("nocc") >= 2).select("fp", "keeper")
           .localCheckpoint()
         val c = cutCounts(base, d).localCheckpoint()
-        (ParagraphIndex(units, sepRegex, IdContract.maxId(corpus, idCol)),
+        (ParagraphIndex(SegmentStore(FpKey, units, n), sepRegex,
+          IdContract.maxId(corpus, idCol)),
           emitKeptFromUnits(base, d, c))
       } catch {
         case t: Throwable => base.unpersist(blocking = false); throw t
@@ -390,14 +380,13 @@ object ParagraphDedup {
     (index, kept, () => base.unpersist(blocking = false))
   }
 
-  /** Fold an increment into the index — occurrence counts ADD and keepers
-    * MIN, because both are fingerprint-wise monoid aggregates of the
-    * union corpus: `union → groupBy fp → (sum, min)` is one map-side-
-    * combinable pass over the (small) increment plus the index, never the
-    * corpus text. Returns a NEW persisted index; the caller retires the
-    * old one ([[ParagraphIndex.unpersist]]) once the swap is durable.
-    * Like the substring index (and unlike the near-dup rep store), the
-    * COUNT half is not idempotent: re-folding the same increment inflates
+  /** Fold an increment into the index in O(increment): its per-fp
+    * `(nocc, keeper)` aggregate is appended as one delta segment
+    * ([[SegmentStore.append]]) — occurrence counts ADD and keepers MIN on
+    * read, because both are fingerprint-wise monoid aggregates of the
+    * union corpus. Returns a NEW index sharing the input's segments. Like
+    * the substring index (and unlike the near-dup rep store), the COUNT
+    * half is not idempotent: re-folding the same increment inflates
     * `nocc` — keepers stay exact, so cut GEOMETRY survives a replay, but
     * a unit unique to the replayed increment then reads as duplicated.
     * Replays and non-monotone ids are REJECTED mechanically when the index
@@ -408,50 +397,28 @@ object ParagraphDedup {
       idCol: String = "doc_id", textCol: String = "text"): ParagraphIndex = {
     val wm = IdContract.requireAboveAndAdvance(incoming, idCol,
       index.maxDocId, "updateParagraphIndex")
-    ParagraphIndex(
-      index.units
-        .unionByName(unitFpAgg(incoming, index.sepRegex, idCol, textCol))
-        .groupBy("fp")
-        .agg(sum(col("nocc")).as("nocc"), min(col("keeper")).as("keeper"))
-        .persist(StorageLevel.MEMORY_AND_DISK),
-      index.sepRegex, wm)
+    ParagraphIndex(index.store.append(
+      unitFpAgg(incoming, index.sepRegex, idCol, textCol)), index.sepRegex, wm)
   }
 
-  /** Persist a [[ParagraphIndex]] to `dir` as parquet — `units/` clustered
-    * into `nBuckets` files by `fp` (a bucketed table on a real warehouse,
-    * so the probe equi-join co-locates against the index without shuffling
-    * it), `meta/` pinning the separator regex so a reloaded probe can
-    * never split with a mismatched unit notion.
+  /** Persist a [[ParagraphIndex]] in the [[SegmentStore.write]] layout,
+    * `meta/` pinning the separator regex and the [[IdContract]] watermark.
     */
   def writeParagraphIndex(index: ParagraphIndex, dir: String,
-      nBuckets: Int = 64): Unit = {
-    index.units.repartition(nBuckets, col("fp"))
-      .write.mode("overwrite").parquet(s"$dir/units")
-    val spark = index.units.sparkSession
-    import spark.implicits._
-    Seq((index.sepRegex, index.maxDocId)).toDF("sep_regex", "max_doc_id")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
+      nBuckets: Int = 64): Unit =
+    SegmentStore.write(index.store, dir, nBuckets,
+      Seq(lit(index.sepRegex).as("sep_regex"),
+        lit(index.maxDocId).as("max_doc_id")))
 
-  /** Reload a disk-persisted index ([[writeParagraphIndex]]) in a fresh
-    * session; persists lazily, so the first probe pays the parquet scan.
-    * The [[IdContract]] watermark round-trips with the index (indexes
-    * written before the watermark existed reload unwatermarked).
+  /** Reload a [[writeParagraphIndex]] dir ([[SegmentStore.read]]); a dir
+    * in the retired `units/` layout fails with a rebuild error.
     */
   def readParagraphIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): ParagraphIndex = {
-    val meta = spark.read.parquet(s"$dir/meta").head
-    ParagraphIndex(
-      // cluster on the probe key before caching: a raw-scan cache has
-      // unknown partitioning and every increment probe would re-exchange
-      // the corpus-sized unit table (one-time warm-up exchange instead)
-      spark.read.parquet(s"$dir/units")
-        .repartition(spark.sessionState.conf.numShufflePartitions, col("fp"))
-        .persist(StorageLevel.MEMORY_AND_DISK),
-      meta.getAs[String]("sep_regex"),
-      if (meta.schema.fieldNames.contains("max_doc_id"))
-        meta.getAs[Long]("max_doc_id")
-      else IdContract.Unwatermarked)
+    val (store, meta) = SegmentStore.read(spark, dir, FpKey,
+      "buildParagraphIndex + writeParagraphIndex")
+    ParagraphIndex(store, meta.getAs[String]("sep_regex"),
+      meta.getAs[Long]("max_doc_id"))
   }
 
   /** INCREMENTAL paragraph/line dedup — the daily-crawl twin of
@@ -459,14 +426,15 @@ object ParagraphDedup {
     * corpus's per-fingerprint `(nocc, keeper)` state is built ONCE
     * ([[buildParagraphIndex]]) and each increment pays only its own
     * row-local split/fingerprint pass, one per-fp aggregate, one equi-join
-    * against the index, and the shared emission tail. Emits the cleaned
+    * per index segment ([[SegmentStore.unionVerdict]]), and the shared
+    * emission tail. Emits the cleaned
     * INCREMENT in [[dedupUnits]]'s kept-unit schema.
     *
     * EXACTLY BATCH-EQUAL for increment docs, by construction: for every
     * fingerprint the union corpus's occurrence count is
     * `index.nocc + increment count` and its first occurrence is
-    * `min(index.keeper, increment keeper)` — both recovered by one left
-    * join — so every increment unit's cut decision (`total >= 2` and
+    * `min(index.keeper, increment keeper)` — both recovered by left joins
+    * — so every increment unit's cut decision (`total >= 2` and
     * `(doc_id, idx) != keeper`) is identical to running [[dedupUnits]]
     * over corpus ∪ increment (pinned in ParagraphDedupSpec on a random
     * corpus with INTERLEAVED doc ids). REQUIRES the increment's doc ids
@@ -476,8 +444,8 @@ object ParagraphDedup {
     * monotone form is ENFORCED here — see [[IdContract]].
     *
     * Scale shape: the increment side is O(|increment|) everywhere; the
-    * index join is the only corpus-sized term and co-locates against the
-    * bucketed unit table on a lake ([[writeParagraphIndex]]). Nothing
+    * index joins are the only corpus-sized terms and co-locate against the
+    * bucketed unit segments on a lake ([[writeParagraphIndex]]). Nothing
     * re-reads corpus text. The dup set and cut counts checkpoint small
     * (affected increment docs only); the emission tail is lazy and
     * row-local, as in the batch form.
@@ -505,9 +473,6 @@ object ParagraphDedup {
       () => f.base.unpersist(blocking = false))
   }
 
-  private case class IncrementalKeptFrames(
-      base: DataFrame, dupSet: DataFrame, cuts: DataFrame)
-
   /** The shared increment-side derivation of [[incrementalDedupUnits]]:
     * persisted unit substrate, union-verdict dup set (checkpointed), cut
     * counts (checkpointed). On failure the substrate is released here; on
@@ -516,29 +481,15 @@ object ParagraphDedup {
     */
   private def incrementalKeptFrames(incoming: DataFrame,
       index: ParagraphIndex, idCol: String,
-      textCol: String): IncrementalKeptFrames = {
+      textCol: String): ParagraphFrames = {
     IdContract.requireAbove(incoming, idCol, index.maxDocId,
       "incrementalDedupUnits")
     val base = unitTable(incoming, index.sepRegex, idCol, textCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val incAgg = base.filter(!col("blank"))
-        .groupBy("fp")
-        .agg(count(lit(1)).as("inc_nocc"),
-          min(struct(col("doc_id"), col("idx"))).as("inc_keeper"))
-      val d = incAgg
-        .join(index.units.select(col("fp"), col("nocc").as("idx_nocc"),
-          col("keeper").as("idx_keeper")), Seq("fp"), "left")
-        .select(col("fp"),
-          (col("inc_nocc") + coalesce(col("idx_nocc"), lit(0L))).as("nocc"),
-          when(col("idx_keeper").isNull, col("inc_keeper"))
-            .otherwise(least(col("idx_keeper"), col("inc_keeper")))
-            .as("keeper"))
-        .filter(col("nocc") >= 2)
-        .select("fp", "keeper")
-        .localCheckpoint()
+      val d = index.store.unionVerdict(fpAgg(base, "inc_")).localCheckpoint()
       val c = cutCounts(base, d).localCheckpoint()
-      IncrementalKeptFrames(base, d, c)
+      ParagraphFrames(base, d, c)
     } catch {
       case t: Throwable => base.unpersist(blocking = false); throw t
     }
@@ -558,8 +509,7 @@ object ParagraphDedup {
       sepRegex: String): DataFrame = {
     require(sepRegex.nonEmpty, "separator regex must be non-empty")
     val idx = ParagraphIndex(
-      unitFpAgg(corpus, sepRegex, "doc_id", "text")
-        .persist(StorageLevel.MEMORY_AND_DISK),
+      SegmentStore.of(FpKey, unitFpAgg(corpus, sepRegex, "doc_id", "text")),
       sepRegex)
     try incrementalDedupUnits(incoming, idx)
     finally idx.unpersist()

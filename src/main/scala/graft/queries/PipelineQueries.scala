@@ -2202,9 +2202,9 @@ object PipelineQueries {
             d.filter(col("doc_id") <= c1), minLen, compactFraction = 0.7),
           d.filter(col("doc_id") > c1 && col("doc_id") <= c2)),
         d.filter(col("doc_id") > c2 && col("doc_id") <= c3))
-      require(idx.deltas.size == 1,
+      require(idx.store.deltas.size == 1,
         s"oracle gate expects fold #1 to compact and fold #2 to stay open " +
-          s"(got ${idx.deltas.size} open deltas) — retune compactFraction " +
+          s"(got ${idx.store.deltas.size} open deltas) — retune compactFraction " +
           "so the probe exercises BOTH compaction and the multi-segment " +
           "monoid merge")
       try cutPieceHashes(

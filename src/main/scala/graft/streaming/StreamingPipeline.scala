@@ -377,32 +377,24 @@ object StreamingPipeline {
   }
 
   /** Streaming incremental PARAGRAPH/LINE dedup (P55's stream form) — the
-    * sub-document pass real crawls run FIRST, as a `foreachBatch` runner
-    * mirroring [[removeDupSpansExactStream]]: every micro-batch is cleaned
-    * against the per-fingerprint `(nocc, keeper)` unit index of the corpus
-    * PLUS ALL PRIOR BATCHES
+    * sub-document pass real crawls run FIRST, as the same `foreachBatch`
+    * loop as [[removeDupSpansExactStream]] over the unit index: every
+    * micro-batch is cleaned against the per-fingerprint `(nocc, keeper)`
+    * index of the corpus PLUS ALL PRIOR BATCHES
     * ([[graft.pipeline.ParagraphDedup.incrementalDedupUnits]]), its kept
     * units handed to `sink` in [[graft.pipeline.ParagraphDedup
     * .dedupUnits]]'s verbatim-byte schema, and the index folded forward
-    * ([[graft.pipeline.ParagraphDedup.updateParagraphIndex]]) before the
-    * next batch. foreachBatch is the honest vehicle: the probe needs the
-    * batch's own per-fp AGGREGATE (occurrence counts and first-occurrence
-    * keepers — batch semantics per trigger), and the index is corpus-
-    * sized cross-batch state that lives outside the state store
-    * (disk-persistable via `writeParagraphIndex`).
+    * ([[graft.pipeline.ParagraphDedup.updateParagraphIndex]], one
+    * batch-sized segment) before the next batch; nothing is retired, for
+    * the same ownership reason.
     *
-    * With doc ids monotone across batches (the natural crawl ordering),
-    * every emitted unit row is bit-equal to the BATCH
-    * [[graft.pipeline.ParagraphDedup.dedupUnits]] run over
-    * corpus ∪ all batches restricted to that batch's docs — pinned in
-    * StreamingSpec with a duplicate paragraph planted across two
-    * micro-batches (cut only because the index fold carried batch 1's
-    * fingerprints into batch 2's probe). The fold's keeper half is an
-    * idempotent MIN; the count half SUMS (a replayed epoch would inflate
-    * `nocc` — geometry survives, see `updateParagraphIndex`), so the
-    * epoch guard below skips redundant re-folds. The caller owns
-    * `initial` (never unpersisted here); superseded folds are retired as
-    * they are replaced.
+    * With doc ids monotone across batches, every emitted unit row is
+    * bit-equal to the BATCH [[graft.pipeline.ParagraphDedup.dedupUnits]]
+    * run over corpus ∪ all batches restricted to that batch's docs —
+    * pinned in StreamingSpec with a duplicate paragraph planted across two
+    * micro-batches. The fold's count half SUMS (a replayed epoch would
+    * inflate `nocc` — geometry survives, see `updateParagraphIndex`), so
+    * the epoch guard skips redundant re-folds.
     */
   def dedupUnitsStream(docs: DataFrame,
       initial: graft.pipeline.ParagraphDedup.ParagraphIndex,
@@ -415,11 +407,8 @@ object StreamingPipeline {
         sink(graft.pipeline.ParagraphDedup.incrementalDedupUnits(batch, idx),
           epoch)
         if (epoch > lastFolded) {
-          val next = graft.pipeline.ParagraphDedup
-            .updateParagraphIndex(idx, batch)
-          next.units.count() // materialize before retiring the superseded index
-          if (idx ne initial) idx.unpersist()
-          idx = next
+          // O(batch): the fold materializes only the new delta
+          idx = graft.pipeline.ParagraphDedup.updateParagraphIndex(idx, batch)
           lastFolded = epoch
         }
       }
@@ -427,27 +416,20 @@ object StreamingPipeline {
     StreamingParagraphDedup(q, () => idx)
   }
 
-  /** Streaming COMPOSED cleanup (P58/P59's stream form) — every
-    * micro-batch runs the full production chain against the two-stage
-    * index (paragraph-probe → canonical re-join → substring-probe,
+  /** Streaming COMPOSED cleanup (P58/P59's stream form) — the same loop
+    * over the two-stage index: every micro-batch runs the full production
+    * chain (paragraph-probe → canonical re-join → substring-probe,
     * [[graft.pipeline.CleanPipeline.incrementalCleanCorpus]] — exactly
     * batch-equal under the monotone-id contract), its cleaned pieces
-    * handed to `sink`, and BOTH index halves folded forward
+    * handed to `sink`, and BOTH halves folded forward
     * ([[graft.pipeline.CleanPipeline.updateCleanIndex]]: raw batch into
-    * the paragraph half, CLEANED batch into the gram half) before the
-    * next trigger. foreachBatch for the same reason as the component
-    * twins: the probes need the batch's own aggregates, and the index is
-    * corpus-sized cross-batch state living outside the state store.
-    *
-    * At-least-once epochs + a NON-idempotent count fold (both halves):
-    * same-process retries are guarded by epoch, exactly as in
-    * [[removeDupSpansExactStream]] — a restart from checkpoint must pair
-    * a re-read index with the offsets it was folded to.
-    *
-    * Each superseded handle is retired with `retireSuperseded` — the
-    * rebuilt paragraph half only: the folded gram half shares its
-    * segments with the handle it came from, so unpersisting the old
-    * composite whole would drop segments the live index still reads.
+    * the paragraph half, CLEANED batch into the gram half) before the next
+    * trigger. Both folds SUM counts, so same-process retries are guarded
+    * by epoch as in [[removeDupSpansExactStream]] (a restart from
+    * checkpoint must pair a re-read index with the offsets it was folded
+    * to). Nothing is retired here: each half appends one batch-sized
+    * segment and shares every older one with the handle it came from (see
+    * [[graft.pipeline.SegmentStore]] ownership).
     */
   def cleanCorpusStream(docs: DataFrame,
       initial: graft.pipeline.CleanPipeline.CleanIndex,
@@ -464,13 +446,9 @@ object StreamingPipeline {
           .incrementalCleanCorpusWithCleaned(batch, idx)
         sink(pieces, epoch)
         if (epoch > lastFolded) {
-          val next = graft.pipeline.CleanPipeline
+          // O(batch): each half's fold materializes only its new delta
+          idx = graft.pipeline.CleanPipeline
             .updateCleanIndexWith(idx, batch, cleanedBatch, "doc_id", "text")
-          // materialize the rebuilt half before retiring the superseded
-          // one (the substring fold materializes its own delta)
-          next.para.units.count()
-          if (idx ne initial) idx.retireSuperseded()
-          idx = next
           lastFolded = epoch
         }
       }
@@ -488,8 +466,10 @@ object StreamingPipeline {
     * into the paragraph half, CLEANED batch reps into the LSH half, batch
     * SURVIVORS into the gram half). The probe is derived ONCE per trigger
     * and shared between the sink path and the fold (the derive-once
-    * contract of `fullCleanProbe`). Same at-least-once/epoch-guard and
-    * retirement notes as [[cleanCorpusStream]].
+    * contract of `fullCleanProbe`). Same at-least-once/epoch-guard notes
+    * as [[cleanCorpusStream]]; each superseded handle is retired with
+    * `retireSuperseded` — the rebuilt near-dup index and fingerprint set
+    * only, the paragraph and gram halves being shared segment stores.
     */
   def fullCleanCorpusStream(docs: DataFrame,
       initial: graft.pipeline.CleanPipeline.FullCleanIndex,
@@ -506,8 +486,7 @@ object StreamingPipeline {
           val next = graft.pipeline.CleanPipeline
             .updateFullCleanIndexWith(idx, batch, probe, "doc_id", "text")
           // materialize the rebuilt halves before retiring the superseded
-          // ones (the substring fold materializes its own delta)
-          next.para.units.count()
+          // ones (the segment-store folds materialize their own deltas)
           next.nearDup.docStore.count(); next.nearDup.bands.count()
           next.corpusFps.count()
           if (idx ne initial) idx.retireSuperseded()

@@ -12,8 +12,10 @@ import java.nio.file.{Files, Paths}
   *
   *   - `build_sec`          — buildFullCleanIndex over the corpus slice +
   *                            materialization (context, paid once)
-  *   - `para_fold_sec`      — updateParagraphIndex: index ∪ increment-agg
-  *                            re-aggregate (index-sized exchange)
+  *   - `para_fold_sec`      — updateParagraphIndex (compaction disabled
+  *                            to isolate the append): the increment's
+  *                            per-fp aggregate appended as ONE delta
+  *                            segment of the unit SegmentStore
   *   - `fullclean_fold_sec` — updateFullCleanIndex end-to-end (all three
   *                            halves + the fp set), probe derived once
   *   - `fp_union_distinct_sec` / `fp_anti_append_sec` — A/B of the fp-set
@@ -80,17 +82,17 @@ object FoldProbe {
 
     var idx: P.FullCleanIndex = null
     val buildSec = timed {
+      // the paragraph half comes back materialized and counted
       idx = P.buildFullCleanIndex(corpus)
-      idx.para.units.count(); idx.nearDup.docStore.count()
-      idx.nearDup.bands.count()
+      idx.nearDup.docStore.count(); idx.nearDup.bands.count()
       // the base count seeds the compaction threshold the folds read
-      idx = idx.copy(substr = idx.substr.copy(baseRows = idx.substr.base.count()))
+      idx = idx.copy(substr = idx.substr.copy(store = idx.substr.store.counted()))
       idx.corpusFps.count()
     }
     val idxSizes = Map(
-      "para_units" -> idx.para.units.count(),
+      "para_units" -> idx.para.store.baseRows,
       "neardup_bands" -> idx.nearDup.bands.count(),
-      "substr_grams" -> idx.substr.baseRows,
+      "substr_grams" -> idx.substr.store.baseRows,
       "corpus_fps" -> idx.corpusFps.count())
 
     // derive the probe once (fold input) — NOT part of any fold leg
@@ -99,14 +101,26 @@ object FoldProbe {
 
     val PD = graft.pipeline.ParagraphDedup
     val D = graft.pipeline.Dedup
+    // compactFraction=MaxValue isolates the append, as for the
+    // substring fold below; the fold materializes its own delta
     val paraFold = minOf {
-      PD.updateParagraphIndex(idx.para, inc).units.count()
+      PD.updateParagraphIndex(idx.para.copy(store =
+        idx.para.store.copy(compactFraction = Double.MaxValue)), inc)
     }
-    val fullFold = minOf {
-      val f = P.updateFullCleanIndexWith(idx, inc, probe, "doc_id", "text")
-      f.para.units.count(); f.nearDup.docStore.count()
-      f.nearDup.bands.count(); f.corpusFps.count()
-    }
+    // a compacting fold retires the segments it consumed, the index's own
+    // base included (a 1000-row increment compacts the x1 paragraph index;
+    // the gram half's delta stays under its threshold): each rep folds a
+    // private checkpointed copy of the paragraph base, made outside the
+    // timing, so every rep folds the same warm index
+    val fullFold = (0 until reps).map { _ =>
+      val para = idx.para.copy(store =
+        idx.para.store.copy(base = idx.para.store.base.localCheckpoint()))
+      isolated {
+        val f = P.updateFullCleanIndexWith(idx.copy(para = para), inc, probe,
+          "doc_id", "text")
+        f.nearDup.docStore.count(); f.nearDup.bands.count(); f.corpusFps.count()
+      }
+    }.min
     // fp-set fold A/B on identical inputs
     val incFpsAll = probe.cleanedInc
       .select(graft.pipeline.TextPipeline.fingerprint(col("text")).as("fp"))
@@ -122,7 +136,8 @@ object FoldProbe {
     // segmented substr fold (P62): the survivors folded as ONE append
     // segment — O(increment). compactFraction=MaxValue isolates the
     // append; compaction is the amortized O(index) half.
-    val segBase = idx.substr.copy(compactFraction = Double.MaxValue)
+    val segBase = idx.substr.copy(store =
+      idx.substr.store.copy(compactFraction = Double.MaxValue))
     val substrSegFold = minOf {
       D.updateExactSubstrIndex(segBase, probe.survivors)
     }
@@ -151,10 +166,10 @@ object FoldProbe {
       s"read-tax legs need >= 3 fold-half ids, got ${foldIds.length} " +
         s"(incRows=$incRows too small or degenerate doc_id distribution)")
     val (t1, t2) = (foldIds(foldIds.length / 3), foldIds(2 * foldIds.length / 3))
-    val freshBase = idx.substr.base.where(lit(true))
+    val freshBase = idx.substr.store.base.where(lit(true))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     freshBase.count()
-    val baseIdx = segBase.copy(base = freshBase)
+    val baseIdx = segBase.copy(store = segBase.store.copy(base = freshBase))
     idx.substr.unpersist()
     val segIdx = Seq(
         incFold.filter(col("doc_id") < t1),
@@ -181,8 +196,8 @@ object FoldProbe {
     //     after a restart actually costs
     val diskDir = Files.createTempDirectory("foldprobe_segdisk").toString
     D.writeExactSubstrIndex(
-      segIdx.copy(deltas = segIdx.deltas.take(2),
-        deltaRows = segIdx.deltaRows.take(2), maxDocId = t2 - 1),
+      segIdx.copy(store = segIdx.store.copy(deltas = segIdx.store.deltas.take(2),
+        deltaRows = segIdx.store.deltaRows.take(2)), maxDocId = t2 - 1),
       diskDir)
     val substrSegDiskFold = isolated {
       D.foldExactSubstrIndexOnDisk(spark, diskDir,

@@ -93,8 +93,8 @@ object FullPipeScale {
     val buildSec = timed {
       idx = P.buildFullCleanIndex(low, minLen = 20)
       // materialize every half — deployment writes them out
-      idx.para.units.count(); idx.nearDup.docStore.count()
-      idx.nearDup.bands.count(); idx.substr.base.count()
+      idx.nearDup.docStore.count()
+      idx.nearDup.bands.count(); idx.substr.store.base.count()
       idx.corpusFps.count()
     }
     // between probe reps, unpersist ONLY the probe's own checkpointed

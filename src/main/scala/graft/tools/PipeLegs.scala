@@ -111,7 +111,7 @@ object PipeLegs {
     }
     val substr = leg("b_substr_index") {
       val s = D.exactSubstrIndexAt(survivors, minLen, para.maxDocId)
-      s.copy(baseRows = s.base.count())
+      s.copy(store = s.store.counted())
     }
     val idx = P.FullCleanIndex(para, nd, substr, fps, "\n\n", 0.7)
 
@@ -166,9 +166,9 @@ object PipeLegs {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     spark.catalog.clearCache()
     val idx2 = P.readFullCleanIndex(spark, idxDir)
-    leg("r_para") { idx2.para.units.count() }
+    leg("r_para") { idx2.para.store.segments.foreach(_.count()) }
     leg("r_nd") { idx2.nearDup.docStore.count(); idx2.nearDup.bands.count() }
-    leg("r_substr") { idx2.substr.segments.foreach(_.count()) }
+    leg("r_substr") { idx2.substr.store.segments.foreach(_.count()) }
     leg("r_fps") { idx2.corpusFps.count() }
     leg("p2_full_probe") {
       P.fullCleanProbe(high, idx2, "doc_id", "text").pieces

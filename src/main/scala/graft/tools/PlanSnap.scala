@@ -39,7 +39,9 @@ object PlanSnap {
     * per-context counter) become `RDD[r1], ...`, lambda variables
     * `lambda x_<n>` (a JVM-global counter) become `lambda x_1, ...`, and
     * JVM array identity hashes such as `[D@1b2c3d` (a literal array's
-    * default toString) become `[D@h1, ...`. Structure (operators,
+    * default toString) become `[D@h1, ...`, and RDD call sites drop their
+    * source line (`at Dedup.scala:191` becomes `at Dedup.scala`, so moving
+    * code does not churn the dump). Structure (operators,
     * columns, pushed filters, join keys) is untouched, so two dumps of the
     * same plan compare byte-equal across sessions and test orders.
     */
@@ -56,8 +58,9 @@ object PlanSnap {
     val rddIds = renumber(planIds, raw"RDD\[(\d+)\]".r)((_, k) => s"RDD[r$k]")
     val lambdas = renumber(rddIds, raw"lambda (([a-z]+)_\d+)".r)((m, k) =>
       s"lambda ${m.group(2)}_$k")
-    renumber(lambdas, raw"(\[[A-Z]@[0-9a-f]+)\b".r)((m, k) =>
+    val hashes = renumber(lambdas, raw"(\[[A-Z]@[0-9a-f]+)\b".r)((m, k) =>
       m.group(1).takeWhile(_ != '@') + s"@h$k")
+    raw"at (\w+\.scala):\d+".r.replaceAllIn(hashes, "at $1")
   }
 
   def main(args: Array[String]): Unit = {

@@ -53,7 +53,8 @@ object SegLegs {
         D.updateExactSubstrIndex(f1,
           d.filter(col("doc_id") > c2 && col("doc_id") <= c3))
       }
-      require(f2.deltas.size == 1, s"expected 1 open delta, got ${f2.deltas.size}")
+      require(f2.store.deltas.size == 1,
+        s"expected 1 open delta, got ${f2.store.deltas.size}")
       leg(s"${p}probe_q4") {
         D.incrementalRemoveDupSpansExact(
             d.filter(col("doc_id") > c3), f2)

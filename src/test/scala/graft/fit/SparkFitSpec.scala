@@ -243,6 +243,43 @@ class SparkFitSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("fitRdd cuts a parallelize input's lineage after the first data pass") {
+    // every pass of the distributed path runs a job over the cached fit
+    // input; with the lineage still attached each of those jobs' stages
+    // carries the ParallelCollectionRDD, and its tasks re-ship their slice
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val prob = RandomProblem(n = 120, p = 5, family = Gaussian, seed = 17L)
+    val rdd = mkRdd(prob.x, prob.y)
+    val marker = "fit-lineage-marker"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add((Option(e.properties)
+            .map(_.getProperty("spark.job.description"))
+            .orNull,
+          e.stageInfos.exists(_.rddInfos.exists(_.name == "ParallelCollectionRDD"))))
+    }
+    sc.addSparkListener(listener)
+    try {
+      SlopeEstimator.fitRdd(rdd, Gaussian, 1, 5, Array.tabulate(5)(i => s"f$i"),
+        Array.empty, SlopeConfig(nSigma = 8, localFitThreshold = 0L))
+      // the listener bus is asynchronous: a marker job's start event
+      // arrives after every fit job's
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.asScala.exists(_._1 == marker) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      val fitJobs = jobs.asScala.toSeq.takeWhile(_._1 != marker)
+      assert(fitJobs.size >= 5, s"expected a multi-pass fit, got ${fitJobs.size} jobs")
+      assert(fitJobs.count(_._2) == 1,
+        s"${fitJobs.count(_._2)} of ${fitJobs.size} fit jobs still read the parallelize lineage")
+      assert(rdd.count() == 120L, "the caller's RDD must stay usable after the fit")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("a single VectorUDT features column works end-to-end (ml.Pipeline form)") {
     val prob = RandomProblem(n = 100, p = 4, family = Gaussian, seed = 88L)
     val sp = spark; import sp.implicits._

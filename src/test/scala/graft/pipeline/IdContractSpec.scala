@@ -45,6 +45,9 @@ class IdContractSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("paragraph index: build watermarks, probe and fold reject a low id, fold advances") {
     val idx = ParagraphDedup.buildParagraphIndex(corpus)
+    // a fold shares the segments of the handle it came from (SegmentStore
+    // ownership): state is retired through the newest handle only
+    var live = idx
     try {
       assert(idx.maxDocId == 5L)
       assertViolates("probe") {
@@ -53,10 +56,9 @@ class IdContractSpec extends AnyFunSuite with BeforeAndAfterAll {
       assertViolates("fold") {
         ParagraphDedup.updateParagraphIndex(idx, violating)
       }
-      val folded = ParagraphDedup.updateParagraphIndex(idx, ok)
-      try assert(folded.maxDocId == 9L)
-      finally folded.unpersist()
-    } finally idx.unpersist()
+      live = ParagraphDedup.updateParagraphIndex(idx, ok)
+      assert(live.maxDocId == 9L)
+    } finally live.unpersist()
   }
 
   test("exact-substr index: probe and fold reject a low id; watermark round-trips") {
@@ -136,12 +138,12 @@ class IdContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spans.count() >= 1L)
     // an empty increment is a no-op against a watermarked index, not an error
     val idx = ParagraphDedup.buildParagraphIndex(corpus)
+    var live = idx // retired through the newest handle, as above
     try {
       assert(ParagraphDedup.incrementalDedupUnits(
         df().limit(0), idx).count() == 0L)
-      val folded = ParagraphDedup.updateParagraphIndex(idx, df().limit(0))
-      try assert(folded.maxDocId == 5L)
-      finally folded.unpersist()
-    } finally idx.unpersist()
+      live = ParagraphDedup.updateParagraphIndex(idx, df().limit(0))
+      assert(live.maxDocId == 5L)
+    } finally live.unpersist()
   }
 }

@@ -196,35 +196,70 @@ class ParagraphDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("index fold == direct build over the union; parquet roundtrip probes identically") {
+    // corpus: 16 distinct units (doc 6 is 12 filler paragraphs), so at the
+    // default compactFraction 0.25 fold 1 (3 rows) stays open, fold 2
+    // (2 more) compacts and fold 3 (3 rows vs a 19-row base) stays open
     val corpus = docsDf(
       0L -> "shared para\n\nunique a",
       2L -> "unique b\n\nshared para",
-      4L -> "solo corpus doc")
-    val inc = docsDf(
-      1L -> "shared para\n\nfresh inc para",
-      3L -> "fresh inc para\n\nunique c")
+      4L -> "solo corpus doc",
+      6L -> (1 to 12).map(i => s"filler $i").mkString("\n\n"))
+    val incs = Seq(
+      docsDf(1L -> "shared para\n\nfresh inc para",
+        3L -> "fresh inc para\n\nunique c"),
+      docsDf(5L -> "unique c\n\nsecond fold para"),
+      docsDf(7L -> "second fold para\n\nshared para\n\nthird fold para"))
     def unitsOf(ix: ParagraphDedup.ParagraphIndex) =
-      ix.units.collect().map(r => (r.getLong(0), r.getLong(1),
+      ix.store.merged.collect().map(r => (r.getLong(0), r.getLong(1),
         (r.getStruct(2).getLong(0), r.getStruct(2).getLong(1)))).toSet
-    // UNWATERMARKED on purpose: the fold is a fingerprint-wise monoid, so
-    // this spec pins it under INTERLEAVED ids (corpus even, inc odd) —
-    // which the monotone watermark would reject by design; IdContractSpec
-    // covers the enforcement itself
-    val idx = ParagraphDedup.buildParagraphIndex(corpus)
-      .copy(maxDocId = IdContract.Unwatermarked)
-    val folded = ParagraphDedup.updateParagraphIndex(idx, inc)
-    val direct = ParagraphDedup.buildParagraphIndex(corpus.unionByName(inc))
-    assert(unitsOf(folded) == unitsOf(direct), "fold != direct build")
-    val dir = java.nio.file.Files.createTempDirectory("graft-pidx").toString
-    ParagraphDedup.writeParagraphIndex(folded, dir)
-    val rd = ParagraphDedup.readParagraphIndex(spark, dir)
-    assert(rd.sepRegex == folded.sepRegex)
-    assert(unitsOf(rd) == unitsOf(folded), "roundtrip changed the index")
-    val probe = docsDf(5L -> "shared para\n\nfresh inc para\n\nnever seen")
-    assert(keptRows(ParagraphDedup.incrementalDedupUnits(probe, rd)) ==
-      keptRows(ParagraphDedup.incrementalDedupUnits(probe, folded)),
-      "reloaded index probes differently")
-    Seq(idx, folded, direct, rd).foreach(_.unpersist())
+    val direct = ParagraphDedup.buildParagraphIndex(
+      incs.foldLeft(corpus)(_ unionByName _))
+    val probe = docsDf(
+      9L -> "shared para\n\nfresh inc para\n\nthird fold para\n\nnever seen")
+    val want = keptRows(ParagraphDedup.incrementalDedupUnits(probe, direct))
+    // open deltas the 3-fold chain leaves at each compaction threshold
+    val openDeltas = Seq(0.0 -> 0, SegmentStore.DefaultCompactFraction -> 1,
+      Double.MaxValue -> 3)
+    for ((fraction, open) <- openDeltas) {
+      // UNWATERMARKED on purpose: the fold is a fingerprint-wise monoid, so
+      // this spec pins it under INTERLEAVED ids (corpus even, incs odd) —
+      // which the monotone watermark would reject by design; IdContractSpec
+      // covers the enforcement itself
+      val idx = ParagraphDedup.buildParagraphIndex(corpus)
+      val folded = incs.foldLeft(idx.copy(maxDocId = IdContract.Unwatermarked,
+          store = idx.store.copy(compactFraction = fraction)))(
+        ParagraphDedup.updateParagraphIndex(_, _))
+      assert(folded.store.deltas.size == open,
+        s"fraction $fraction: ${folded.store.deltas.size} open deltas, want $open")
+      assert(unitsOf(folded) == unitsOf(direct),
+        s"fraction $fraction: fold != direct build")
+      assert(keptRows(ParagraphDedup.incrementalDedupUnits(probe, folded)) == want,
+        s"fraction $fraction: folded index probes differently from a direct build")
+      val dir = java.nio.file.Files.createTempDirectory("graft-pidx").toString
+      ParagraphDedup.writeParagraphIndex(folded, dir, nBuckets = 2)
+      val rd = ParagraphDedup.readParagraphIndex(spark, dir)
+      assert(rd.sepRegex == folded.sepRegex)
+      assert(rd.store.deltas.size == open && rd.store.compactFraction == fraction,
+        s"fraction $fraction: roundtrip changed the segment layout")
+      assert(unitsOf(rd) == unitsOf(folded), "roundtrip changed the index")
+      assert(keptRows(ParagraphDedup.incrementalDedupUnits(probe, rd)) == want,
+        s"fraction $fraction: reloaded index probes differently")
+      Seq(folded, rd).foreach(_.unpersist())
+    }
+    direct.unpersist()
+  }
+
+  test("a paragraph index dir in the retired units/ layout fails with a rebuild error") {
+    val ss = spark
+    import ss.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-pidx-old").toString
+    Seq((7L, 2L)).toDF("fp", "nocc").write.parquet(s"$dir/units")
+    Seq((ParagraphDedup.ParagraphSep, 5L)).toDF("sep_regex", "max_doc_id")
+      .write.parquet(s"$dir/meta")
+    val e = intercept[IllegalArgumentException](
+      ParagraphDedup.readParagraphIndex(spark, dir))
+    assert(e.getMessage.contains(
+      "rebuild it with buildParagraphIndex + writeParagraphIndex"), e.getMessage)
   }
 
   test("fused index+dedup build == the two separate entries (r16 derive-once)") {
@@ -244,7 +279,7 @@ class ParagraphDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sep = ParagraphDedup.buildParagraphIndex(corpus)
     try {
       def unitsOf(i: ParagraphDedup.ParagraphIndex) =
-        i.units.collect().map(r => (r.getLong(0), r.getLong(1),
+        i.store.merged.collect().map(r => (r.getLong(0), r.getLong(1),
           (r.getStruct(2).getLong(0), r.getStruct(2).getLong(1)))).toSet
       assert(unitsOf(ix) == unitsOf(sep), "index differs from separate build")
       assert(ix.maxDocId == sep.maxDocId, "watermark differs")

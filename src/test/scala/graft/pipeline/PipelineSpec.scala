@@ -1168,7 +1168,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = corpus.toDF("doc_id", "text")
     val (dayA, dayB, dayC) = (df.filter(col("doc_id") % 3 === 0),
       df.filter(col("doc_id") % 3 === 1), df.filter(col("doc_id") % 3 === 2))
-    def gramSet(idx: Dedup.ExactSubstrIndex) = idx.merged.collect()
+    def gramSet(idx: Dedup.ExactSubstrIndex) = idx.store.merged.collect()
       .map(r => (r.getAs[Long]("g1"), r.getAs[Long]("g2"),
         r.getAs[Long]("nocc"),
         (r.getStruct(3).getLong(0), r.getStruct(3).getLong(1)))).toSet
@@ -1238,8 +1238,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       Dedup.buildExactSubstrIndex(days(0), minLen,
         compactFraction = Double.MaxValue))(
       Dedup.updateExactSubstrIndex(_, _))
-    assert(segOpen.deltas.size == 3 && segOpen.maxDocId == 39L,
-      s"expected 3 open deltas at wm 39, got ${segOpen.deltas.size} @ ${segOpen.maxDocId}")
+    assert(segOpen.store.deltas.size == 3 && segOpen.maxDocId == 39L,
+      s"expected 3 open deltas at wm 39, got ${segOpen.store.deltas.size} @ ${segOpen.maxDocId}")
     val segProbe = shape(
       Dedup.incrementalRemoveDupSpansExact(probeDay, segOpen))
     assert(segProbe == batch, "segmented probe (4 segments) diverged from batch")
@@ -1255,10 +1255,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val segCompacted = Seq(days(1), days(2), days(3)).foldLeft(
       Dedup.buildExactSubstrIndex(days(0), minLen,
         compactFraction = 0.0))(Dedup.updateExactSubstrIndex(_, _))
-    assert(segCompacted.deltas.isEmpty, "compaction left open deltas")
+    assert(segCompacted.store.deltas.isEmpty, "compaction left open deltas")
     val fresh = Dedup.buildExactSubstrIndex(
       days.take(4).reduce(_ unionByName _), minLen)
-    assert(gramSet(segCompacted.base) == gramSet(fresh.base),
+    assert(gramSet(segCompacted.store.base) == gramSet(fresh.store.base),
       "compacted base diverged from a fresh build")
     assert(shape(Dedup.incrementalRemoveDupSpansExact(
       probeDay, segCompacted)) == batch, "post-compaction probe diverged")
@@ -1275,9 +1275,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     Dedup.writeExactSubstrIndex(twoSeg, tmp, nBuckets = 4)
     Dedup.foldExactSubstrIndexOnDisk(spark, tmp, days(2))
     val loaded = Dedup.readExactSubstrIndex(spark, tmp)
-    assert(loaded.segments.size == 3 && loaded.maxDocId == 29L &&
+    assert(loaded.store.segments.size == 3 && loaded.maxDocId == 29L &&
       loaded.minLen == minLen,
-      s"reloaded index: ${loaded.segments.size} segments @ ${loaded.maxDocId}")
+      s"reloaded index: ${loaded.store.segments.size} segments @ ${loaded.maxDocId}")
     val loadedFolded = Dedup.updateExactSubstrIndex(loaded, days(3))
     assert(shape(Dedup.incrementalRemoveDupSpansExact(
       probeDay, loadedFolded)) == batch,
@@ -1305,7 +1305,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fsPath = new org.apache.hadoop.fs.Path("/")
     val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def segCount(dir: String): Int =
-      Dedup.readExactSubstrIndex(spark, dir).segments.size
+      Dedup.readExactSubstrIndex(spark, dir).store.segments.size
 
     // baseline: base over days 0-9, one clean disk fold of 10-19
     val base = Dedup.buildExactSubstrIndex(slice(0, 10), minLen,

@@ -451,7 +451,7 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     val idx = graft.pipeline.Dedup.buildExactSubstrIndex(
       docs.filter(col("doc_id") % 2 === 0), 20)
     val f = graft.pipeline.Dedup.incrementalExactSubstrFramesOver(
-      docs.filter(col("doc_id") % 2 === 1), idx.segments, idx.minLen,
+      docs.filter(col("doc_id") % 2 === 1), idx.store, idx.minLen,
       "doc_id", "text", keepFirst = true)
     try {
       import org.apache.spark.storage.StorageLevel
@@ -484,7 +484,7 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
         compactFraction = Double.MaxValue),
       docs.filter(col("doc_id") > mx / 3 && col("doc_id") <= 2 * mx / 3))
     val f = graft.pipeline.Dedup.incrementalExactSubstrFramesOver(
-      docs.filter(col("doc_id") > 2 * mx / 3), idx.segments, 20,
+      docs.filter(col("doc_id") > 2 * mx / 3), idx.store, 20,
       "doc_id", "text", keepFirst = true)
     try {
       val p = f.cuts.queryExecution.executedPlan.toString()
@@ -554,9 +554,9 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
       val probe = docs.filter(col("doc_id") > 3 * mx / 4)
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       val fSeg = graft.pipeline.Dedup.incrementalExactSubstrFramesOver(
-        probe, seg.segments, 20, "doc_id", "text", keepFirst = true)
+        probe, seg.store, 20, "doc_id", "text", keepFirst = true)
       val fMono = graft.pipeline.Dedup.incrementalExactSubstrFramesOver(
-        probe, mono.segments, 20, "doc_id", "text", keepFirst = true)
+        probe, mono.store, 20, "doc_id", "text", keepFirst = true)
       try {
         val (pSeg, pMono) = (
           fSeg.cuts.queryExecution.executedPlan,
@@ -669,7 +669,8 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("plan normalization renumbers identity hashes, RDD ids and lambda names like expression ids") {
     def plan(ids: Seq[Int], hashes: Seq[String], lam: Int): String =
-      s"Scan ExistingRDD MapPartitionsRDD[${ids(0) * 7}] at localCheckpoint\n" +
+      s"Scan ExistingRDD MapPartitionsRDD[${ids(0) * 7}] at localCheckpoint" +
+        s" at Dedup.scala:${lam + 100}\n" +
         s"Project [x#${ids(0)}, f(q#${ids(1)}, [D@${hashes(0)}) AS c#${ids(2)}]\n" +
         s"+- Filter (nearest(y#${ids(0)}, [D@${hashes(1)}, [D@${hashes(0)}) > 0 AND " +
         s"exists(v#${ids(1)}, lambdafunction(lambda x_$lam#${ids(2)} > 0, lambda x_$lam#${ids(2)})))"
@@ -681,7 +682,7 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     // every allocator-assigned token differs
     assert(a == graft.tools.PlanSnap.normalizeIds(
       plan(Seq(40, 41, 42), Seq("1a2b3c", "ff00ee"), 203)))
-    assert(a == "Scan ExistingRDD MapPartitionsRDD[r1] at localCheckpoint\n" +
+    assert(a == "Scan ExistingRDD MapPartitionsRDD[r1] at localCheckpoint at Dedup.scala\n" +
       "Project [x#e1, f(q#e2, [D@h1) AS c#e3]\n" +
       "+- Filter (nearest(y#e1, [D@h2, [D@h1) > 0 AND " +
       "exists(v#e2, lambdafunction(lambda x_1#e3 > 0, lambda x_1#e3)))")

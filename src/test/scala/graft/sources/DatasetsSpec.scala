@@ -48,17 +48,28 @@ class DatasetsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("heart fits end-to-end: binomial path on the real 270x18 design") {
-    val df = Datasets.heart(spark, dir)
-    val model = SlopeEstimator.fit(df, Datasets.heartFeatures, "y",
-      SlopeConfig(family = "binomial", nSigma = 15))
-    assert(model.classNames.sameElements(Array("absence", "presence")))
-    // heart disease vs these predictors is a well-conditioned logistic
-    // problem: the least-penalized step must rank strongly (lit. AUC ~0.9)
-    val auc = model.score(df, Datasets.heartFeatures, "y", "auc")
-    assert(auc.last > 0.85, s"heart AUC ${auc.last}")
-    val mis = model.score(df, Datasets.heartFeatures, "y", "misclass")
-    val nullRate = 120.0 / 270.0 // 120 presence, 150 absence
-    assert(mis.last < nullRate, s"misclass ${mis.last} vs null $nullRate")
+    // scoring a 15-step path must compile: with the codegen fallback off,
+    // a generated class past the JVM's 64 KB method limit fails the case
+    // instead of silently running the stage interpreted
+    val fallback = "spark.sql.codegen.fallback"
+    val prior = spark.conf.getOption(fallback)
+    spark.conf.set(fallback, "false")
+    try {
+      val df = Datasets.heart(spark, dir)
+      val model = SlopeEstimator.fit(df, Datasets.heartFeatures, "y",
+        SlopeConfig(family = "binomial", nSigma = 15))
+      assert(model.classNames.sameElements(Array("absence", "presence")))
+      // heart disease vs these predictors is a well-conditioned logistic
+      // problem: the least-penalized step must rank strongly (lit. AUC ~0.9)
+      val auc = model.score(df, Datasets.heartFeatures, "y", "auc")
+      assert(auc.last > 0.85, s"heart AUC ${auc.last}")
+      val mis = model.score(df, Datasets.heartFeatures, "y", "misclass")
+      val nullRate = 120.0 / 270.0 // 120 presence, 150 absence
+      assert(mis.last < nullRate, s"misclass ${mis.last} vs null $nullRate")
+    } finally prior match {
+      case Some(v) => spark.conf.set(fallback, v)
+      case None => spark.conf.unset(fallback)
+    }
   }
 
   test("bodyfat fits end-to-end: gaussian path explains Siri body fat") {

@@ -368,7 +368,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val finalIdx = h.currentIndex()
     val fresh = graft.pipeline.Dedup.buildExactSubstrIndex(
       corpus.unionByName((batch1 ++ batch2).toDF("doc_id", "text")), minLen)
-    def gramSet(i: graft.pipeline.Dedup.ExactSubstrIndex) = i.merged.collect()
+    def gramSet(i: graft.pipeline.Dedup.ExactSubstrIndex) = i.store.merged.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getAs[Long]("nocc"),
         (r.getStruct(3).getLong(0), r.getStruct(3).getLong(1)))).toSet
     assert(gramSet(finalIdx) == gramSet(fresh),
@@ -419,8 +419,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally h.query.stop()
     val finalIdx = h.currentIndex()
     // the O(batch) fold left exactly one immutable delta per micro-batch
-    assert(finalIdx.deltas.size == 2 && finalIdx.maxDocId == 21L,
-      s"expected base + 2 deltas @ wm 21, got ${finalIdx.deltas.size} " +
+    assert(finalIdx.store.deltas.size == 2 && finalIdx.maxDocId == 21L,
+      s"expected base + 2 deltas @ wm 21, got ${finalIdx.store.deltas.size} " +
         s"@ ${finalIdx.maxDocId}")
     // ids are monotone across corpus -> b1 -> b2, so the stream's pieces
     // must be bit-equal to ONE batch run over everything, per batch doc
@@ -435,14 +435,13 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"docs 10 (vs base) and 20 (vs batch-1 delta) must be cut: $cutDocs")
     // compacting the surviving handle recovers the one-base state — the
     // periodic deployment job — gram for gram vs a fresh union build
-    val compacted = graft.pipeline.Dedup
-      .compactExactSubstrIndex(finalIdx)
+    val compacted = finalIdx.store.compact()
     val fresh = graft.pipeline.Dedup.buildExactSubstrIndex(
       corpus.unionByName((batch1 ++ batch2).toDF("doc_id", "text")), minLen)
     def gramSet(grams: org.apache.spark.sql.DataFrame) = grams.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getAs[Long]("nocc"),
         (r.getStruct(3).getLong(0), r.getStruct(3).getLong(1)))).toSet
-    assert(gramSet(compacted.base) == gramSet(fresh.base),
+    assert(gramSet(compacted.base) == gramSet(fresh.store.base),
       "compacted post-stream index must equal a fresh build over the union")
     compacted.unpersist(); fresh.unpersist()
   }
@@ -483,7 +482,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val finalIdx = h.currentIndex()
     val fresh = graft.pipeline.ParagraphDedup.buildParagraphIndex(union)
     def unitsOf(i: graft.pipeline.ParagraphDedup.ParagraphIndex) =
-      i.units.collect().map(r => (r.getLong(0), r.getLong(1),
+      i.store.merged.collect().map(r => (r.getLong(0), r.getLong(1),
         (r.getStruct(2).getLong(0), r.getStruct(2).getLong(1)))).toSet
     assert(unitsOf(finalIdx) == unitsOf(fresh),
       "post-stream index must equal a fresh build over the union")
@@ -567,7 +566,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     def setEqual(a: org.apache.spark.sql.DataFrame,
                  b: org.apache.spark.sql.DataFrame): Boolean =
       a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
-    assert(setEqual(finalIdx.substr.merged, freshFull.substr.merged),
+    assert(setEqual(finalIdx.substr.store.merged, freshFull.substr.store.merged),
       "folded substring-gram half diverges from a fresh build over the union")
     assert(finalIdx.substr.maxDocId == freshFull.substr.maxDocId,
       "substring-half watermark diverges from the fresh build")
@@ -584,24 +583,54 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     def run(c: Char, n: Int): String = (1 to n).map(i => s"$c$i").mkString(" ")
     // gram-segment rows at minLen 20: the corpus base holds 41; batch 1
     // adds 81 (> 0.25 × 41: the fold compacts, base 122), batches 2 and 3
-    // add 11 and 16 (27 <= 0.25 × 122: both stay open deltas)
-    val corpus = Seq((0L, run('a', 60))).toDF("doc_id", "text")
+    // add 11 and 16 (27 <= 0.25 × 122: both stay open deltas). The corpus
+    // doc is the same 60 tokens as 15 four-token paragraphs, so the unit
+    // base holds 15 rows and each one-paragraph batch adds 1 (3 <= 0.25 ×
+    // 15: every paragraph fold stays an open delta)
+    val corpus = Seq((0L, (1 to 60).grouped(4)
+      .map(_.map(i => s"a$i").mkString(" ")).mkString("\n\n")))
+      .toDF("doc_id", "text")
     val batches = Seq(Seq((10L, run('b', 100))), Seq((20L, run('c', 30))),
       Seq((30L, run('d', 35))))
+    def stream[I](idx0: I, start: (org.apache.spark.sql.DataFrame, I) =>
+        (org.apache.spark.sql.streaming.StreamingQuery, () => I)): I = {
+      val input = MemoryStream[(Long, String)]
+      val (q, current) = start(input.toDF().toDF("doc_id", "text"), idx0)
+      try batches.foreach { b =>
+        input.addData(b: _*); q.processAllAvailable()
+      } finally q.stop()
+      current()
+    }
+    def allCached(store: graft.pipeline.SegmentStore): Boolean =
+      store.segments.forall(
+        _.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
     val idx0 = graft.pipeline.CleanPipeline.buildFullCleanIndex(corpus)
-    val input = MemoryStream[(Long, String)]
-    val h = StreamingPipeline.fullCleanCorpusStream(
-      input.toDF().toDF("doc_id", "text"), idx0, (pieces, _) => pieces.count())
-    try batches.foreach { b =>
-      input.addData(b: _*); h.query.processAllAvailable()
-    } finally h.query.stop()
-    val finalIdx = h.currentIndex()
+    val finalIdx = stream(idx0, (d, i: graft.pipeline.CleanPipeline.FullCleanIndex) => {
+      val h = StreamingPipeline.fullCleanCorpusStream(d, i, (pieces, _) => pieces.count())
+      (h.query, h.currentIndex)
+    })
     val substr = finalIdx.substr
-    assert(substr.deltas.nonEmpty && substr.deltas.size < batches.size,
-      s"fixture must compact once and leave a delta open: ${substr.deltas.size} deltas")
-    assert(substr.segments.forall(
-        _.storageLevel != org.apache.spark.storage.StorageLevel.NONE),
+    assert(substr.store.deltas.nonEmpty && substr.store.deltas.size < batches.size,
+      s"fixture must compact once and leave a delta open: ${substr.store.deltas.size} deltas")
+    assert(allCached(substr.store),
       "a superseded handle's retirement dropped a segment the live index reads")
+    assert(finalIdx.para.store.deltas.size == batches.size,
+      s"fixture must leave every paragraph delta open: ${finalIdx.para.store.deltas.size}")
+    assert(allCached(finalIdx.para.store),
+      "a superseded handle's retirement dropped a paragraph segment the live index reads")
+    // the two-stage composed stream shares both halves the same way
+    val clean0 = graft.pipeline.CleanPipeline.buildCleanIndex(corpus)
+    val cleanIdx = stream(clean0, (d, i: graft.pipeline.CleanPipeline.CleanIndex) => {
+      val h = StreamingPipeline.cleanCorpusStream(d, i, (pieces, _) => pieces.count())
+      (h.query, h.currentIndex)
+    })
+    assert(cleanIdx.para.store.deltas.size == batches.size &&
+      cleanIdx.substr.store.deltas.nonEmpty,
+      s"composed fixture: ${cleanIdx.para.store.deltas.size} paragraph and " +
+        s"${cleanIdx.substr.store.deltas.size} gram deltas open")
+    assert(allCached(cleanIdx.para.store) && allCached(cleanIdx.substr.store),
+      "the composed stream dropped a segment the live index reads")
+    cleanIdx.unpersist(); clean0.unpersist()
     // the live index probes exactly like a fresh build over the union
     val probe = Seq((40L, s"${run('e', 50)} ${run('a', 25)} ${run('d', 25)}"))
       .toDF("doc_id", "text")
@@ -656,9 +685,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val finalIdx = h.currentIndex()
     val fresh = graft.pipeline.CleanPipeline.buildCleanIndex(union)
     def unitSet(i: graft.pipeline.ParagraphDedup.ParagraphIndex) =
-      i.units.collect().map(r => (r.getLong(0), r.getLong(1),
+      i.store.merged.collect().map(r => (r.getLong(0), r.getLong(1),
         (r.getStruct(2).getLong(0), r.getStruct(2).getLong(1)))).toSet
-    def gramSet(i: graft.pipeline.Dedup.ExactSubstrIndex) = i.merged.collect()
+    def gramSet(i: graft.pipeline.Dedup.ExactSubstrIndex) = i.store.merged.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getAs[Long]("nocc"),
         (r.getStruct(3).getLong(0), r.getStruct(3).getLong(1)))).toSet
     assert(unitSet(finalIdx.para) == unitSet(fresh.para),

@@ -66,7 +66,7 @@ def main():
                      "price the on-disk LSM lifecycle (crash-retryable fold + "
                      "cold-restart probe)"),
         "legs": {
-            "para_fold_sec": "updateParagraphIndex (index-union-increment re-aggregate)",
+            "para_fold_sec": "updateParagraphIndex: the increment's per-fp aggregate appended as ONE delta segment of the unit SegmentStore (compaction disabled to isolate the append; rows before the shared store measured the retired index-union-increment re-aggregate)",
             "fullclean_fold_sec": "updateFullCleanIndex end-to-end (all halves + fp set), probe pre-derived",
             "fp_union_distinct_sec": "RETIRED fp fold: union + distinct over the corpus-sized set",
             "fp_anti_append_sec": "SHIPPED fp fold: increment-distinct anti-join append",
