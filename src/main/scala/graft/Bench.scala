@@ -3,10 +3,10 @@ package graft
 import java.nio.file.{Files, Paths}
 
 /** Driver-run benchmark: every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR, one JSON line on stdout (and mirrored to an
-  * artifact file — BENCH_LOCAL.json for a full-suite sf0.1 isolated run,
-  * BENCH_SCALE.json / BENCH_DEV.json otherwise —
-  * so the result survives sbt's log prefixes).
+  * SPARK_GRAFT_SF_DIR. The full JSON (per-query times included) goes to
+  * an artifact file — BENCH_LOCAL.json for a full-suite sf0.1 isolated
+  * run, BENCH_SCALE.json / BENCH_DEV.json otherwise; stdout gets one
+  * short summary line ([[summary]]).
   *
   * Each query is forced with a no-op full-evaluation write (`noop` format):
   * unlike `count()`, Catalyst cannot prune projection-only work, so
@@ -39,6 +39,14 @@ object Bench {
   private[graft] def stealPctSince(stat0: Option[(Long, Long)]): Option[Double] =
     for ((t0, s0) <- stat0; (t1, s1) <- cpuStat() if t1 > t0)
       yield math.round(10000.0 * (s1 - s0) / (t1 - t0)) / 100.0
+
+  /** The stdout line: the headline fields and the artifact path, under
+    * 2,000 chars whatever the suite size (the per-query map alone is
+    * ~4.6 KB). Tools and the multi-JVM merge read the artifact file.
+    */
+  private def summary(total: Double, nFailed: Int, steal: String, jvms: Int,
+      artifact: String): String =
+    s"""{"metric":"total","value":$total,"unit":"sec","n_failed":$nFailed,"n_registered":${SparkEntry.queries.size},"n_oracled":${SparkEntry.oracleSql.size},"steal_pct":$steal,"jvms":$jvms,"artifact":"${Paths.get(artifact).toAbsolutePath}"}"""
 
   /** MULTI-JVM headline mode (`SPARK_GRAFT_JVMS=N`, N > 1): the committed
     * BENCH_LOCAL.json used to be a single-JVM draw, and the round-13 JIT
@@ -75,8 +83,8 @@ object Bench {
         val pb = new ProcessBuilder(cmd)
         pb.environment().put("SPARK_GRAFT_JVMS", "1")
         pb.environment().put("SPARK_GRAFT_BENCH_OUT", out.toString)
-        // child stdout is its own JSON line — silence it so the parent's
-        // merged line is the only "metric" on stdout (the driver greps it)
+        // child stdout is its own summary line — silence it so the
+        // parent's merged line is the only "metric" on stdout
         pb.redirectOutput(ProcessBuilder.Redirect.DISCARD)
         pb.redirectError(ProcessBuilder.Redirect.INHERIT)
         System.err.println(s"[bench] fresh JVM ${i + 1}/$jvms ...")
@@ -127,13 +135,13 @@ object Bench {
       val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
       val json =
         s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"n_failed":$nFailed,"runs_per_query":"2-3 per JVM","agg":"per-query min across $jvms fresh JVMs","jvms":$jvms,"isolate":true,"sf":"$sfDir","steal_pct":$stealJson,"per_jvm_total":${arr("value")},"per_jvm_steal":${arr("steal_pct")},"per_jvm_jit_sec":${arr("jit_sec")},"per_jvm_wall_sec":${arr("wall_sec")},"n_registered":${SparkEntry.queries.size},"n_oracled":${SparkEntry.oracleSql.size}}"""
-      println(json)
       val sfNorm = sfDir.stripSuffix("/")
       val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
         if (sfNorm.contains("/scale/")) "BENCH_SCALE.json"
         else if (!sfNorm.endsWith("sf0.1")) "BENCH_DEV.json"
         else "BENCH_LOCAL.json")
       Files.writeString(Paths.get(outFile), json + "\n")
+      println(summary(total, nFailed, stealJson, jvms, outFile))
     } finally childOuts.foreach(java.nio.file.Files.deleteIfExists(_))
   }
 
@@ -241,7 +249,6 @@ object Bench {
     // README counters are generated from (tools/update_readme.py)
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"n_failed":$nFailed,"runs_per_query":"2-3","agg":"min","isolate":true,"sf":"$sfDir","steal_pct":$stealJson,"code_cache_peak_mb":$ccPeakMb,"code_cache_max_mb":$ccMaxMb,"code_heaps":$ccPools,"jit_sec":$jitSec,"wall_sec":$wallSec,"started_at":"$startedAt","ended_at":"$endedAt","n_registered":${SparkEntry.queries.size},"n_oracled":${SparkEntry.oracleSql.size}}"""
-    println(json)
     // artifact hygiene: BENCH_LOCAL.json holds ONLY the headline number —
     // the full suite at the driver's bench scale (sf0.1), isolated mode.
     // Scale-rehearsal corpora, A/B experiments and low-SF iteration runs
@@ -256,6 +263,7 @@ object Bench {
       else if (only.nonEmpty || !sfNorm.endsWith("sf0.1")) "BENCH_DEV.json"
       else "BENCH_LOCAL.json")
     Files.writeString(Paths.get(outFile), json + "\n")
+    println(summary(total, nFailed, stealJson, 1, outFile))
     spark.stop()
   }
 }

@@ -102,26 +102,32 @@ object MinhashSigOps {
       (s.map(_._1), s.map(_._2))
     })
 
+  /** Char-boundary byte offsets of UTF-8 `bs`: fills `offs(c)` with the
+    * byte index of char c and `offs(L) = bs.length`, returns L. `offs` is
+    * sized `bs.length + 1` (the byte-scan worst case), NOT numChars+1:
+    * numChars derives from lead-byte widths while this scan counts
+    * non-continuation bytes, and on malformed UTF-8 (binary-cast strings)
+    * the two disagree — a numChars-sized array would overflow. Hostile
+    * bytes just yield deterministic garbage shingles instead of an
+    * ArrayIndexOutOfBounds. Shared by every char-shingle kernel.
+    */
+  def charStarts(bs: Array[Byte], offs: Array[Int]): Int = {
+    var c = 0
+    var i = 0
+    while (i < bs.length) {
+      if ((bs(i) & 0xc0) != 0x80) { offs(c) = i; c += 1 }
+      i += 1
+    }
+    offs(c) = bs.length
+    c
+  }
+
   def signature(text: UTF8String, k: Int, n: Int): GenericArrayData = {
     val p = MinhashSig.Prime
     val lowered = text.toLowerCase
     val bs = lowered.getBytes
-    val nb = bs.length
-    // char-boundary byte offsets: offs(c) = byte index of char c; offs(L) = nb.
-    // Sized nb+1 (the byte-scan worst case), NOT numChars+1: numChars derives
-    // from lead-byte widths while the scan below counts non-continuation
-    // bytes, and on malformed UTF-8 (binary-cast strings) the two disagree —
-    // a numChars-sized array would overflow. Hostile bytes now just yield
-    // deterministic garbage shingles instead of an ArrayIndexOutOfBounds.
-    val offs = new Array[Int](nb + 1)
-    var c = 0
-    var i = 0
-    while (i < nb) {
-      if ((bs(i) & 0xc0) != 0x80) { offs(c) = i; c += 1 }
-      i += 1
-    }
-    offs(c) = nb
-    val L = c
+    val offs = new Array[Int](bs.length + 1)
+    val L = charStarts(bs, offs)
     if (L < k) return new GenericArrayData(Array.empty[Any])
     val (as, bs2) = seeds(n)
     val mins = Array.fill(n)(Long.MaxValue)

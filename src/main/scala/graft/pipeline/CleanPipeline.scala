@@ -141,7 +141,7 @@ object CleanPipeline {
       try {
         val pairs = f.verified.localCheckpoint() // eager: runs the pipeline
         releasePara() // spread reps are materialized — substrate done
-        f.candShingles.unpersist(blocking = false)
+        f.candTexts.unpersist(blocking = false)
         val clusters = Dedup.dupClusters(pairs)
         // losers = cluster members that are not their cluster's keep-best
         // winner; quality is scored on the persisted reps (every cluster
@@ -179,18 +179,19 @@ object CleanPipeline {
     *
     * ENFORCED MECHANICALLY ([[IdContract]]): both halves carry a
     * `max_doc_id` watermark maintained by build/update and persisted with
-    * the index; every probe and fold `require`s increment ids strictly
-    * above it — the paragraph half checks the RAW increment, the
-    * substring half the cleaned increment — so a violating increment
-    * fails loudly instead of silently rewriting emitted corpus text.
+    * the index; every probe checks the RAW increment once against the
+    * composed watermark, and every fold `require`s each half's increment
+    * ids strictly above its own — so a violating increment fails loudly
+    * instead of silently rewriting emitted corpus text.
     */
   final case class CleanIndex(para: ParagraphDedup.ParagraphIndex,
       substr: Dedup.ExactSubstrIndex, joiner: String) {
-    /** The composed index's watermark — the paragraph half's, which sees
-      * every raw corpus id (the substring half's may sit lower when the
-      * largest absorbed doc emitted no cleaned text).
+    /** The composed index's watermark — the largest among its halves (the
+      * paragraph half's, which sees every raw corpus id; the substring
+      * half's may sit lower when the largest absorbed doc emitted no
+      * cleaned text).
       */
-    def maxDocId: Long = para.maxDocId
+    def maxDocId: Long = math.max(para.maxDocId, substr.maxDocId)
     /** Retire the NEWEST handle: a fold shares both halves' segments with
       * the handle it came from, so a superseded handle is never retired
       * (see [[SegmentStore]] on ownership).
@@ -230,14 +231,13 @@ object CleanPipeline {
     } finally releasePara()
   }
 
-  /** Persist a composed [[CleanIndex]] — both halves' bucketed layouts
+  /** Persist a composed [[CleanIndex]] — both halves' segment layouts
     * plus a meta table pinning the joiner, mirroring
     * [[writeFullCleanIndex]] for the two-stage chain.
     */
-  def writeCleanIndex(index: CleanIndex, dir: String,
-      nBuckets: Int = 64): Unit = {
-    ParagraphDedup.writeParagraphIndex(index.para, s"$dir/para", nBuckets)
-    Dedup.writeExactSubstrIndex(index.substr, s"$dir/substr", nBuckets)
+  def writeCleanIndex(index: CleanIndex, dir: String): Unit = {
+    ParagraphDedup.writeParagraphIndex(index.para, s"$dir/para")
+    Dedup.writeExactSubstrIndex(index.substr, s"$dir/substr")
     val spark = index.para.store.base.sparkSession
     import spark.implicits._
     Seq(index.joiner).toDF("joiner")
@@ -282,11 +282,11 @@ object CleanPipeline {
     // The kept-unit emission rides the persisted increment substrate
     // (§6 derive-once — the checkpoint right here is what makes it eager)
     val (kept, release) = ParagraphDedup.incrementalDedupUnitsOnSubstrate(
-      incoming, index.para, idCol, textCol)
+      incoming, index.para, index.maxDocId, idCol, textCol)
     val cleanedInc =
       try rejoinKept(kept, index.joiner).localCheckpoint()
       finally release()
-    (Dedup.incrementalRemoveDupSpansExact(cleanedInc, index.substr), cleanedInc)
+    (Dedup.incrementalSpansUnchecked(cleanedInc, index.substr), cleanedInc)
   }
 
   /** Fold a shipped increment into both halves: the paragraph index folds
@@ -358,8 +358,9 @@ object CleanPipeline {
   final case class FullCleanIndex(para: ParagraphDedup.ParagraphIndex,
       nearDup: Dedup.NearDupIndex, substr: Dedup.ExactSubstrIndex,
       corpusFps: DataFrame, joiner: String, threshold: Double) {
-    /** The composed watermark — the paragraph half's (sees every raw id). */
-    def maxDocId: Long = para.maxDocId
+    /** The composed watermark — the largest among the three halves. */
+    def maxDocId: Long =
+      Seq(para.maxDocId, nearDup.maxDocId, substr.maxDocId).max
     def unpersist(): Unit = {
       retireSuperseded(); para.unpersist(); substr.unpersist()
     }
@@ -417,21 +418,20 @@ object CleanPipeline {
   }
 
   /** Persist a [[FullCleanIndex]] to `dir` as parquet — the cross-restart
-    * half of the daily-crawl story, composing the halves' own bucketed
-    * writers (paragraph unit segments by fp, near-dup bands by (band, bh),
-    * survivor gram segments by (g1, g2) — each co-locating its probe join
-    * on a lake) plus the fingerprint set (bucketed by fp) and a meta table
-    * pinning the joiner and verify threshold so a reloaded probe can
-    * never re-join or verify with a mismatched scheme. Watermarks ride in
-    * each half's own meta.
+    * half of the daily-crawl story, composing the halves' own writers
+    * (paragraph unit segments, near-dup doc store and bands, survivor gram
+    * segments), the fingerprint set, and a meta table pinning the joiner
+    * and verify threshold so a reloaded probe can never re-join or verify
+    * with a mismatched scheme. Every table is written in its own
+    * partitioning (file counts follow the session's parallelism); the
+    * readers cluster each probed table into their caches. Watermarks ride
+    * in each half's own meta.
     */
-  def writeFullCleanIndex(index: FullCleanIndex, dir: String,
-      nBuckets: Int = 64): Unit = {
-    ParagraphDedup.writeParagraphIndex(index.para, s"$dir/para", nBuckets)
-    Dedup.writeNearDupIndex(index.nearDup, s"$dir/neardup", nBuckets)
-    Dedup.writeExactSubstrIndex(index.substr, s"$dir/substr", nBuckets)
-    index.corpusFps.repartition(nBuckets, col("fp"))
-      .write.mode("overwrite").parquet(s"$dir/fps")
+  def writeFullCleanIndex(index: FullCleanIndex, dir: String): Unit = {
+    ParagraphDedup.writeParagraphIndex(index.para, s"$dir/para")
+    Dedup.writeNearDupIndex(index.nearDup, s"$dir/neardup")
+    Dedup.writeExactSubstrIndex(index.substr, s"$dir/substr")
+    index.corpusFps.write.mode("overwrite").parquet(s"$dir/fps")
     val spark = index.corpusFps.sparkSession
     import spark.implicits._
     Seq((index.joiner, index.threshold)).toDF("joiner", "threshold")
@@ -467,11 +467,12 @@ object CleanPipeline {
 
   private[graft] def fullCleanProbe(incoming: DataFrame, index: FullCleanIndex,
       idCol: String, textCol: String): FullCleanProbe = {
-    // stage 1: paragraph-probe + canonical re-join (watermark enforced by
-    // the paragraph probe); checkpointed — consumed by the rep collapse.
+    // stage 1: paragraph-probe + canonical re-join; the paragraph probe
+    // checks the raw increment against the composed watermark, the one
+    // check of this probe. Checkpointed — consumed by the rep collapse.
     // Emission rides the persisted increment substrate (§6 derive-once)
     val (kept, release) = ParagraphDedup.incrementalDedupUnitsOnSubstrate(
-      incoming, index.para, idCol, textCol)
+      incoming, index.para, index.maxDocId, idCol, textCol)
     val cleanedInc =
       try rejoinKept(kept, index.joiner).localCheckpoint()
       finally release()
@@ -512,7 +513,7 @@ object CleanPipeline {
       .localCheckpoint()
     // stage 3: substring-probe against the corpus-survivor gram index
     FullCleanProbe(
-      Dedup.incrementalRemoveDupSpansExact(survivors, index.substr),
+      Dedup.incrementalSpansUnchecked(survivors, index.substr),
       cleanedInc, survivors)
   }
 
@@ -547,10 +548,10 @@ object CleanPipeline {
     // over (corpus ∪ increment) re-shuffles and re-aggregates the whole
     // index-sized set on EVERY daily fold, while the append side is
     // increment-sized — the corpus set streams through the join probe
-    // unchanged (and on a lake the bucketed-by-fp layout makes that probe
-    // bucket-local). Set semantics are identical: the increment's distinct
-    // fps minus those already present, appended. FOLDPROBE.json carries
-    // the measured decade rows for this shape.
+    // unchanged (a reloaded set is cached clustered on fp, see
+    // readFullCleanIndex). Set semantics are identical: the increment's
+    // distinct fps minus those already present, appended. FOLDPROBE.json
+    // carries the measured decade rows for this shape.
     val incFps = probe.cleanedInc
       .select(TextPipeline.fingerprint(col(textCol)).as("fp"))
       .distinct()

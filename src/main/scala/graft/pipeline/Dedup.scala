@@ -30,27 +30,6 @@ object Dedup {
         max(col("n")).cast("long").as("max_group"))
   }
 
-  /** Character k-shingles of the lowercased text: one row per (doc,
-    * shingle occurrence); `dedup = true` adds the per-doc set semantics
-    * (needed by Jaccard, NOT by minhash — min is duplicate-invariant, so
-    * the minhash path skips the distinct shuffle entirely). The explode is
-    * skew-free (cardinality ∝ doc length, bounded by the corpus' max doc
-    * size).
-    */
-  def shingles(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-               k: Int = 5, dedup: Boolean = true): DataFrame = {
-    // self-guarding length filter: Spark's sequence(1, 0) is the DESCENDING
-    // array [1, 0], so an unguarded explode would fabricate two bogus
-    // shingles for every document shorter than k
-    val raw = docs.select(col(idCol).as("doc_id"), lower(col(textCol)).as("t"))
-      .filter(length(col("t")) >= k)
-      .select(col("doc_id"),
-        explode(expr(s"sequence(1, length(t) - ${k - 1})")).as("i"),
-        col("t"))
-      .select(col("doc_id"), expr(s"substring(t, i, $k)").as("sh"))
-    if (dedup) raw.distinct() else raw
-  }
-
   /** Prime field for the affine minhash family (2³¹−1, Mersenne). */
   val MinhashPrime: Long = graft.functions.MinhashSig.Prime
 
@@ -62,51 +41,15 @@ object Dedup {
   def minhashSeeds(n: Int): Array[(Long, Long)] =
     graft.functions.MinhashSig.seedsFor(n)
 
-  /** MinHash signatures: for each of `nHashes` affine seeds, the minimum
-    * `(a_i·h + b_i) mod p` over the doc's shingle base hashes
-    * `h = md5₆₀(shingle) mod p`. One md5 per shingle OCCURRENCE total — the
-    * seed family is cheap integer arithmetic (an md5 per seed was the
-    * measured CPU bottleneck of the whole dedup pipeline, 18× the hash
-    * work for no statistical gain; an affine family over a prime field is
-    * the textbook universal construction). All seeds aggregate in ONE wide
-    * groupBy (map-side combinable) and unpivot afterwards — exploding a
-    * seed column first would multiply the shuffle volume by nHashes.
-    * Products stay in range: (p−1)² < 2⁶² < Long.MaxValue.
-    */
-  def minhash(shingleDf: DataFrame, nHashes: Int = 18): DataFrame = {
-    val seeds = minhashSeeds(nHashes)
-    val withBase = shingleDf.select(col("doc_id"),
-      (Det.md5Hash60(col("sh")) % MinhashPrime).as("hb"))
-    val aggs = seeds.zipWithIndex.map { case ((a, b), i) =>
-      min((col("hb") * lit(a) + lit(b)) % MinhashPrime).as(s"mh_$i")
-    }.toSeq
-    val stackArgs = (0 until nHashes).map(i => s"$i, mh_$i").mkString(", ")
-    withBase.groupBy("doc_id")
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("doc_id"),
-        expr(s"stack($nHashes, $stackArgs)").as(Seq("seed", "minhash")))
-  }
-
-  /** Banded signatures: `rowsPerBand` consecutive seeds hash together into
-    * one bucket key per (doc, band).
-    */
-  def bands(minhashDf: DataFrame, rowsPerBand: Int = 6): DataFrame =
-    minhashDf
-      .groupBy(col("doc_id"), (col("seed") / lit(rowsPerBand)).cast("int").as("band"))
-      .agg(Det.md5Hash60(
-        array_join(
-          transform(array_sort(collect_list(struct(col("seed"), col("minhash")))),
-            x => x.getField("minhash").cast("string")),
-          ",")).as("bh"))
-
-  /** ROW-LOCAL signature + banding — the zero-shuffle twin of
-    * `bands(minhash(shingles(docs, dedup = false)))`, value-identical
-    * (pinned in MinhashSigSpec / PipelineSpec): the whole-document
-    * signature comes from the native one-pass [[graft.functions.MinhashSig]]
-    * kernel (no shingle explode, no aggregation exchange), and each band's
-    * bucket key hashes `rowsPerBand` consecutive signature slots exactly
-    * like the grouped form (seed order IS array order; a trailing partial
-    * band keeps its short slice, matching `seed / rowsPerBand` grouping).
+  /** ROW-LOCAL signature + banding — the zero-shuffle twin of the
+    * exploded shingle rows → minhash → bands chain, value-identical (pinned
+    * against its test-scope definition in MinhashSigSpec):
+    * the whole-document signature comes from the native one-pass
+    * [[graft.functions.MinhashSig]] kernel (no shingle explode, no
+    * aggregation exchange), and each band's bucket key hashes
+    * `rowsPerBand` consecutive signature slots exactly like the grouped
+    * form (seed order IS array order; a trailing partial band keeps its
+    * short slice, matching `seed / rowsPerBand` grouping).
     * Output (doc_id, band, bh) — the signature chain of the near-dup
     * pipeline with NO shuffle until the LSH bucket groupBy itself.
     */
@@ -145,29 +88,25 @@ object Dedup {
       .select(col("pair.d1").as("d1"), col("pair.d2").as("d2"))
       .distinct()
 
-  /** Exact n-gram Jaccard on the candidate pairs only. The join is
-    * CANDIDATE-DRIVEN: cand ⋈ shingles(d1) on d1, then ⋈ shingles on
-    * (d2, sh) — every intermediate is ncand·|shingles per doc|, linear in
-    * the candidate count. (Joining two doc-restricted shingle tables on the
-    * bare shingle value instead blows up quadratically: common shingles
-    * appear in nearly every doc.)
+  /** Exact character k-shingle Jaccard on the candidate pairs only: each
+    * `(d1, d2, …)` pair joins both docs' text from `docs` (doc_id, text;
+    * unique ids) and the native [[graft.functions.ShingleJaccard]] kernel
+    * intersects the two shingle sets in the row — no shingle rows, and no
+    * shuffle beyond the two text joins. Extra candidate columns ride
+    * through ahead of `jaccard`; a pair sharing no shingle emits no row,
+    * whatever the threshold.
     */
-  def jaccardVerify(candidates: DataFrame, shingleDf: DataFrame,
-                    threshold: Double): DataFrame = {
-    val sizes = shingleDf.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val a = shingleDf.select(col("doc_id").as("da"), col("sh").as("sha"))
-    val b = shingleDf.select(col("doc_id").as("db"), col("sh").as("shb"))
-    val inter = candidates
-      .join(a, col("d1") === col("da"))
-      .join(b, col("d2") === col("db") && col("sha") === col("shb"))
-      .groupBy("d1", "d2").agg(count(lit(1)).as("nab"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "d1").withColumnRenamed("sz", "sz1"), "d1")
-      .join(sizes.withColumnRenamed("doc_id", "d2").withColumnRenamed("sz", "sz2"), "d2")
-      .select(col("d1"), col("d2"),
-        (col("nab").cast("double") /
-          (col("sz1") + col("sz2") - col("nab")).cast("double")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+  def jaccardVerify(candidates: DataFrame, docs: DataFrame, k: Int,
+      threshold: Double): DataFrame = {
+    val t = docs.select("doc_id", "text")
+    candidates
+      .join(t.toDF("d1", "t1"), "d1").join(t.toDF("d2", "t2"), "d2")
+      .select(candidates.columns.map(col) :+ graft.functions.ShingleJaccard
+        .shingleJaccard(col("t1"), col("t2"), k).as("jaccard"): _*)
+      // `jaccard > 0 && jaccard >= threshold` as ONE bound: the optimizer
+      // inlines the filter into the join condition, where each comparison
+      // would evaluate the kernel again
+      .filter(col("jaccard") >= math.max(threshold, Double.MinPositiveValue))
   }
 
   /** The full near-dup pipeline: shingle → minhash → band → bucket join →
@@ -176,7 +115,7 @@ object Dedup {
     * EAGER: the result is materialized (`localCheckpoint`) before return and
     * every intermediate cache is released. The pipeline fans out internally
     * (the rep corpus feeds both the signature chain and the candidate-doc
-    * semi-join; the candidate shingle sets feed three joins in
+    * semi-join; the candidate texts feed both text joins of
     * `jaccardVerify`) and exchange reuse does NOT fire across those
     * differently-aliased subtrees — unpersisted, one logical pass becomes
     * 3–4 full corpus scans + md5 passes. One `MEMORY_AND_DISK`
@@ -191,7 +130,7 @@ object Dedup {
     try f.verified.localCheckpoint() // eager: runs the whole pipeline
     finally {
       f.spread.unpersist(blocking = false)
-      f.candShingles.unpersist(blocking = false)
+      f.candTexts.unpersist(blocking = false)
     }
   }
 
@@ -201,7 +140,24 @@ object Dedup {
     * reused exchange, so there is nothing to persist or assert on.)
     */
   private[graft] case class NearDupFrames(
-      spread: DataFrame, candShingles: DataFrame, verified: DataFrame)
+      spread: DataFrame, candTexts: DataFrame, verified: DataFrame)
+
+  /** `docs` spread across the cluster by doc_id and persisted — the input
+    * of the per-doc signature kernel. The partition count is pinned
+    * (defaultParallelism) because AQE would coalesce an un-sized
+    * repartition of a few-MB input back to one partition — sizing by input
+    * bytes is exactly wrong for CPU-heavy map stages.
+    */
+  private def spreadDocs(docs: DataFrame): DataFrame =
+    docs.repartition(docs.sparkSession.sparkContext.defaultParallelism,
+      col("doc_id")).persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** The (doc_id, text) rows of `docs` named by a candidate pair, persisted
+    * so the semi-join runs once for both text joins of [[jaccardVerify]].
+    */
+  private def candidateTexts(cand: DataFrame, docs: DataFrame): DataFrame =
+    docs.join(cand.select(explode(array(col("d1"), col("d2"))).as("doc_id"))
+      .distinct(), Seq("doc_id"), "left_semi").persist(StorageLevel.MEMORY_AND_DISK)
 
   /** Exact-duplicate representative collapse: one row per normalized-text
     * fingerprint, the min-doc_id member as representative — the shared
@@ -233,37 +189,26 @@ object Dedup {
       nHashes: Int, rowsPerBand: Int, threshold: Double): NearDupFrames = {
     // spread docs across the cluster BEFORE the signature pass: the doc
     // table itself is small (one parquet split locally), but the per-doc
-    // signature kernel is |text|·k MD5 bytes of CPU. The partition count
-    // is pinned (defaultParallelism) because AQE would coalesce an
-    // un-sized repartition of a few-MB input back to one partition —
-    // sizing by input bytes is exactly wrong for CPU-heavy map stages.
-    // (Folding this shuffle into the groupBy by pre-partitioning on fp
-    // measured SLOWER: the groupBy's own exchange partial-aggregates
-    // map-side, collapsing duplicate texts before they cross the wire.)
-    val spread = reps.repartition(
-      reps.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // cand's two consumers (candIds, verify) reference IDENTICAL subtrees,
-    // so the bucket aggregation's exchange is reused — persisting it only
-    // adds a columnar-build barrier (measured +0.2 s for zero saved work).
+    // signature kernel is |text|·k MD5 bytes of CPU. (Folding this
+    // shuffle into the groupBy by pre-partitioning on fp measured SLOWER:
+    // the groupBy's own exchange partial-aggregates map-side, collapsing
+    // duplicate texts before they cross the wire.)
+    val spread = spreadDocs(reps)
+    // cand's two consumers (candidateTexts, verify) reference IDENTICAL
+    // subtrees, so the bucket aggregation's exchange is reused — persisting
+    // it only adds a columnar-build barrier (measured +0.2 s for zero saved
+    // work).
     // The signature chain is the zero-shuffle row-local form: native
     // per-doc kernel + in-row banding (docBands).
     val cand = candidatePairs(docBands(spread, k = k, nHashes = nHashes,
       rowsPerBand = rowsPerBand))
-    // verify ONLY candidate documents: the exact-Jaccard stage needs the
-    // deduplicated shingle SETS, and building those for the whole corpus is
-    // a corpus-sized distinct shuffle executed once per join side — while
-    // the candidate set is a vanishing fraction of docs. The semi-join
-    // keeps the whole thing lazy (no driver-side collect of ids), and AQE
-    // turns it into a broadcast once the candidate aggregate's true size is
-    // known. Candidate docs re-read the PERSISTED reps, never the source.
-    val candIds = cand
-      .select(explode(array(col("d1"), col("d2"))).as("doc_id")).distinct()
-    val candDocs = spread.join(candIds, Seq("doc_id"), "left_semi")
-    // the candidate shingle sets feed three joins in jaccardVerify (sizes +
-    // both pair sides); persisted so the semi-join + re-shingle runs once
-    val candSh = shingles(candDocs, k = k).persist(StorageLevel.MEMORY_AND_DISK)
-    NearDupFrames(spread, candSh, jaccardVerify(cand, candSh, threshold))
+    // verify ONLY candidate documents, a vanishing fraction of the corpus.
+    // The semi-join keeps the whole thing lazy (no driver-side collect of
+    // ids), and AQE turns it into a broadcast once the candidate
+    // aggregate's true size is known. Candidate docs re-read the PERSISTED
+    // reps, never the source
+    val candTexts = candidateTexts(cand, spread)
+    NearDupFrames(spread, candTexts, jaccardVerify(cand, candTexts, k, threshold))
   }
 
   /** Incremental near-duplicate detection against a pre-built LSH index —
@@ -281,11 +226,10 @@ object Dedup {
     * bucket-blowup guard as [[nearDupFrames]]: N copies of boilerplate
     * in either side would otherwise expand N candidate pairs per match).
     * REQUIRES globally disjoint doc_ids across the two sides — the
-    * verification shingle table unions both sides on doc_id.
+    * verification text table unions both sides on doc_id.
     *
-    * Scale shape: the index band table is nBands rows per corpus doc
-    * (compact enough to bucket by (band, bh) on a lake, making the probe
-    * join co-located); the increment side is O(\|incoming\|); nothing
+    * Scale shape: the index band table is nBands rows per corpus doc; the
+    * increment side is O(\|incoming\|); nothing
     * rescans the corpus — candidate corpus docs are recovered by a
     * left-semi join on the doc store, a vanishing fraction of the index.
     */
@@ -321,18 +265,13 @@ object Dedup {
   }
 
   /** Build the corpus-side [[NearDupIndex]] once; probe it with
-    * [[incrementalNearDup]] per increment. On a lake the bands table
-    * would additionally be bucketed by (band, bh) to co-locate the probe
-    * join; here both frames persist across calls, which is the property
-    * the convenience entry point (corpus `DataFrame` arg) cannot offer —
-    * it rebuilds this chain every call.
+    * [[incrementalNearDup]] per increment. Both frames persist across
+    * calls, which is the property the convenience entry point (corpus
+    * `DataFrame` arg) cannot offer — it rebuilds this chain every call.
     */
   def buildNearDupIndex(corpus: DataFrame, k: Int = 5, nHashes: Int = 18,
       rowsPerBand: Int = 6): NearDupIndex = {
-    val reps = collapseReps(corpus)
-    val spread = reps.repartition(
-      corpus.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val spread = spreadDocs(collapseReps(corpus))
     val b = docBands(spread, k = k, nHashes = nHashes, rowsPerBand = rowsPerBand)
       .persist(StorageLevel.MEMORY_AND_DISK)
     NearDupIndex(spread, b, k, nHashes, rowsPerBand,
@@ -401,19 +340,15 @@ object Dedup {
   }
 
   /** Persist a [[NearDupIndex]] to `dir` as parquet — the cross-restart
-    * half of the daily-crawl amortization story: `doc_store/` plain,
-    * `bands/` clustered into `nBuckets` files by (band, bh) (on a real
-    * warehouse this is a bucketed table so the probe equi-join co-locates
-    * against the index without shuffling it; plain parquet keeps the
-    * clustering physical so bucket-local reads stay cheap), `meta/`
-    * pinning the signature parameters so a reloaded probe can never hash
-    * with a mismatched scheme.
+    * half of the daily-crawl amortization story: `doc_store/` and `bands/`
+    * in the frames' own partitioning (file counts follow the session's
+    * parallelism, not a fixed bucket count; the reader clusters the bands
+    * into its cache), `meta/` pinning the signature parameters so a
+    * reloaded probe can never hash with a mismatched scheme.
     */
-  def writeNearDupIndex(index: NearDupIndex, dir: String,
-      nBuckets: Int = 64): Unit = {
+  def writeNearDupIndex(index: NearDupIndex, dir: String): Unit = {
     index.docStore.write.mode("overwrite").parquet(s"$dir/doc_store")
-    index.bands.repartition(nBuckets, col("band"), col("bh"))
-      .write.mode("overwrite").parquet(s"$dir/bands")
+    index.bands.write.mode("overwrite").parquet(s"$dir/bands")
     val spark = index.docStore.sparkSession
     import spark.implicits._
     Seq((index.k, index.nHashes, index.rowsPerBand, index.maxDocId))
@@ -455,13 +390,9 @@ object Dedup {
   private[graft] def nearDupPairsFromIndex(index: NearDupIndex,
       threshold: Double): DataFrame = {
     val cand = candidatePairs(index.bands)
-    val candIds = cand
-      .select(explode(array(col("d1"), col("d2"))).as("doc_id")).distinct()
-    val candSh = shingles(
-        index.docStore.join(candIds, Seq("doc_id"), "left_semi"), k = index.k)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try jaccardVerify(cand, candSh, threshold).localCheckpoint()
-    finally candSh.unpersist(blocking = false)
+    val candTexts = candidateTexts(cand, index.docStore)
+    try jaccardVerify(cand, candTexts, index.k, threshold).localCheckpoint()
+    finally candTexts.unpersist(blocking = false)
   }
 
   /** The amortized form: probe a prebuilt [[NearDupIndex]]. Only the
@@ -483,12 +414,8 @@ object Dedup {
     */
   private[graft] def incrementalNearDupFromReps(incReps: DataFrame,
       index: NearDupIndex, threshold: Double): DataFrame = {
-    val k = index.k
-    val incSpread = incReps.repartition(
-      incReps.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val incBands = docBands(
-      incSpread, k = k, nHashes = index.nHashes,
+    val incSpread = spreadDocs(incReps)
+    val incBands = docBands(incSpread, k = index.k, nHashes = index.nHashes,
       rowsPerBand = index.rowsPerBand)
     // cross-side candidates only: an increment doc and an index doc
     // sharing any (band, band-hash) bucket
@@ -496,17 +423,14 @@ object Dedup {
       .join(index.bands.select(col("doc_id").as("d2"), col("band"), col("bh")),
         Seq("band", "bh"))
       .select("d1", "d2").distinct()
-    val candSh = shingles(
-        incSpread.join(cand.select(col("d1").as("doc_id")).distinct(),
-          Seq("doc_id"), "left_semi"), k = k)
-      .unionByName(shingles(
-        index.docStore.join(cand.select(col("d2").as("doc_id")).distinct(),
-          Seq("doc_id"), "left_semi"), k = k))
+    def side(docs: DataFrame, d: String) =
+      docs.join(cand.select(col(d).as("doc_id")).distinct(), Seq("doc_id"), "left_semi")
+    val candTexts = side(incSpread, "d1").unionByName(side(index.docStore, "d2"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    try jaccardVerify(cand, candSh, threshold).localCheckpoint()
+    try jaccardVerify(cand, candTexts, index.k, threshold).localCheckpoint()
     finally {
       incSpread.unpersist(blocking = false)
-      candSh.unpersist(blocking = false)
+      candTexts.unpersist(blocking = false)
     }
   }
 
@@ -531,23 +455,19 @@ object Dedup {
     *   - the increment is spread+persisted once and banded once (the band
     *     table — nBands small rows per doc — is checkpointed and feeds
     *     both the cross bucket join and the internal bucket aggregate);
-    *   - the candidate union is verified in one pass: one shingle table
-    *     over (increment candidate docs ∪ corpus candidate docs), one
-    *     per-doc size aggregate, one intersection aggregate. A tag column
-    *     rides through the pair aggregate — (d1, d2) pairs are disjoint
-    *     across the tag (cross d2 is corpus-side, internal d2
-    *     increment-side), so grouping by it changes no group.
+    *   - the candidate union is verified in one [[jaccardVerify]] over
+    *     one text table (increment candidate docs ∪ corpus candidate
+    *     docs), with a tag column `x` riding through — (d1, d2) pairs are
+    *     disjoint across the tag (cross d2 is corpus-side, internal d2
+    *     increment-side).
     *
     * Value-identical to the two separate calls (pinned in PipelineSpec);
     * REQUIRES disjoint doc ids across the two sides, as those do.
     */
   private[graft] def incNearDupProbeFrames(incReps: DataFrame,
       index: NearDupIndex, threshold: Double): IncNearDupProbe = {
-    val k = index.k
-    val incSpread = incReps.repartition(
-      incReps.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val incBands = docBands(incSpread, k = k, nHashes = index.nHashes,
+    val incSpread = spreadDocs(incReps)
+    val incBands = docBands(incSpread, k = index.k, nHashes = index.nHashes,
       rowsPerBand = index.rowsPerBand).localCheckpoint()
     val crossCand = incBands.select(col("doc_id").as("d1"), col("band"), col("bh"))
       .join(index.bands.select(col("doc_id").as("d2"), col("band"), col("bh")),
@@ -560,31 +480,14 @@ object Dedup {
       .unionByName(crossCand.select(col("d1").as("doc_id")))
       .distinct()
     val corpIds = crossCand.select(col("d2").as("doc_id")).distinct()
-    val candSh = shingles(incSpread.join(incIds, Seq("doc_id"), "left_semi"), k = k)
-      .unionByName(shingles(
-        index.docStore.join(corpIds, Seq("doc_id"), "left_semi"), k = k))
+    val candTexts = incSpread.join(incIds, Seq("doc_id"), "left_semi")
+      .unionByName(index.docStore.join(corpIds, Seq("doc_id"), "left_semi"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // jaccardVerify's candidate-driven shape with the tag carried through
-    val sizes = candSh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val a = candSh.select(col("doc_id").as("da"), col("sh").as("sha"))
-    val bSh = candSh.select(col("doc_id").as("db"), col("sh").as("shb"))
-    val verified = allCand
-      .join(a, col("d1") === col("da"))
-      .join(bSh, col("d2") === col("db") && col("sha") === col("shb"))
-      .groupBy("d1", "d2", "x").agg(count(lit(1)).as("nab"))
-      .join(sizes.withColumnRenamed("doc_id", "d1")
-        .withColumnRenamed("sz", "sz1"), "d1")
-      .join(sizes.withColumnRenamed("doc_id", "d2")
-        .withColumnRenamed("sz", "sz2"), "d2")
-      .select(col("d1"), col("d2"), col("x"),
-        (col("nab").cast("double") /
-          (col("sz1") + col("sz2") - col("nab")).cast("double")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
     val v =
-      try verified.localCheckpoint()
+      try jaccardVerify(allCand, candTexts, index.k, threshold).localCheckpoint()
       finally {
         incSpread.unpersist(blocking = false)
-        candSh.unpersist(blocking = false)
+        candTexts.unpersist(blocking = false)
       }
     IncNearDupProbe(
       v.filter(col("x")).select("d1", "d2", "jaccard"),
@@ -1532,9 +1435,9 @@ object Dedup {
     * (re-submitting an indexed doc double-counts its windows).
     *
     * Scale shape: the increment side is O(|increment|) everywhere; the
-    * index joins are the only corpus-sized terms and co-locate against the
-    * bucketed gram segments on a lake ([[writeExactSubstrIndex]]). Nothing
-    * re-reads corpus text. Cuts checkpoint small (affected increment docs
+    * index joins are the only corpus-sized terms, against gram segments
+    * a reloaded index clusters on (g1, g2) in its cache
+    * ([[readExactSubstrIndex]]). Nothing re-reads corpus text. Cuts checkpoint small (affected increment docs
     * only); the emit tail is lazy and row-local, as in the batch form.
     */
   def incrementalRemoveDupSpansExact(incoming: DataFrame,
@@ -1543,6 +1446,19 @@ object Dedup {
       emitOriginal: Boolean = false): DataFrame = {
     IdContract.requireAbove(incoming, idCol, index.maxDocId,
       "incrementalRemoveDupSpansExact")
+    incrementalSpansUnchecked(incoming, index, idCol, textCol, keepFirst,
+      emitOriginal)
+  }
+
+  /** [[incrementalRemoveDupSpansExact]] minus the watermark check — for the
+    * composed probes, which check the RAW increment once against their
+    * composed watermark before stage 1 (their stage-3 input is a subset
+    * of it).
+    */
+  private[graft] def incrementalSpansUnchecked(incoming: DataFrame,
+      index: ExactSubstrIndex, idCol: String = "doc_id",
+      textCol: String = "text", keepFirst: Boolean = true,
+      emitOriginal: Boolean = false): DataFrame = {
     val f = incrementalExactSubstrFramesOver(incoming, index.store,
       index.minLen, idCol, textCol, keepFirst)
     val cuts = // eager: affected docs only; finally: no substrate leak on failure
@@ -1553,7 +1469,7 @@ object Dedup {
   }
 
   /** Convenience form: build the index from a corpus `DataFrame`, probe
-    * once, retire it. Deployment should hold a persisted/bucketed index
+    * once, retire it. Deployment should hold a persisted index
     * ([[buildExactSubstrIndex]] / [[writeExactSubstrIndex]]) instead —
     * this rebuilds the corpus-side aggregate every call. The throwaway
     * index is UNWATERMARKED ([[IdContract]]): a one-shot probe emits only
@@ -1575,9 +1491,8 @@ object Dedup {
   /** Persist an [[ExactSubstrIndex]] in the [[SegmentStore.write]] layout,
     * `meta/` pinning `min_len` and the [[IdContract]] watermark.
     */
-  def writeExactSubstrIndex(index: ExactSubstrIndex, dir: String,
-      nBuckets: Int = 64): Unit =
-    SegmentStore.write(index.store, dir, nBuckets,
+  def writeExactSubstrIndex(index: ExactSubstrIndex, dir: String): Unit =
+    SegmentStore.write(index.store, dir,
       substrMeta(index.minLen, index.maxDocId))
 
   /** Reload a [[writeExactSubstrIndex]] dir ([[SegmentStore.read]]); a dir
@@ -1596,8 +1511,8 @@ object Dedup {
     */
   def foldExactSubstrIndexOnDisk(spark: SparkSession, dir: String,
       incoming: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", nBuckets: Int = 8): Unit =
-    SegmentStore.appendOnDisk(spark, dir, GramKeys, nBuckets, SubstrRebuild) {
+      textCol: String = "text"): Unit =
+    SegmentStore.appendOnDisk(spark, dir, SubstrRebuild) {
       meta =>
         val minLen = meta.getAs[Int]("min_len")
         val wm = IdContract.requireAboveAndAdvance(incoming, idCol,

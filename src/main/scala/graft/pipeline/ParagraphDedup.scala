@@ -404,9 +404,8 @@ object ParagraphDedup {
   /** Persist a [[ParagraphIndex]] in the [[SegmentStore.write]] layout,
     * `meta/` pinning the separator regex and the [[IdContract]] watermark.
     */
-  def writeParagraphIndex(index: ParagraphIndex, dir: String,
-      nBuckets: Int = 64): Unit =
-    SegmentStore.write(index.store, dir, nBuckets,
+  def writeParagraphIndex(index: ParagraphIndex, dir: String): Unit =
+    SegmentStore.write(index.store, dir,
       Seq(lit(index.sepRegex).as("sep_regex"),
         lit(index.maxDocId).as("max_doc_id")))
 
@@ -444,15 +443,16 @@ object ParagraphDedup {
     * monotone form is ENFORCED here — see [[IdContract]].
     *
     * Scale shape: the increment side is O(|increment|) everywhere; the
-    * index joins are the only corpus-sized terms and co-locate against the
-    * bucketed unit segments on a lake ([[writeParagraphIndex]]). Nothing
-    * re-reads corpus text. The dup set and cut counts checkpoint small
+    * index joins are the only corpus-sized terms, against unit segments a
+    * reloaded index clusters on fp in its cache ([[readParagraphIndex]]).
+    * Nothing re-reads corpus text. The dup set and cut counts checkpoint small
     * (affected increment docs only); the emission tail is lazy and
     * row-local, as in the batch form.
     */
   def incrementalDedupUnits(incoming: DataFrame, index: ParagraphIndex,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val f = incrementalKeptFrames(incoming, index, idCol, textCol)
+    val f = incrementalKeptFrames(incoming, index, index.maxDocId, idCol,
+      textCol)
     try emitKept(incoming, index.sepRegex, idCol, textCol, f.dupSet, f.cuts)
     finally f.base.unpersist(blocking = false)
   }
@@ -463,12 +463,14 @@ object ParagraphDedup {
     * tail would re-derive the increment unit table and the caller's input
     * chain once more; same §6 derive-once as [[dedupUnitsOnSubstrate]]).
     * The caller MUST invoke the returned release thunk once the emission
-    * is materialized. Value-identical to [[incrementalDedupUnits]].
+    * is materialized. Value-identical to [[incrementalDedupUnits]]; the
+    * raw increment is checked against `watermark`, the composed index's
+    * (the largest among its halves), so the composed probe checks once.
     */
   private[graft] def incrementalDedupUnitsOnSubstrate(incoming: DataFrame,
-      index: ParagraphIndex, idCol: String = "doc_id",
-      textCol: String = "text"): (DataFrame, () => Unit) = {
-    val f = incrementalKeptFrames(incoming, index, idCol, textCol)
+      index: ParagraphIndex, watermark: Long, idCol: String,
+      textCol: String): (DataFrame, () => Unit) = {
+    val f = incrementalKeptFrames(incoming, index, watermark, idCol, textCol)
     (emitKeptFromUnits(f.base, f.dupSet, f.cuts),
       () => f.base.unpersist(blocking = false))
   }
@@ -480,10 +482,9 @@ object ParagraphDedup {
     * substrate-riding entry hands back a thunk).
     */
   private def incrementalKeptFrames(incoming: DataFrame,
-      index: ParagraphIndex, idCol: String,
+      index: ParagraphIndex, watermark: Long, idCol: String,
       textCol: String): ParagraphFrames = {
-    IdContract.requireAbove(incoming, idCol, index.maxDocId,
-      "incrementalDedupUnits")
+    IdContract.requireAbove(incoming, idCol, watermark, "incrementalDedupUnits")
     val base = unitTable(incoming, index.sepRegex, idCol, textCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
@@ -496,7 +497,7 @@ object ParagraphDedup {
   }
 
   /** Convenience form: build the index from a corpus `DataFrame`, probe
-    * once, retire it. Deployment should hold a persisted/bucketed index
+    * once, retire it. Deployment should hold a persisted index
     * ([[buildParagraphIndex]] / [[writeParagraphIndex]]) instead — this
     * rebuilds the corpus-side aggregate every call. The throwaway index is
     * UNWATERMARKED: a one-shot probe emits only the increment, so there is

@@ -152,18 +152,18 @@ object SegmentStore {
   private def segmentDir(dir: String, i: Int): String = f"$dir/seg-$i%05d"
 
   /** Persist a store to `dir` as an APPEND-ONLY layout: `seg-00000/`
-    * (base) … `seg-0000k/` (deltas), each clustered by the keys into
-    * `nBuckets` files (a bucketed table on a warehouse, so the probe join
-    * co-locates without shuffling the index), plus `meta/`: the caller's
+    * (base) … `seg-0000k/` (deltas), each written in its own partitioning
+    * — an aggregate is already hash-partitioned on its keys and AQE
+    * coalesces small partitions, so file counts follow
+    * `spark.sql.shuffle.partitions` ([[read]] clusters into its cache
+    * either way) — plus `meta/`: the caller's
     * `meta` columns (its [[IdContract]] watermark and what pins its unit
     * notion), `compact_fraction` and per-segment row counts (an uncounted
     * base stays [[UncountedRows]]).
     */
-  def write(store: SegmentStore, dir: String, nBuckets: Int,
-      meta: Seq[Column]): Unit = {
+  def write(store: SegmentStore, dir: String, meta: Seq[Column]): Unit = {
     store.segments.zipWithIndex.foreach { case (s, i) =>
-      s.repartition(nBuckets, store.keys.map(col): _*)
-        .write.mode("overwrite").parquet(segmentDir(dir, i))
+      s.write.mode("overwrite").parquet(segmentDir(dir, i))
     }
     writeMeta(store.base.sparkSession, dir, meta, store.compactFraction,
       store.baseRows +: store.deltaRows)
@@ -256,15 +256,13 @@ object SegmentStore {
     * (a retry redoes it) or wholly post-fold (a retry fails LOUDLY on the
     * advanced watermark), never wedged.
     */
-  def appendOnDisk(spark: SparkSession, dir: String, keys: Seq[String],
-      nBuckets: Int, rebuild: String)(
+  def appendOnDisk(spark: SparkSession, dir: String, rebuild: String)(
       delta: Row => (DataFrame, Seq[Column])): Unit = {
     val (meta, segRows) = readMeta(spark, dir, rebuild)
     val (agg, nextMeta) = delta(meta)
     val fs = fsOf(spark, dir)
     val segTmp = new Path(s"$dir/.seg.tmp")
-    agg.repartition(nBuckets, keys.map(col): _*)
-      .write.mode("overwrite").parquet(segTmp.toString)
+    agg.write.mode("overwrite").parquet(segTmp.toString)
     val segDir = new Path(segmentDir(dir, segRows.size))
     fs.delete(segDir, true)
     require(fs.rename(segTmp, segDir), s"segment rename failed under $dir")

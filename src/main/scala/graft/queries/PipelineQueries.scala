@@ -1052,12 +1052,7 @@ object PipelineQueries {
       .select(col("doc_id").as("d1"), (col("doc_id") + lit(1L)).as("d2"))
     val ids = cand.select(explode(array(col("d1"), col("d2"))).as("doc_id"))
     val candDocs = Tables.spread(base).join(ids, Seq("doc_id"), "left_semi")
-    // jaccardVerify reads the shingle table three times (sizes + both pair
-    // sides); materialize it once instead of re-running the semi-join +
-    // explode + distinct per consumer (same persist-and-reuse rationale as
-    // Dedup.nearDupPairs)
-    val sh = Dedup.shingles(candDocs).localCheckpoint()
-    Dedup.jaccardVerify(cand, sh, 0.0)
+    Dedup.jaccardVerify(cand, candDocs, 5, 0.0)
       .select(col("d1"), col("d2"), round(col("jaccard"), 9).as("jaccard"))
       .orderBy(col("jaccard").desc, col("d1"))
       .limit(20)

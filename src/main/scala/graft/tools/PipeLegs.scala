@@ -152,7 +152,7 @@ object PipeLegs {
       incReps.join(probeLosers, Seq("doc_id"), "left_anti").localCheckpoint()
     }
     leg("p_substr_probe") {
-      D.incrementalRemoveDupSpansExact(probeSurvivors, idx.substr)
+      D.incrementalSpansUnchecked(probeSurvivors, idx.substr)
         .write.format("noop").mode("overwrite").save()
     }
 

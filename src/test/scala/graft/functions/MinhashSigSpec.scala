@@ -112,7 +112,7 @@ class MinhashSigSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("docBands equals the exploded shingle→minhash→bands chain on a mixed corpus") {
     val sp = spark; import sp.implicits._
-    import graft.pipeline.Dedup
+    import graft.pipeline.{Dedup, ShingleRows}
     val rnd = new scala.util.Random(59)
     val words = Vector("the", "cat", "sat", "mat", "dog", "ran", "far", "near")
     def doc() = Seq.fill(6 + rnd.nextInt(40))(words(rnd.nextInt(words.size))).mkString(" ")
@@ -123,8 +123,8 @@ class MinhashSigSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq((300L, "abc"), (301L, ""), (302L, "é中文 short"))            // sub-k / unicode
       ).toDF("doc_id", "text")
     for ((nh, rpb) <- Seq((18, 6), (16, 6))) { // incl. a partial trailing band
-      val old = Dedup.bands(Dedup.minhash(
-          Dedup.shingles(corpus, k = 5, dedup = false), nh), rpb)
+      val old = ShingleRows.bands(ShingleRows.minhash(
+          ShingleRows.shingles(corpus, k = 5, dedup = false), nh), rpb)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
       val got = Dedup.docBands(corpus, k = 5, nHashes = nh, rowsPerBand = rpb)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet

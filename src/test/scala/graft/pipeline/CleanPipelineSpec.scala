@@ -291,7 +291,7 @@ class CleanPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       (12L, longRun('h'))).toDF("doc_id", "text")
     val idx = CleanPipeline.buildFullCleanIndex(corpus, minLen = 20)
     val dir = java.nio.file.Files.createTempDirectory("graft-fullidx").toString
-    CleanPipeline.writeFullCleanIndex(idx, dir, nBuckets = 2)
+    CleanPipeline.writeFullCleanIndex(idx, dir)
     val rd = CleanPipeline.readFullCleanIndex(spark, dir)
     try {
       assert(rd.joiner == idx.joiner && rd.threshold == idx.threshold)
@@ -303,6 +303,35 @@ class CleanPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       val ids = b.select("doc_id").distinct().as[Long].collect().toSet
       assert(ids == Set(11L, 12L), s"survivors: $ids")
     } finally { rd.unpersist(); idx.unpersist() }
+  }
+
+  test("a written full-clean index holds at most the session's parallelism in files per table") {
+    val ss = spark; import ss.implicits._
+    // every table is written in its own partitioning: aggregates follow
+    // spark.sql.shuffle.partitions, the doc store and the bands
+    // defaultParallelism — never a fixed bucket count
+    val corpus = ('a' to 'l').zipWithIndex.map { case (c, i) =>
+      (i.toLong + 1, s"${longRun(c)}\n\n${run20(c.toUpper)}") }.toDF("doc_id", "text")
+    val idx = CleanPipeline.buildFullCleanIndex(corpus, minLen = 20)
+    val dir = java.nio.file.Files.createTempDirectory("graft-fullidx-files").toFile
+    try {
+      CleanPipeline.writeFullCleanIndex(idx, dir.toString)
+      val cap = math.max(spark.conf.get("spark.sql.shuffle.partitions").toInt,
+        spark.sparkContext.defaultParallelism)
+      def parts(d: java.io.File): Int =
+        d.listFiles.count(f => f.getName.startsWith("part-") &&
+          f.getName.endsWith(".parquet"))
+      def segs(d: java.io.File) = d.listFiles.filter(_.getName.startsWith("seg-")).toSeq
+      val tables = segs(new java.io.File(dir, "para")) ++
+        segs(new java.io.File(dir, "substr")) ++
+        Seq("neardup/doc_store", "neardup/bands", "fps")
+          .map(new java.io.File(dir, _))
+      assert(tables.size == 5, s"unexpected layout: $tables")
+      tables.foreach { t =>
+        assert(parts(t) >= 1 && parts(t) <= cap,
+          s"$t holds ${parts(t)} parquet files, cap $cap")
+      }
+    } finally idx.unpersist()
   }
 
   test("a bridge increment diverges from batch by design: the frozen corpus is never retracted") {

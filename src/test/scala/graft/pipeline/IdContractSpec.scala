@@ -70,7 +70,7 @@ class IdContractSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       assertViolates("fold") { Dedup.updateExactSubstrIndex(idx, violating) }
       val dir = java.nio.file.Files.createTempDirectory("graft-wm-substr").toString
-      Dedup.writeExactSubstrIndex(idx, dir, nBuckets = 2)
+      Dedup.writeExactSubstrIndex(idx, dir)
       val rd = Dedup.readExactSubstrIndex(spark, dir)
       try {
         assert(rd.maxDocId == 5L, "watermark lost in the disk round-trip")
@@ -84,7 +84,7 @@ class IdContractSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("paragraph index watermark round-trips through write/read") {
     val idx = ParagraphDedup.buildParagraphIndex(corpus)
     val dir = java.nio.file.Files.createTempDirectory("graft-wm-para").toString
-    ParagraphDedup.writeParagraphIndex(idx, dir, nBuckets = 2)
+    ParagraphDedup.writeParagraphIndex(idx, dir)
     val rd = ParagraphDedup.readParagraphIndex(spark, dir)
     try {
       assert(rd.maxDocId == 5L)
@@ -103,7 +103,7 @@ class IdContractSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       assertViolates("fold") { Dedup.updateNearDupIndex(idx, violating) }
       val dir = java.nio.file.Files.createTempDirectory("graft-wm-nd").toString
-      Dedup.writeNearDupIndex(idx, dir, nBuckets = 2)
+      Dedup.writeNearDupIndex(idx, dir)
       val rd = Dedup.readNearDupIndex(spark, dir)
       try assert(rd.maxDocId == 5L, "watermark lost in the disk round-trip")
       finally rd.unpersist()

@@ -236,7 +236,7 @@ class ParagraphDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(keptRows(ParagraphDedup.incrementalDedupUnits(probe, folded)) == want,
         s"fraction $fraction: folded index probes differently from a direct build")
       val dir = java.nio.file.Files.createTempDirectory("graft-pidx").toString
-      ParagraphDedup.writeParagraphIndex(folded, dir, nBuckets = 2)
+      ParagraphDedup.writeParagraphIndex(folded, dir)
       val rd = ParagraphDedup.readParagraphIndex(spark, dir)
       assert(rd.sepRegex == folded.sepRegex)
       assert(rd.store.deltas.size == open && rd.store.compactFraction == fraction,

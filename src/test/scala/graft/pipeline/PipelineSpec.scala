@@ -82,10 +82,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("jaccard verify computes exact n-gram jaccard") {
     val df = docsDf(0L -> "abcdefgh", 1L -> "abcdefgh", 2L -> "zzzzzzzz")
-    val sh = Dedup.shingles(df)
     val sp = spark; import sp.implicits._
     val cand = Seq((0L, 1L), (0L, 2L)).toDF("d1", "d2")
-    val out = Dedup.jaccardVerify(cand, sh, threshold = 0.0)
+    val out = Dedup.jaccardVerify(cand, df, 5, threshold = 0.0)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(math.abs(out((0L, 1L)) - 1.0) < 1e-12)
     // identical docs → jaccard 1; disjoint pair produces no row (no shared shingle)
@@ -1195,7 +1194,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // disk roundtrip, then probe day C against the reloaded index
     val tmp = java.nio.file.Files.createTempDirectory("graft_substr_idx")
       .toString
-    Dedup.writeExactSubstrIndex(idxAB, tmp, nBuckets = 4)
+    Dedup.writeExactSubstrIndex(idxAB, tmp)
     val idxLoaded = Dedup.readExactSubstrIndex(spark, tmp)
     assert(idxLoaded.minLen == minLen)
     val batchC = shape(Dedup.removeDupSpansExact(df, minLen)
@@ -1272,7 +1271,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         compactFraction = Double.MaxValue), days(1))
     val tmp = java.nio.file.Files
       .createTempDirectory("graft_seg_substr_idx").toString
-    Dedup.writeExactSubstrIndex(twoSeg, tmp, nBuckets = 4)
+    Dedup.writeExactSubstrIndex(twoSeg, tmp)
     Dedup.foldExactSubstrIndexOnDisk(spark, tmp, days(2))
     val loaded = Dedup.readExactSubstrIndex(spark, tmp)
     assert(loaded.store.segments.size == 3 && loaded.maxDocId == 29L &&
@@ -1312,7 +1311,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       compactFraction = Double.MaxValue)
     val tmp = java.nio.file.Files
       .createTempDirectory("graft_seg_recover").toString
-    Dedup.writeExactSubstrIndex(base, tmp, nBuckets = 2)
+    Dedup.writeExactSubstrIndex(base, tmp)
     Dedup.foldExactSubstrIndexOnDisk(spark, tmp, slice(10, 20))
 
     // crash shape 1: segment renamed into place but meta never swapped
@@ -1529,7 +1528,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         try pairs(f.verified)
         finally {
           f.spread.unpersist(blocking = true)
-          f.candShingles.unpersist(blocking = true)
+          f.candTexts.unpersist(blocking = true)
         }
       val fc = pairs(fused.cross)
       val fi = pairs(fused.internal)

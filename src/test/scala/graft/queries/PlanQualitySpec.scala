@@ -194,13 +194,19 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       import org.apache.spark.storage.StorageLevel
       assert(f.spread.storageLevel != StorageLevel.NONE, "reps not persisted")
-      assert(f.candShingles.storageLevel != StorageLevel.NONE,
-        "candidate shingle sets not persisted")
-      assert(!f.verified.queryExecution.executedPlan.toString
-        .contains("CartesianProduct"))
+      assert(f.candTexts.storageLevel != StorageLevel.NONE,
+        "candidate texts not persisted")
+      val vp = f.verified.queryExecution.executedPlan.toString
+      assert(!vp.contains("CartesianProduct"))
+      // the verify is one native shingle-set intersection per pair: no
+      // shingle rows are generated anywhere in the plan
+      assert(vp.contains("shingle_jaccard"), s"native verify kernel missing:\n$vp")
+      assert(!vp.linesIterator.exists(l =>
+          l.contains("Generate") && l.contains("explode(sequence")),
+        s"verify regressed to the exploded shingle rows:\n$vp")
     } finally {
       f.spread.unpersist(blocking = true)
-      f.candShingles.unpersist(blocking = true)
+      f.candTexts.unpersist(blocking = true)
     }
     // physical proof of the single scan: bytes actually read from local disk
     // while building + fully evaluating the query stay under 2x the parquet
